@@ -20,9 +20,13 @@ object Par {
           override def call(): Unit = t()
         })
       }
-      futs.foreach(_.get())
-    } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
+      // settle every task before rethrowing: a failed sibling must not
+      // leave the others still writing when the caller sees the error
+      val failures = futs.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
     } finally pool.shutdown()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.geo.sql.GeoFunctions._
-import graft.geo.index.HexCell
+import graft.geo.index.{HexCell, S2Cell}
 
 /** The engine's spatial join surface (SURVEY.md §2.9, BASELINE.json:6,14).
   *
@@ -192,39 +192,16 @@ object SpatialJoins {
     else resForBoxDeg(math.max(1e-9, spans(spans.length / 2)))
   }
 
-  /** kNN join: for each query row the k nearest point rows by haversine.
-    *
-    * H3-style k-ring expansion with haversine refinement (BASELINE.json:6):
-    * round i joins the so-far-unsatisfied queries' k-rings against the
-    * indexed points, takes per-query top-k with a window, and keeps the
-    * queries whose k-th distance is below the sound lower bound of
-    * everything outside the explored ring
-    * ([[HexCell.ringLowerBoundMetres]]). Queries still unsatisfied past
-    * `maxRadius` fall back to a brute-force pass (correct, rare — empty
-    * regions only).
-    *
-    * Ring seeding (round 6): each query's FIRST radius comes from the
-    * plan-time density target — d ≈ 2·√(k·A/(π·N)) with N from Catalyst
-    * statistics (zero jobs, the [[knnJoinS2]] discipline) — inverted
-    * through the ring bound at the query's own latitude, so round 1 rings
-    * are already big enough to certify and the old fixed-schedule early
-    * rounds (provably insufficient for most densities) never run. The
-    * estimate only needs the order of magnitude: a wrong N costs one extra
-    * ×`growth` round, never correctness (the done test always uses the
-    * actually-explored radius).
-    *
-    * Routing (round 4 + 6): the planar hex grid distorts toward the poles
-    * — beyond `polarCutoff` AND wherever the ring bound cannot reach the
-    * density target even at `maxRadius` (the cos(maxLat) collapse starts
-    * biting ~60° for coarse grids), the query routes through
-    * [[knnJoinS2]], whose metric caps certify at any latitude — no query
-    * ever takes an unindexed path for being high-latitude. Null/NaN
-    * latitudes stay planar and surface through the brute tail. Set
-    * `polarCutoff >= 90` to disable routing (pre-round-4 behavior).
+  /** kNN join: for each query row the k nearest point rows by haversine —
+    * a thin entry into [[knnJoinS2]]'s metric-cap loop, which certifies at
+    * any latitude and across the antimeridian with no routing or seam
+    * probing. `res` only sizes that loop's finest cover level: the coarsest
+    * S2 level whose cells are no wider than a hex cell at `res`, and never
+    * coarser than level 10 (so `res <= 6` keeps the 4..10 default; a
+    * res-matched level 8 is slower on the dense-query workloads).
     *
     * @param queries DataFrame with (qidCol, qLng, qLat)
     * @param points  DataFrame with (idCol, pLng, pLat); extra cols carried
-    * @param initialRadius floor for the seeded first radius (≤ 0 → 2)
     * @return qid, point columns, `dist_m`, `rank` (1..k)
     */
   def knnJoin(
@@ -233,140 +210,20 @@ object SpatialJoins {
       points: DataFrame,
       pLng: String, pLat: String,
       k: Int,
-      res: Int,
-      maxRadius: Int = 64,
-      initialRadius: Int = 4,
-      growth: Int = 4,
-      polarCutoff: Double = 85.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // growth = 1 would make maxRounds divide by log(1) = 0 (Infinity → the
-    // Int.MaxValue round cap) AND a seeded __r below maxRadius would never
-    // grow, so an uncertifiable query keeps `remaining` non-empty and the
-    // driver loop spins until the cap; growth <= 0 is nonsense outright
-    require(growth >= 2, s"knnJoin growth must be >= 2, got $growth")
-    require(maxRadius >= 1, s"knnJoin maxRadius must be >= 1, got $maxRadius")
-
-    val pts   = points.withColumn("__pcell", hex_cell(col(pLng), col(pLat), lit(res)))
-    val szDeg = HexCell.sizeDeg(res)
-
-    // plan-time density target (metres): ~2x the expected k-NN distance on
-    // a uniform sphere; order-of-magnitude is all that matters
-    val nEst    = planTimeRowEstimate(points)
-    val dTarget = 2.0 * math.sqrt(k * 5.1e14 / (math.Pi * nEst.toDouble))
-
-    // smallest schedule radius whose ring bound can reach dTarget at this
-    // query's latitude (inverts ringLowerBound, ignoring the bound's own
-    // maxLat inflation — underestimates escalate one extra round)
-    val floorR = math.max(2, if (initialRadius > 0) initialRadius else 2)
-    val latOk  = col(qLat).isNotNull && !isnan(col(qLat).cast("double"))
-    val cosLat = cos(radians(least(lit(85.0), abs(col(qLat)))))
-    val rNeed  = ceil((lit(dTarget) / (lit(111194.9) * cosLat * szDeg) + 1.0) / 0.866)
-    val r0col  = when(latOk,
-      least(lit(maxRadius), greatest(lit(floorR), rNeed)).cast("int"))
-      .otherwise(lit(maxRadius)) // null/NaN: inert rings, surfaces via tail
-    // planar-certifiable: the bound at maxRadius can reach the target
-    val planarCond = (abs(col(qLat)) <= polarCutoff &&
-      ringLowerBoundCol(col(qLat), res, lit(maxRadius)) >= dTarget) || !latOk
-
-    val polarQs = if (polarCutoff >= 90.0) queries.limit(0)
-                  else queries.where(!coalesce(planarCond, lit(false)))
-    var remaining = (if (polarCutoff >= 90.0) queries
-                     else queries.where(coalesce(planarCond, lit(false))))
-      .withColumn("__r", r0col)
-    var resultOpt: Option[DataFrame] = None
-    var tailOpt: Option[DataFrame]   = None
-    // per-query radii: every query starts at its seeded radius and grows
-    // ×growth until certified or past maxRadius (then: brute tail). The
-    // round cap is a safety net — radii saturate at maxRadius in
-    // log_growth(maxRadius) rounds.
-    val maxRounds = math.max(1,
-      math.ceil(math.log(maxRadius.toDouble) / math.log(growth.toDouble)).toInt + 1)
-    var round = 0
-    // ONE job per round (round 7): `remCount` is computed by the same count
-    // action that materializes the round's LAZY localCheckpoints (ranked is
-    // a dependency of remaining, so one count covers both), replacing the
-    // old eager-checkpoint + eager-checkpoint + isEmpty triple.
-    var remCount = remaining.count()
-    while (round < maxRounds && remCount > 0) {
-      // seam-aware probing: the planar hex grid does not wrap at ±180, so a
-      // query within ring-reach of the antimeridian also probes its ±360°
-      // translates — neighbors across the seam live in those frames' cells.
-      val reach = (col("__r") + 2) * szDeg
-      // all probe cells of one query live on its own row, so de-duplicating
-      // the ±360° seam frames is a narrow array_distinct — the previous
-      // explode + dropDuplicates(qid, cell) paid a full exchange per round
-      val shifts = when(abs(col(qLng)) > lit(180.0) - reach,
-        array(lit(0.0), lit(360.0), lit(-360.0))).otherwise(array(lit(0.0)))
-      val cand = remaining
-        .withColumn("__cell", explode(array_distinct(flatten(transform(shifts,
-          sh => hex_kring(hex_cell(col(qLng) + sh, col(qLat), lit(res)), col("__r")))))))
-        .join(pts, col("__cell") === col("__pcell"))
-        .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
-      val w      = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
-      // localCheckpoint: each round's plan would otherwise EMBED every prior
-      // round's plan (remaining -> anti-join -> perQ -> remaining ...) and
-      // Catalyst analysis time grows exponentially with rounds — measured as
-      // 260s for 6 rounds over 25 queries. Truncating lineage per round
-      // makes the loop O(rounds) in both planning and execution.
-      val ranked = cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-        .localCheckpoint(eager = false) // materialized by remaining.count below
-      // a query is DONE when it has k hits and the k-th is provably nearer
-      // than anything outside ITS explored ring
-      val withBound = ranked.withColumn("__lb",
-        ringLowerBoundCol(col(qLat), res, col("__r")))
-      val perQ = withBound.groupBy(qidCol)
-        .agg(count(lit(1)).as("__n"), max("dist_m").as("__kth"), first("__lb").as("__lb"))
-        .withColumn("__done", col("__n") === k && col("__kth") <= col("__lb"))
-      val doneQ = perQ.where(col("__done")).select(col(qidCol))
-      val done  = ranked.join(doneQ, Seq(qidCol), "left_semi")
-        .drop("__cell", "__pcell", "__lb", "__r")
-      resultOpt = Some(resultOpt.map(_.unionByName(done)).getOrElse(done))
-      val notDone = remaining.join(doneQ, Seq(qidCol), "left_anti")
-      // saturated-but-uncertified queries leave the loop for the brute tail
-      // instead of burning identical full-radius rounds
-      val toTail = notDone.where(col("__r") >= maxRadius || col("__r").isNull).drop("__r")
-      tailOpt = Some(tailOpt.map(_.unionByName(toTail)).getOrElse(toTail))
-      remaining = notDone.where(col("__r") < maxRadius)
-        .withColumn("__r", least(lit(maxRadius), col("__r") * growth))
-        .localCheckpoint(eager = false)
-      remCount = remaining.count() // materializes ranked + remaining, one job
-      round += 1
-    }
-    // brute-force fallback for stragglers (provably correct; hits only when
-    // the neighborhood is emptier than maxRadius rings)
-    val tailQs = (tailOpt, Some(remaining.drop("__r")).filterNot(_ => remCount == 0)) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b)             => a.orElse(b)
-    }
-    val tail = tailQs.filterNot(_.isEmpty).map { qs =>
-      val w = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
-      qs.crossJoin(points)
-        .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
-        .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-    }
-    val res0 = (resultOpt, tail) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None)       => queries.limit(0).crossJoin(points.limit(0))
-        .withColumn("dist_m", lit(0.0)).withColumn("rank", lit(1))
-    }
-    // no eager polarQs.isEmpty here: knnJoinS2's own loop exits on its first
-    // (single) emptiness check, so the zero-route case costs one limit(1)
-    // scan either way and the code path stays uniform
-    if (polarCutoff >= 90.0) res0
-    else res0.unionByName(
-      knnJoinS2(polarQs, qidCol, qLng, qLat, points, pLng, pLat, k),
-      allowMissingColumns = true)
+      res: Int): DataFrame = {
+    val hexWidthDeg = math.sqrt(3.0) * HexCell.sizeDeg(res) // across flats
+    // S2 level-l cell edge ≈ 90° / 2^l on a face
+    val level = math.ceil(math.log(90.0 / hexWidthDeg) / math.log(2.0)).toInt
+    knnJoinS2(queries, qidCol, qLng, qLat, points, pLng, pLat, k,
+      maxLevel = math.min(S2Cell.MaxLevel, math.max(10, level)))
   }
 
-  /** kNN join on S2 cells — the pole-safe variant. The planar hex grid of
-    * [[knnJoin]] distorts near the poles (its ring bound collapses and polar
-    * queries fall through to the brute-force tail); S2's cube faces have no
-    * singularity there, so this join stays cell-pruned at any latitude.
+  /** kNN join on S2 cells: one certified-radius candidate loop. S2's cube
+    * faces have no singularity at the poles and the cap boxes wrap through
+    * ±180, so every query stays cell-pruned at any latitude.
     *
-    * Per round, each query covers a METRIC cap (radius r, growing 4x/round)
-    * with a sound lat/lng box:
+    * Per round, each undecided query covers a METRIC cap (radius r, growing
+    * 4x/round) with a sound lat/lng box:
     *   Δφ = r / R  (great-circle distance ≥ R·|Δφ_rad|)
     *   Δλ = 2·asin(min(1, r / (2·R·cos φmax)))  with φmax = max |lat| in the
     *        band — from haversine ≥ 2R·cos φmax·sin(|Δλ|/2) — so every point
@@ -375,11 +232,113 @@ object SpatialJoins {
     * The box is covered multi-level (`s2_cover_box`, normalized disjoint) and
     * equi-joined against the points' level ancestors, so each (q, p) pair
     * appears at most once. A query is DONE when it holds k hits with the
-    * k-th distance ≤ r: nothing outside the cap can be nearer. Stragglers
-    * (neighborhood emptier than the last radius) take the brute-force tail.
+    * k-th distance ≤ r: nothing outside the cap can be nearer. Only the
+    * undecided queries ride the next round. Stragglers (neighborhood
+    * emptier than the last radius) and queries with a null or NaN
+    * coordinate (they can never certify, so they skip the rounds) take the
+    * brute-force tail.
+    *
+    * One Spark action per round: a count of the undecided queries that
+    * also materializes the round's lazy localCheckpoints. The round's jobs
+    * are labelled `knnJoin round <i>` (the caller's job description is
+    * restored after). The answer is the union of each round's certified
+    * rows, read straight from those checkpoints.
     *
     * @return qid, point columns, `dist_m`, `rank` (1..k)
     */
+  def knnJoinS2(
+      queries: DataFrame,
+      qidCol: String, qLng: String, qLat: String,
+      points: DataFrame,
+      pLng: String, pLat: String,
+      k: Int,
+      minLevel: Int = 4,
+      maxLevel: Int = 10,
+      initialRadiusM: Double = -1.0,
+      maxRounds: Int = 5): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+
+    // auto initial radius (<= 0): size the first cap so most queries certify
+    // in round 1 — r0 = 2 sqrt(k A / (pi N)) with N from the PLAN-TIME row
+    // estimate (zero jobs: no eager scan of the points input, which at 100 TB
+    // would be a full-table pass before the job even starts). Only the order
+    // of magnitude matters: r0 enters as 1/sqrt(N) and the cap grows 4x per
+    // round, so a 16x row-count error costs exactly one extra round; the
+    // clamp bounds the damage from a degenerate estimate. Pass an explicit
+    // initialRadiusM when the true density is known.
+    val r0 =
+      if (initialRadiusM > 0) initialRadiusM
+      else {
+        val n = planTimeRowEstimate(points)
+        math.min(2.0e6, math.max(50.0, 2.0 * math.sqrt(k * 5.1e14 / (math.Pi * n))))
+      }
+
+    val pts = points.withColumn("__pcell",
+      explode(s2_ancestors(col(pLng), col(pLat), lit(minLevel), lit(maxLevel))))
+    def finite(c: String) = col(c).isNotNull && !isnan(col(c).cast("double"))
+    val coordsOk = finite(qLng) && finite(qLat)
+    val byDist = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
+    val byQuery = Window.partitionBy(col(qidCol))
+    val sc = queries.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+
+    // `remaining` holds every undecided query, those with a null or NaN
+    // coordinate included; only finite ones are probed, and the loop ends
+    // once no finite one is left
+    var remaining = queries
+    var resultOpt: Option[DataFrame] = None
+    var radiusM   = r0
+    var round     = 0
+    var probeCount = 1L // unknown before round 1: no eager count
+    var tailCount  = 1L
+    while (round < maxRounds && probeCount > 0) {
+      // every job of the round carries its label, AQE's shuffle stages
+      // (which even a lazy localCheckpoint plans eagerly) included
+      sc.setJobDescription(s"knnJoin round ${round + 1}")
+      val counts = try {
+        // capBox > r > rDone: the box is a hair wide and the done test a
+        // hair strict, so float rounding can never exclude a true neighbor
+        // the done test would have trusted (box may wrap <-180:
+        // s2_cover_box normalizes)
+        val (w0, sBound, e0, nBound) = capBox(col(qLng), col(qLat), radiusM)
+        val cand = remaining.where(coordsOk)
+          .withColumn("__cell", explode(s2_cover_box(w0, sBound, e0, nBound,
+            lit(minLevel), lit(maxLevel))))
+          .join(pts, col("__cell") === col("__pcell"))
+          .drop("__cell", "__pcell")
+          .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
+        // localCheckpoint: each round's plan would otherwise EMBED every
+        // prior round's plan and Catalyst analysis time grows exponentially
+        // with rounds. The done test is a window aggregate over the same
+        // qid partition as the ranking, so it costs no extra exchange.
+        val ranked = cand.withColumn("rank", row_number().over(byDist)).where(col("rank") <= k)
+          .withColumn("__done", count(lit(1)).over(byQuery) === k &&
+            max(col("dist_m")).over(byQuery) <= radiusM * (1.0 - 1e-9))
+          .localCheckpoint(eager = false)
+        val done = ranked.where(col("__done")).drop("__done")
+        resultOpt = Some(resultOpt.map(_.unionByName(done)).getOrElse(done))
+        remaining = remaining
+          .join(ranked.where(col("__done") && col("rank") === 1).select(col(qidCol)),
+            Seq(qidCol), "left_anti")
+          .localCheckpoint(eager = false)
+        // one action: materializes ranked + remaining and sizes both the
+        // next round and the tail
+        remaining.agg(count(when(coordsOk, 1)), count(lit(1))).head()
+      } finally sc.setJobDescription(callerDescription)
+      probeCount = counts.getLong(0)
+      tailCount  = counts.getLong(1)
+      radiusM *= 4
+      round += 1
+    }
+    val tail =
+      if (tailCount == 0) None
+      else Some(remaining.crossJoin(points)
+        .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
+        .withColumn("rank", row_number().over(byDist)).where(col("rank") <= k))
+    // never both empty: with no round run, tailCount is still 1
+    (resultOpt ++ tail).reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
   /** Persist a polygon set's JOIN INDEX — cover cells + packed geometries —
     * so repeated point batches join against static boundaries (admin areas,
     * tile schemes) without re-parsing or re-covering the polygons each run:
@@ -475,87 +434,6 @@ object SpatialJoins {
       .drop("__cell", "__pcell")
   }
 
-  def knnJoinS2(
-      queries: DataFrame,
-      qidCol: String, qLng: String, qLat: String,
-      points: DataFrame,
-      pLng: String, pLat: String,
-      k: Int,
-      minLevel: Int = 4,
-      maxLevel: Int = 10,
-      initialRadiusM: Double = -1.0,
-      maxRounds: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    // auto initial radius (<= 0): size the first cap so most queries certify
-    // in round 1 — r0 = 2 sqrt(k A / (pi N)) with N from the PLAN-TIME row
-    // estimate (zero jobs: no eager scan of the points input, which at 100 TB
-    // would be a full-table pass before the job even starts). Only the order
-    // of magnitude matters: r0 enters as 1/sqrt(N) and the cap grows 4x per
-    // round, so a 16x row-count error costs exactly one extra round; the
-    // clamp bounds the damage from a degenerate estimate. Pass an explicit
-    // initialRadiusM when the true density is known.
-    val r0 =
-      if (initialRadiusM > 0) initialRadiusM
-      else {
-        val n = planTimeRowEstimate(points)
-        math.min(2.0e6, math.max(50.0, 2.0 * math.sqrt(k * 5.1e14 / (math.Pi * n))))
-      }
-
-    val pts = points.withColumn("__pcell",
-      explode(s2_ancestors(col(pLng), col(pLat), lit(minLevel), lit(maxLevel))))
-
-    var remaining = queries
-    var resultOpt: Option[DataFrame] = None
-    var radiusM   = r0
-    var round     = 0
-    // one job per round, as in [[knnJoin]]: count doubles as the
-    // materializing action for the round's lazy localCheckpoints
-    var remCount  = remaining.count()
-    while (round < maxRounds && remCount > 0) {
-      // capBox > r > rDone: the box is a hair wide and the done test a hair
-      // strict, so float rounding can never exclude a true neighbor the
-      // done test would have trusted (box may wrap <-180: s2_cover_box
-      // normalizes)
-      val (w0, sBound, e0, nBound) = capBox(col(qLng), col(qLat), radiusM)
-      val cand = remaining
-        .withColumn("__cell", explode(s2_cover_box(w0, sBound, e0, nBound,
-          lit(minLevel), lit(maxLevel))))
-        .join(pts, col("__cell") === col("__pcell"))
-        .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
-      val w = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
-      // per-round localCheckpoint: same exponential-analysis guard as knnJoin
-      val ranked = cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-        .localCheckpoint(eager = false)
-      val perQ = ranked.groupBy(qidCol)
-        .agg(count(lit(1)).as("__n"), max("dist_m").as("__kth"))
-        .withColumn("__done", col("__n") === k && col("__kth") <= radiusM * (1.0 - 1e-9))
-      val doneQ = perQ.where(col("__done")).select(col(qidCol))
-      val done  = ranked.join(doneQ, Seq(qidCol), "left_semi").drop("__cell", "__pcell")
-      resultOpt = Some(resultOpt.map(_.unionByName(done)).getOrElse(done))
-      remaining = remaining.join(doneQ, Seq(qidCol), "left_anti")
-        .localCheckpoint(eager = false)
-      remCount = remaining.count() // materializes ranked + remaining
-      radiusM *= 4
-      round += 1
-    }
-    val tail =
-      if (remCount == 0) None
-      else {
-        val w = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
-        Some(remaining.crossJoin(points)
-          .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
-          .withColumn("rank", row_number().over(w)).where(col("rank") <= k))
-      }
-    (resultOpt, tail) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None)       => queries.limit(0).crossJoin(points.limit(0))
-        .withColumn("dist_m", lit(0.0)).withColumn("rank", lit(1))
-    }
-  }
-
   /** Row-count estimate from Catalyst plan statistics — launches ZERO Spark
     * jobs. Uses the optimizer's rowCount when the catalog/CBO provides one,
     * else sizeInBytes divided by the schema's default row width (file-size
@@ -567,17 +445,6 @@ object SpatialJoins {
       val width = math.max(8, df.schema.fields.map(_.dataType.defaultSize).sum)
       math.max(1L, (stats.sizeInBytes / width).min(BigInt(Long.MaxValue)).toLong)
     }
-  }
-
-  /** Sound per-row lower bound (metres) on distances outside ring `radius`
-    * — Column form of [[HexCell.ringLowerBoundMetres]]; `radius` may be a
-    * per-query column (the seeded-schedule loop). */
-  private def ringLowerBoundCol(lat: Column, res: Int, radius: Column): Column = {
-    val sz        = HexCell.sizeDeg(res)
-    val planarDeg = greatest(lit(0.0),
-      (radius.cast("double") * math.sqrt(3.0) / 2.0 - 1.0) * sz)
-    val maxLat    = least(lit(89.9), abs(lat) + (planarDeg + lit(sz)))
-    planarDeg * lit(111194.9) * cos(radians(maxLat))
   }
 
   /** Raster→vector tile assignment (BASELINE.json:14): attach the packed ZXY

@@ -287,9 +287,9 @@ object Dedup {
     * Verification is exact bit_count + haversine; candidate multiplicity is
     * bounded (bands × matching cells), removed by the final dropDuplicates
     * on the narrow output. The b side probes its ±360° translate frames
-    * near the antimeridian (the planar grid does not wrap — the knnJoin
-    * seam discipline). Soundness of the adjacency key needs the cell's
-    * METRIC longitude extent to exceed maxDistM: with res 6 (0.131°) and
+    * near the antimeridian (the planar grid does not wrap at ±180).
+    * Soundness of the adjacency key needs the cell's METRIC longitude
+    * extent to exceed maxDistM: with res 6 (0.131°) and
     * 500 m that holds to |lat| ≈ 88°; for polar-cap corpora pass a coarser
     * `res` (res 4 ≈ 0.92° holds to ~89.7°) or build candidates with the
     * [[graft.geo.join.SpatialJoins.knnJoinS2]]-style metric cap covers,

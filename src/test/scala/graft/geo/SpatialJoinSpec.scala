@@ -110,20 +110,71 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(fast.exceptAll(brute).isEmpty && brute.exceptAll(fast).isEmpty)
   }
 
+  /** Runs `body` and returns its result with the descriptions of the Spark
+    * jobs it launched, in start order (`""` for an unlabelled job). */
+  def withJobs[T](body: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Thread.sleep(1000) // listener delivery is async
+      (out, scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  def roundLabels(jobs: Seq[String]): Set[String] = jobs.filter(_.startsWith("knnJoin round")).toSet
+
   test("hex kNN: null- and NaN-latitude query rows are not silently dropped by polar routing") {
     val pts = spark.range(100).select($"id".as("pid"),
       (pmod($"id" * 7, lit(100)) / 10.0).as("lng"), (pmod($"id" * 13, lit(80)) / 10.0).as("lat"))
-    // NaN is the nastier sibling of null: abs(NaN) > cutoff AND
-    // abs(NaN) <= cutoff are both plain-false, so without the explicit
-    // isnan branch the row vanishes from BOTH routing branches
-    val qs = Seq((1L, Some(5.0), Some(4.0)), (2L, Some(6.0), None),
-        (3L, Some(7.0), Some(Double.NaN)))
+    // NaN is the nastier sibling of null: comparisons with it are
+    // plain-false, so a filter-based route can lose the row entirely
+    val rows = Seq((1L, Some(5.0), Some(4.0)), (2L, Some(6.0), None),
+        (3L, Some(7.0), Some(Double.NaN)), (4L, Some(Double.NaN), Some(3.0)))
+    def queries(rs: Seq[(Long, Option[Double], Option[Double])]) = rs
       .toDF("qid", "qlng", "qlat")
       .select($"qid", $"qlng".cast("double").as("qlng"), $"qlat".cast("double").as("qlat"))
-    val out = SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k = 2, res = 4)
-    // the null-lat and NaN-lat queries surface (through the brute tail)
-    // instead of vanishing into neither routing branch
-    assert(out.select("qid").distinct().as[Long].collect().toSet == Set(1L, 2L, 3L))
+    def run(rs: Seq[(Long, Option[Double], Option[Double])]) = withJobs(
+      SpatialJoins.knnJoin(queries(rs), "qid", "qlng", "qlat", pts, "lng", "lat", k = 2, res = 4)
+        .select("qid", "pid", "rank").as[(Long, Long, Int)].collect().toSet)
+    val (clean, cleanJobs) = run(rows.take(1))
+    val (out, outJobs) = run(rows)
+    // the null- and NaN-coordinate queries surface (through the brute tail)
+    // instead of vanishing, and the finite query's answer is unchanged
+    assert(out.map(_._1) == Set(1L, 2L, 3L, 4L))
+    assert(out.filter(_._1 == 1L) == clean && clean.size == 2)
+    // they skip the rounds: only the tail's jobs are added, never a round
+    assert(roundLabels(cleanJobs).nonEmpty, s"no labelled round jobs: $cleanJobs")
+    assert(roundLabels(outJobs) == roundLabels(cleanJobs),
+      s"uncertifiable rows rode extra rounds: $outJobs vs $cleanJobs")
+  }
+
+  test("kNN batch that certifies in round 1 launches a pinned number of jobs") {
+    // guards against eager counts, isEmpty probes or per-round
+    // re-aggregation creeping back into the loop
+    val pts = points(2000).withColumnRenamed("id", "pid").cache()
+    pts.count()
+    val qs = spark.range(40).select(
+      $"id".as("qid"),
+      (pmod($"id" * 31, lit(40)) / 10.0 + 99.5).as("qlng"),
+      (pmod($"id" * 17, lit(30)) / 10.0 - 0.5).as("qlat"))
+    val sc = spark.sparkContext
+    sc.setJobDescription("knn spec caller")
+    val ((n, jobs), callerAfter) = try {
+      val counted = withJobs(
+        SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k = 5, res = 6).count())
+      (counted, sc.getLocalProperty("spark.job.description"))
+    } finally sc.setJobDescription(null)
+    // the caller's job description survives the labelled rounds
+    assert(callerAfter == "knn spec caller")
+    assert(n == 40L * 5)
+    assert(roundLabels(jobs) == Set("knnJoin round 1"), s"jobs: $jobs")
+    assert(jobs.size <= 7, s"${jobs.size} jobs: $jobs")
   }
 
   test("hex kNN auto-routes polar queries through S2 and equals brute force") {
@@ -372,7 +423,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       .toDF("pid", "lng", "lat")
     val qs = Seq((1L, 10.0, 10.0)).toDF("qid", "qlng", "qlat")
     val out = SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat",
-      k = 2, res = 8, maxRadius = 4)
+      k = 2, res = 8)
       .select("pid").as[Long].collect().toSet
     assert(out == Set(1L, 2L)) // the two nearest of the three
   }
