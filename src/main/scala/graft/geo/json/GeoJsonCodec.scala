@@ -284,7 +284,7 @@ object GeoJsonCodec {
       var i = 0
       while (i < b.length) {
         if (i > 0) sb.append(',')
-        sb.append(JValue.formatG16(b(i)))
+        JValue.appendG16(sb.underlying, b(i))
         i += 1
       }
       sb.append(']')
@@ -302,7 +302,7 @@ object GeoJsonCodec {
     var i = 0
     while (i < p.length) {
       if (i > 0) sb.append(',')
-      sb.append(JValue.formatG16(p(i)))
+      JValue.appendG16(sb.underlying, p(i))
       i += 1
     }
     sb.append(']')
@@ -367,7 +367,7 @@ object GeoJsonCodec {
     f.properties.foreach { p => sb.append(",\"properties\":"); JValue.write(sb, p) }
     f.id.foreach {
       case StringId(s) => sb.append(",\"id\":"); JValue.writeString(sb, s)
-      case NumId(d)    => sb.append(",\"id\":").append(JValue.formatG16(d))
+      case NumId(d)    => sb.append(",\"id\":"); JValue.appendG16(sb.underlying, d)
     }
     writeBboxFm(sb, bbox, f.foreignMembers)
     sb.append('}')

@@ -72,10 +72,6 @@ object JValue {
   def parseUnsafe(text: String): JValue =
     parse(text).fold(m => throw new IllegalArgumentException(m), identity)
 
-  /** Read the JSON value AT the parser's current token (shared with the
-    * fast-path top parser for properties subtrees). */
-  private[geo] def readValueAt(p: JsonParser): JValue = readValue(p)
-
   private def readValue(p: JsonParser): JValue = p.currentToken() match {
     case JsonToken.VALUE_NULL           => JNull
     case JsonToken.VALUE_TRUE           => JBool(true)
@@ -100,38 +96,112 @@ object JValue {
 
   /** C-printf `%.16g` compatible double formatting (jsone.ml:814-819).
     * C's `%g` rounds the EXACT binary expansion of the double to 16
-    * significant digits and strips trailing zeros; Java's `String.format`
-    * rounds the shortest round-trip repr instead, which diverges on
-    * subnormals and near-power-of-ten values (e.g. 1.5e-323: C
-    * `1.48219693752374e-323`, Java `1.500000000000000e-323`) — so the slow
-    * path here does true exact-expansion rounding via `BigDecimal(d)`.
+    * significant digits (ties-to-even) and strips trailing zeros; Java's
+    * `String.format` rounds the shortest round-trip repr instead, which
+    * diverges on subnormals, near-power-of-ten values and about half of the
+    * 2-decimal grid (e.g. 0.07: C `0.07000000000000001`).
     *
-    * Hot path: doubles whose shortest representation (`Double.toString`)
-    * carries <= 16 significant digits AND provably lies in the same 16-digit
-    * decimal rounding cell as the exact expansion (ulp guard below) render
-    * straight from the shortest digits (verified differentially against
-    * python/C `%.16g` in GeoJsonCodecSpec).
-    */
+    * Two exact kernels, no guessing: [[appendFixedG16]] does the rounding
+    * in integer arithmetic for 1e-4 <= |d| < 1e16 (every coordinate and
+    * ordinary property number), and `BigDecimal(d)` handles the rest
+    * (verified against pinned C goldens and an independent BigDecimal
+    * reference in GeoJsonCodecSpec). */
   def formatG16(d: Double): String = {
-    // C printf prints non-finite doubles as nan/inf/-inf (not JSON, but a
-    // programmatic model may carry them; the old String.format path emitted
-    // Java's "NaN"/"Infinity", and BigDecimal would throw)
-    if (java.lang.Double.isNaN(d)) return "nan"
-    if (java.lang.Double.isInfinite(d)) return if (d > 0) "inf" else "-inf"
-    val fast = formatG16Fast(d)
-    if (fast != null) fast else formatG16Slow(d)
+    val sb = new java.lang.StringBuilder(24)
+    appendG16(sb, d)
+    sb.toString
   }
 
-  /** C `%g` rendering of (sign, significant digits, leading-digit power of
-    * ten): scientific iff e < -4 or e >= 16, >=2-digit exponent, trailing
-    * zeros already stripped from `digits`. */
-  private def renderG(neg: Boolean, digits: String, e: Int): String = {
+  /** [[formatG16]] written straight into the caller's builder. */
+  def appendG16(sb: java.lang.StringBuilder, d: Double): Unit = {
+    val a = Math.abs(d)
+    // C printf prints non-finite doubles as nan/inf/-inf (not JSON, but a
+    // programmatic model may carry them; BigDecimal would throw)
+    if (a != a) sb.append("nan")
+    else if (a == Double.PositiveInfinity) sb.append(if (d > 0) "inf" else "-inf")
+    else if (a == 0.0) sb.append(if (1.0 / d < 0) "-0" else "0")
+    else if (a >= 1e-4 && a < 1e16) appendFixedG16(sb, d)
+    else appendSlowG16(sb, d)
+  }
+
+  private val POW5: Array[Long] = Array.iterate(1L, 21)(_ * 5) // 5^0 .. 5^20
+  private final val TEN15 = 1000000000000000L
+  private final val TEN16 = 10000000000000000L
+
+  /** Exact `%.16g` for 1e-4 <= |d| < 1e16, where C prints fixed notation.
+    *
+    * |d| = m * 2^q with a 53-bit integer m. For the decimal exponent e10 of
+    * the leading digit, the 16 significant digits are |d| * 10^k rounded,
+    * k = 15 - e10 in [0, 20]: the product m * 5^k (< 2^100) is formed in
+    * 128 bits and shifted by q + k. In this range that shift is right by
+    * fewer than 64 bits (or left, exactly), so the dropped bits sit in the
+    * low word and give the half-even decision directly. e10 starts at
+    * floor(log2|d| * log10 2), which is exact or one low; a truncated
+    * digit count outside [10^15, 10^16) corrects it. */
+  private def appendFixedG16(sb: java.lang.StringBuilder, d: Double): Unit = {
+    val bits = java.lang.Double.doubleToRawLongBits(d)
+    val be   = ((bits >>> 52) & 0x7ff).toInt // normal in this range
+    val m    = (bits & 0xfffffffffffffL) | (1L << 52)
+    val q    = be - 1075
+    var e10  = ((be - 1023) * 78913) >> 18
+    var t    = 0L // |d| * 10^k truncated
+    var up   = false // round t up (half-even on the dropped bits)
+    var settled = false
+    while (!settled) {
+      val k  = 15 - e10
+      val lo = m * POW5(k)
+      val s  = q + k
+      if (s >= 0) { t = lo << s; up = false } // exact (m * 5^k < 2^57 here)
+      else {
+        val sh   = -s
+        val hi   = Math.multiplyHigh(m, POW5(k))
+        t = (hi << (64 - sh)) | (lo >>> sh)
+        val rem  = lo & ((1L << sh) - 1)
+        val half = 1L << (sh - 1)
+        up = rem > half || (rem == half && (t & 1L) == 1L)
+      }
+      if (t >= TEN16) e10 += 1
+      else if (t < TEN15) e10 -= 1
+      else settled = true
+    }
+    if (up) {
+      t += 1
+      if (t == TEN16) { t = TEN15; e10 += 1 }
+    }
+    while (t % 10 == 0) t /= 10
+    if (d < 0) sb.append('-')
+    if (e10 < 0) {
+      sb.append("0.")
+      var z = -e10 - 1
+      while (z > 0) { sb.append('0'); z -= 1 }
+      sb.append(t)
+    } else {
+      val at = sb.length
+      sb.append(t)
+      val intDigits = e10 + 1
+      val nd = sb.length - at
+      if (nd > intDigits) sb.insert(at + intDigits, '.')
+      else { var z = intDigits - nd; while (z > 0) { sb.append('0'); z -= 1 } }
+    }
+  }
+
+  /** True C %.16g for the remaining finite non-zero doubles: round the exact
+    * binary expansion (BigDecimal(d)) to 16 significant digits, ties-to-even
+    * (glibc under round-to-nearest); scientific iff e < -4 or e >= 16, with
+    * an exponent of at least two digits. */
+  private def appendSlowG16(sb: java.lang.StringBuilder, d: Double): Unit = {
+    val bd = new java.math.BigDecimal(Math.abs(d)) // exact expansion
+      .round(new java.math.MathContext(16, java.math.RoundingMode.HALF_EVEN))
+    val raw    = bd.unscaledValue.toString
+    val e      = raw.length - 1 - bd.scale
+    var end    = raw.length
+    while (end > 1 && raw.charAt(end - 1) == '0') end -= 1
+    val digits = raw.substring(0, end)
     val pointAt = e + 1
-    val sb = new java.lang.StringBuilder(26)
-    if (neg) sb.append('-')
+    if (d < 0) sb.append('-')
     if (e < -4 || e >= 16) {
       sb.append(digits.charAt(0))
-      if (digits.length > 1) { sb.append('.').append(digits, 1, digits.length) }
+      if (digits.length > 1) sb.append('.').append(digits, 1, digits.length)
       sb.append('e').append(if (e < 0) '-' else '+')
       val ae = Math.abs(e)
       if (ae < 10) sb.append('0')
@@ -141,127 +211,12 @@ object JValue {
         sb.append(digits)
         var i = digits.length
         while (i < pointAt) { sb.append('0'); i += 1 }
-      } else {
-        sb.append(digits, 0, pointAt).append('.').append(digits, pointAt, digits.length)
-      }
+      } else sb.append(digits, 0, pointAt).append('.').append(digits, pointAt, digits.length)
     } else {
       sb.append("0.")
       var i = 0
       while (i < -pointAt) { sb.append('0'); i += 1 }
       sb.append(digits)
-    }
-    sb.toString
-  }
-
-  // 10^(i-350); out-of-range lookups clamp to 0 / +inf (both fail the guard
-  // conservatively, deferring to the exact slow path)
-  private val POW10: Array[Double] = Array.tabulate(700)(i => Math.pow(10.0, (i - 350).toDouble))
-  @inline private def pow10(e: Int): Double = {
-    val i = e + 350
-    if (i < 0) 0.0 else if (i >= 700) Double.PositiveInfinity else POW10(i)
-  }
-
-  /** Shortest-repr-based %.16g; null when the slow path is required.
-    * Allocation-light (serialization's hottest kernel): scans the
-    * `Double.toString` chars in place, no intermediate substrings.
-    *
-    * Safety guard: the shortest repr r is a point of the 16-significant-
-    * digit decimal grid, and |d_exact - r| <= ulp(d)/2. If ulp(d) is
-    * strictly inside one grid cell, d_exact rounds to r and the fast path
-    * equals C's exact rounding. The grid spacing at r is 10^(e-15) — one
-    * decade finer (10^(e-16)) just BELOW r when r is exactly a power of ten
-    * (single digit "1"), where the exact value may sit in the lower decade
-    * (e.g. 1e23 whose double is 9.99...e22). Subnormals fail the guard
-    * automatically (ulp 4.9e-324 vs grid ~1e-339) and defer to slow.
-    */
-  private def formatG16Fast(d: Double): String = {
-    val s     = java.lang.Double.toString(d) // shortest round-trip repr
-    val n     = s.length
-    val neg   = s.charAt(0) == '-'
-    val start = if (neg) 1 else 0
-    var ePos  = -1
-    var dot   = -1
-    var i     = start
-    while (i < n && ePos < 0) {
-      val c = s.charAt(i)
-      if (c == 'E') ePos = i
-      else { if (c == '.') dot = i; i += 1 }
-    }
-    if (dot < 0) return null // unexpected form; defer
-    val mantEnd = if (ePos < 0) n else ePos
-    val exp10   = if (ePos < 0) 0 else Integer.parseInt(s, ePos + 1, n, 10)
-    val intLen  = dot - start // digits before the point
-    // digit k (0-based, point elided) lives at s(start + k) or +1 past the dot
-    @inline def digitAt(k: Int): Char = s.charAt(if (k < intLen) start + k else start + k + 1)
-    val nDigits = mantEnd - start - 1
-    var firstNZ = 0
-    while (firstNZ < nDigits && digitAt(firstNZ) == '0') firstNZ += 1
-    if (firstNZ == nDigits) return if (neg) "-0" else "0"
-    var lastNZ = nDigits - 1
-    while (lastNZ > firstNZ && digitAt(lastNZ) == '0') lastNZ -= 1
-    val count = lastNZ - firstNZ + 1
-    if (count > 16) return null // needs true 16-digit rounding
-    val e = intLen - 1 - firstNZ + exp10 // power of ten of the leading digit
-    val grid = if (count == 1 && digitAt(firstNZ) == '1') pow10(e - 16) else pow10(e - 15)
-    if (!(Math.ulp(d) < grid)) return null
-    // render (C %g: scientific iff e < -4 or >= 16, >=2-digit exponent)
-    val out = new Array[Char](32)
-    var o = 0
-    if (neg) { out(o) = '-'; o += 1 }
-    if (e < -4 || e >= 16) {
-      out(o) = digitAt(firstNZ); o += 1
-      if (count > 1) {
-        out(o) = '.'; o += 1
-        var k = firstNZ + 1
-        while (k <= lastNZ) { out(o) = digitAt(k); o += 1; k += 1 }
-      }
-      out(o) = 'e'; o += 1
-      out(o) = if (e < 0) '-' else '+'; o += 1
-      val ae = Math.abs(e)
-      if (ae >= 100) { out(o) = ('0' + ae / 100).toChar; o += 1 }
-      out(o) = ('0' + (ae / 10) % 10).toChar; o += 1
-      out(o) = ('0' + ae % 10).toChar; o += 1
-    } else if (e >= 0) {
-      val pointAt = e + 1
-      if (count <= pointAt) {
-        var k = firstNZ
-        while (k <= lastNZ) { out(o) = digitAt(k); o += 1; k += 1 }
-        var z = count
-        while (z < pointAt) { out(o) = '0'; o += 1; z += 1 }
-      } else {
-        var k = firstNZ
-        while (k < firstNZ + pointAt) { out(o) = digitAt(k); o += 1; k += 1 }
-        out(o) = '.'; o += 1
-        while (k <= lastNZ) { out(o) = digitAt(k); o += 1; k += 1 }
-      }
-    } else {
-      out(o) = '0'; o += 1; out(o) = '.'; o += 1
-      var z = 0
-      while (z < -e - 1) { out(o) = '0'; o += 1; z += 1 }
-      var k = firstNZ
-      while (k <= lastNZ) { out(o) = digitAt(k); o += 1; k += 1 }
-    }
-    new String(out, 0, o)
-  }
-
-  /** True C %.16g: round the exact binary expansion (BigDecimal(d)) to 16
-    * significant digits, ties-to-even (glibc under round-to-nearest). */
-  private def formatG16Slow(d: Double): String = {
-    if (d == Math.rint(d) && Math.abs(d) < 1e16) {
-      // integral values within %.16g's fixed range print without a point
-      val l = d.toLong
-      if (l == 0 && 1.0 / d < 0) "-0" else l.toString
-    } else {
-      val neg = java.lang.Double.doubleToRawLongBits(d) < 0
-      val bd = new java.math.BigDecimal(Math.abs(d)) // exact expansion
-        .round(new java.math.MathContext(16, java.math.RoundingMode.HALF_EVEN))
-      var digits = bd.unscaledValue.toString
-      var scale  = bd.scale
-      val e      = digits.length - 1 - scale
-      var end    = digits.length
-      while (end > 1 && digits.charAt(end - 1) == '0') end -= 1
-      digits = digits.substring(0, end)
-      renderG(neg, digits, e)
     }
   }
 
@@ -271,7 +226,7 @@ object JValue {
   def write(sb: StringBuilder, v: JValue): Unit = v match {
     case JNull    => sb.append("null")
     case JBool(b) => sb.append(if (b) "true" else "false")
-    case JNum(d)  => sb.append(formatG16(d))
+    case JNum(d)  => appendG16(sb.underlying, d)
     case JStr(s)  => writeString(sb, s)
     case JArr(items) =>
       sb.append('[')
@@ -326,22 +281,75 @@ object JValue {
     }
   }
 
-  private[json] def writeString(sb: StringBuilder, s: String): Unit = {
+  private[geo] def writeString(sb: StringBuilder, s: String): Unit =
+    writeString(sb.underlying, s)
+
+  private[geo] def writeString(sb: java.lang.StringBuilder, s: CharSequence): Unit = {
     sb.append('"')
-    var i = 0
+    var run = 0
+    var i   = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      c match {
-        case '"'             => sb.append("\\\"")
-        case '\\'            => sb.append("\\\\")
-        case '\n'            => sb.append("\\n")
-        case c if c <= 0x1f  => sb.append(f"\\u00${c.toInt}%02X")
-        case c               => sb.append(c)
+      if (c == '"' || c == '\\' || c <= 0x1f) {
+        sb.append(s, run, i); escape(sb, c); run = i + 1
       }
       i += 1
     }
-    sb.append('"')
+    sb.append(s, run, s.length).append('"')
   }
+
+  /** The reference's escapes (jsone.ml:769-796): `"` `\` `\n` escaped,
+    * other control chars as \u00XX. */
+  private def escape(sb: java.lang.StringBuilder, c: Char): Unit = c match {
+    case '"'  => sb.append("\\\"")
+    case '\\' => sb.append("\\\\")
+    case '\n' => sb.append("\\n")
+    case _    =>
+      sb.append("\\u00").append(Character.forDigit(c >> 4, 16).toUpper)
+        .append(Character.forDigit(c & 0xf, 16).toUpper)
+  }
+
+  /** Write the JSON value AT the parser's current token in canonical form —
+    * exactly what [[parse]] then `render` produce (member order and duplicates,
+    * numbers through [[appendG16]], the reference's escapes) without
+    * building the tree. Integer literals of at most 15 characters skip the
+    * double: their long value prints as its own %.16g rendering (`-0` reads
+    * as the integer 0, as in the tree path). Leaves the parser
+    * on the value's last token; Jackson errors propagate. */
+  private[geo] def writeCanonical(p: JsonParser, sb: java.lang.StringBuilder): Unit =
+    p.currentToken() match {
+      case JsonToken.VALUE_NULL  => sb.append("null")
+      case JsonToken.VALUE_TRUE  => sb.append("true")
+      case JsonToken.VALUE_FALSE => sb.append("false")
+      case JsonToken.VALUE_NUMBER_INT if p.getTextLength <= 15 =>
+        sb.append(p.getLongValue)
+      case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT =>
+        appendG16(sb, p.getDoubleValue)
+      case JsonToken.VALUE_STRING =>
+        writeString(sb, java.nio.CharBuffer.wrap(p.getTextCharacters, p.getTextOffset, p.getTextLength))
+      case JsonToken.START_ARRAY =>
+        sb.append('[')
+        var first = true
+        while (p.nextToken() != JsonToken.END_ARRAY) {
+          if (!first) sb.append(',')
+          first = false
+          writeCanonical(p, sb)
+        }
+        sb.append(']')
+      case JsonToken.START_OBJECT =>
+        sb.append('{')
+        var first = true
+        while (p.nextToken() != JsonToken.END_OBJECT) {
+          if (!first) sb.append(',')
+          first = false
+          writeString(sb, p.currentName())
+          sb.append(':')
+          p.nextToken()
+          writeCanonical(p, sb)
+        }
+        sb.append('}')
+      case t => throw new IllegalArgumentException(s"Unexpected token $t")
+    }
 
   /** Structural equality where numbers compare by bit pattern — the JSON-value
     * equality the reference round-trip tests use (test/geojson/test.ml).

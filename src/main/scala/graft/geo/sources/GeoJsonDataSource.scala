@@ -100,17 +100,18 @@ class GeoJsonReaderFactory(malformedReplace: Boolean, resync: Boolean)
       malformedReplace, resync)
 }
 
-/** One file = one split; features stream through Jackson incrementally. */
+/** One file = one split; features stream through Jackson incrementally. The
+  * strict splitter's UTF-8 byte slices become rows without a String. */
 class GeoJsonPartitionReader(path: String, malformedReplace: Boolean = false,
                              resync: Boolean = false)
     extends PartitionReader[InternalRow] {
   private val hp = new Path(path)
   private val in = hp.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(hp)
-  private val it =
-    if (resync) GeoJsonReader.resyncFeatures(in)
-    else GeoJsonReader.splitFeatures(in, malformedReplace)
+  private val it: Iterator[UTF8String] =
+    if (resync) GeoJsonReader.resyncFeatures(in).map(UTF8String.fromString)
+    else GeoJsonReader.splitFeatures(in, malformedReplace).map(UTF8String.fromBytes)
   private val fileUtf8 = UTF8String.fromString(path)
-  private var current: String = _
+  private var current: UTF8String = _
   private var seq: Long = -1L
 
   override def next(): Boolean = {
@@ -118,6 +119,6 @@ class GeoJsonPartitionReader(path: String, malformedReplace: Boolean = false,
   }
   override def get(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](fileUtf8, seq, UTF8String.fromString(current)))
+      Array[Any](fileUtf8, seq, current))
   override def close(): Unit = try in.close() catch { case _: Exception => () }
 }

@@ -11,6 +11,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * the reference's lexeme-driven `decode_single_object`,
   * /root/reference/src/geojsone/geojsone.ml:68-116).
   *
+  * On UTF-8 input each text is the element's source bytes as they are: no
+  * number is converted and no string decoded before `from_geojson` reads
+  * it.
+  *
   * Files are distributed across tasks (one task per file via binaryFiles);
   * a single gigantic file is one task but still constant-memory, exactly
   * like the single-fiber reference.
@@ -30,6 +34,7 @@ object GeoJsonReader {
       .flatMap { case (_, pds) =>
         if (resync) resyncFeatures(pds.open())
         else splitFeatures(pds.open(), malformedReplace)
+          .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
       }
       .toDS()
   }
@@ -248,8 +253,22 @@ object GeoJsonReader {
     }
   }
 
+  /** The strict splitter: the UTF-8 bytes of each feature text, in
+    * document order (see the container rules above).
+    *
+    * UTF-8 input (the common case) is emitted BYTE-FAITHFULLY: each feature
+    * is sliced out of the source bytes at Jackson's byte offsets taken
+    * around `skipChildren()`, which still tokenizes every value and checks
+    * every UTF-8 sequence, so malformed input fails the task as before. The
+    * slices come from a [[Recorder]] between the byte source and Jackson
+    * that never holds more than the largest feature plus one read chunk.
+    * UTF-16 input (Jackson decodes it through a Reader and reports no byte
+    * offsets) and `malformedReplace` re-serialize each feature through
+    * Jackson instead: value-faithful, not byte-faithful (numbers in
+    * shortest repr; an overflowing literal such as 1e400 becomes the
+    * string "Infinity"). */
   private[sources] def splitFeatures(in0: java.io.InputStream,
-                                     malformedReplace: Boolean = false): Iterator[String] = {
+                                     malformedReplace: Boolean = false): Iterator[Array[Byte]] = {
     val factory = new JsonFactory()
     // sniff RS (RFC 8142): strip separators with a filter stream — each
     // text is then just another consecutive root value
@@ -273,56 +292,109 @@ object GeoJsonReader {
       }
       else pb
     // strict mode: Jackson's byte-level bootstrapper (loud on malformed
-    // input); replace mode: decode through the U+FFFD-replacing reader
+    // input) over the recording tap; replace mode: decode through the
+    // U+FFFD-replacing reader
+    val rec0   = if (malformedReplace) null else new Recorder(in)
     val parser =
       if (malformedReplace) factory.createParser(replacingReader(in))
-      else factory.createParser(in)
+      else factory.createParser(rec0)
+    val rec =
+      if (rec0 != null && parser.isInstanceOf[com.fasterxml.jackson.core.json.UTF8StreamJsonParser]) rec0
+      else { if (rec0 != null) rec0.stop(); null }
 
     // flatten every root value: FC roots stream their features, feature
     // roots emit themselves
-    new Iterator[String] {
-      private var pending: Iterator[String] = Iterator.empty
+    new Iterator[Array[Byte]] {
+      private var pending: Iterator[Array[Byte]] = Iterator.empty
       private var closed = false
       private def closeAll(): Unit = { closed = true; parser.close(); in.close() }
       private def refill(): Unit = {
         while (!pending.hasNext && !closed) {
           try {
+            if (rec != null) rec.release(parser.currentLocation().getByteOffset)
             val t = parser.nextToken()
             if (t == null) closeAll()
             else {
               require(t == JsonToken.START_OBJECT, "GeoJSON document must be an object")
-              pending = splitRootObject(factory, parser)
+              pending = splitRootObject(factory, parser, rec)
             }
           } catch { case e: Throwable => closeAll(); throw e }
         }
       }
       override def hasNext: Boolean = { refill(); pending.hasNext }
-      override def next(): String = { refill(); pending.next() }
+      override def next(): Array[Byte] = { refill(); pending.next() }
     }
+  }
+
+  /** Recording tap between the byte source and Jackson: keeps every byte
+    * read from offset `keep` on, so a feature can be sliced out by its
+    * Jackson byte offsets. [[release]] advances `keep`; released bytes are
+    * dropped at the next read, so the buffer holds the current feature (or
+    * root-object head) plus at most one read chunk. */
+  private[sources] final class Recorder(in: java.io.InputStream) extends java.io.InputStream {
+    private var buf  = new Array[Byte](1 << 15)
+    private var base = 0L // stream offset of buf(0)
+    private var len  = 0
+    private var keep = 0L
+    private var on   = true
+
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) <= 0) -1 else one(0) & 0xff
+    }
+    override def read(b: Array[Byte], off: Int, n: Int): Int = {
+      val r = in.read(b, off, n)
+      if (on && r > 0) {
+        val drop = (keep - base).toInt
+        if (drop > 0) {
+          System.arraycopy(buf, drop, buf, 0, len - drop)
+          len -= drop; base = keep
+        }
+        if (len + r > buf.length) buf = java.util.Arrays.copyOf(buf, Math.max(buf.length * 2, len + r))
+        System.arraycopy(b, off, buf, len, r)
+        len += r
+      }
+      r
+    }
+    /** Bytes before stream offset `offset` are no longer needed. */
+    def release(offset: Long): Unit = keep = Math.min(Math.max(keep, offset), base + len)
+    /** The bytes at stream offsets [from, to). */
+    def slice(from: Long, to: Long): Array[Byte] =
+      java.util.Arrays.copyOfRange(buf, (from - base).toInt, (to - base).toInt)
+    /** Record nothing more (the parser decodes through a Reader). */
+    def stop(): Unit = { on = false; buf = null; len = 0 }
+    override def close(): Unit = in.close()
   }
 
   /** Current token is the START_OBJECT of one root value. Classify it and
     * return its feature texts; consumes exactly this root object (the
     * returned iterator must be drained before the parser is advanced —
-    * [[splitFeatures]] guarantees that). */
+    * [[splitFeatures]] guarantees that). With a recorder, texts are
+    * source byte slices and subtrees are skipped; without one, the head is
+    * held in a TokenBuffer and texts re-serialize. */
   private def splitRootObject(factory: JsonFactory,
-                              parser: com.fasterxml.jackson.core.JsonParser): Iterator[String] = {
+                              parser: com.fasterxml.jackson.core.JsonParser,
+                              rec: Recorder): Iterator[Array[Byte]] = {
+    val rootStart = if (rec != null) parser.currentTokenLocation().getByteOffset else -1L
     // buffer the object head until the classification is decidable
-    val buf = new com.fasterxml.jackson.databind.util.TokenBuffer(parser)
-    buf.copyCurrentEvent(parser) // START_OBJECT
+    val buf =
+      if (rec != null) null else new com.fasterxml.jackson.databind.util.TokenBuffer(parser)
+    def keep(): Unit = if (buf != null) buf.copyCurrentEvent(parser)
+    def subtree(): Unit = if (buf != null) copySubtreeRest(parser, buf) else parser.skipChildren()
+    keep() // START_OBJECT
     var decided: Option[Boolean] = None // Some(true)=collection, Some(false)=single value
     while (decided.isEmpty) {
       val t = parser.nextToken()
       t match {
         case JsonToken.FIELD_NAME if parser.currentName() == "type" =>
-          buf.copyCurrentEvent(parser)
+          keep()
           val vt = parser.nextToken()
-          buf.copyCurrentEvent(parser)
+          keep()
           if (vt == JsonToken.VALUE_STRING)
             decided = Some(parser.getText == "FeatureCollection")
           else if (vt == JsonToken.START_OBJECT || vt == JsonToken.START_ARRAY) {
             // non-string type: buffer the subtree, keep scanning
-            copySubtreeRest(parser, buf)
+            subtree()
           }
         case JsonToken.FIELD_NAME if parser.currentName() == "features" =>
           // type-less object carrying a features array: treat as collection
@@ -330,19 +402,29 @@ object GeoJsonReader {
           // recognizes it via currentToken, the buffer is discarded)
           decided = Some(true)
         case JsonToken.FIELD_NAME =>
-          buf.copyCurrentEvent(parser)
+          keep()
           val vt = parser.nextToken()
-          buf.copyCurrentEvent(parser)
-          if (vt == JsonToken.START_OBJECT || vt == JsonToken.START_ARRAY)
-            copySubtreeRest(parser, buf)
+          keep()
+          if (vt == JsonToken.START_OBJECT || vt == JsonToken.START_ARRAY) subtree()
         case JsonToken.END_OBJECT =>
-          buf.copyCurrentEvent(parser)
+          keep()
           decided = Some(false) // no type, no features: one opaque value
         case _ =>
-          buf.copyCurrentEvent(parser)
+          keep()
       }
     }
     if (!decided.get) {
+      if (rec != null) {
+        // single value: skip the rest of the root object (the parser sits
+        // at its top level) and slice the whole object
+        var atEnd = parser.currentToken() == JsonToken.END_OBJECT
+        while (!atEnd) parser.nextToken() match {
+          case JsonToken.START_OBJECT | JsonToken.START_ARRAY => parser.skipChildren()
+          case JsonToken.END_OBJECT => atEnd = true
+          case _ => ()
+        }
+        return Iterator.single(rec.slice(rootStart, parser.currentLocation().getByteOffset))
+      }
       // single value: replay the buffered head + copy the unread remainder
       val sw  = new java.io.StringWriter()
       val gen = factory.createGenerator(sw)
@@ -373,14 +455,17 @@ object GeoJsonReader {
       }
       gen.close()
       buf.close()
-      return Iterator.single(sw.toString)
+      return Iterator.single(sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    buf.close()
+    if (buf != null) buf.close()
     // collection mode: advance (within THIS object) to the top-level
     // "features" array — the buffered head holds only scalar members (type,
     // bbox, ...) or fully-buffered subtrees, so the live parser sits at the
     // top level; if the features name was the deciding token we are already
     // on it
+    // from here on no byte before the parser's position is needed again
+    // except a feature being sliced: drop them token by token
+    def dropRead(): Unit = if (rec != null) rec.release(parser.currentLocation().getByteOffset)
     val onFeatures = parser.currentToken() == JsonToken.FIELD_NAME &&
       parser.currentName() == "features"
     var found = onFeatures && {
@@ -391,6 +476,7 @@ object GeoJsonReader {
     var depth = 1
     var t: JsonToken = null
     while (!found && { t = parser.nextToken(); t != null }) {
+      dropRead()
       t match {
         case JsonToken.FIELD_NAME if depth == 1 && parser.currentName() == "features" =>
           val nxt = parser.nextToken()
@@ -404,44 +490,52 @@ object GeoJsonReader {
       }
     }
     if (!found) return Iterator.empty
+    dropRead()
 
-    new Iterator[String] {
+    new Iterator[Array[Byte]] {
       private var nextTok = parser.nextToken()
       private var drainedObject = false
       override def hasNext: Boolean = {
         val h = nextTok == JsonToken.START_OBJECT
         if (!h && !drainedObject) {
           // emission stops at the first non-object features element (same
-          // behavior as the original splitter); skip any remaining elements
-          // to the array's END_ARRAY so the drain below starts balanced
+          // behavior as the original splitter); consume the rest of the
+          // array and of the collection object (bbox/fm after the features
+          // array) so the NEXT root value can follow (RFC 8142 sequences of
+          // FeatureCollections)
+          var depth = 2 // inside the features array of the root object
           var tk = nextTok
-          while (tk != null && tk != JsonToken.END_ARRAY) {
-            if (tk == JsonToken.START_OBJECT || tk == JsonToken.START_ARRAY)
-              parser.skipChildren()
-            tk = parser.nextToken()
-          }
-          // consume the rest of the collection object (bbox/fm after the
-          // features array) so the NEXT root value can follow (RFC 8142
-          // sequences of FeatureCollections)
-          var depth = 1
-          while (depth > 0 && parser.nextToken() != null) {
-            parser.currentToken() match {
+          while (tk != null && depth > 0) {
+            tk match {
               case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depth += 1
               case JsonToken.END_OBJECT | JsonToken.END_ARRAY     => depth -= 1
               case _ => ()
             }
+            dropRead()
+            if (depth > 0) tk = parser.nextToken()
           }
           drainedObject = true
         }
         h
       }
-      override def next(): String = {
-        val sw  = new java.io.StringWriter()
-        val gen = factory.createGenerator(sw)
-        gen.copyCurrentStructure(parser)
-        gen.close()
+      override def next(): Array[Byte] = {
+        val out =
+          if (rec != null) {
+            val from = parser.currentTokenLocation().getByteOffset
+            parser.skipChildren()
+            val to = parser.currentLocation().getByteOffset
+            val b  = rec.slice(from, to)
+            rec.release(to)
+            b
+          } else {
+            val sw  = new java.io.StringWriter()
+            val gen = factory.createGenerator(sw)
+            gen.copyCurrentStructure(parser)
+            gen.close()
+            sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          }
         nextTok = parser.nextToken()
-        sw.toString
+        out
       }
     }
   }

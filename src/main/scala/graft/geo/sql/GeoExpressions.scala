@@ -110,27 +110,25 @@ object GeomAccess {
   * forwarders, same pattern as GeoAlgo/HexCell calls in codegen). */
 object GeoRuntime {
   def fromGeoJson(s: UTF8String): InternalRow = {
-    val text = s.toString
-    val fast = GeoParse.parseTopFast(text)
+    val fast = GeoParse.parseTopFast(s)
     if (fast ne GeoParse.Fallback) fast.asInstanceOf[InternalRow]
-    else GeoJsonCodec.parse(text).fold(_ => null, GeoStruct.packTop)
+    else GeoJsonCodec.parse(s.toString).fold(_ => null, GeoStruct.packTop)
   }
 
   def fromGeoJsonGeom(s: UTF8String): InternalRow = {
-    val text = s.toString
-    val fast = GeoParse.parseGeometryFast(text)
+    val fast = GeoParse.parseGeometryFast(s)
     if (fast ne GeoParse.Fallback) fast.asInstanceOf[InternalRow]
     else
-      JValue.parse(text).flatMap(GeoJsonCodec.geometryOfJson)
+      JValue.parse(s.toString).flatMap(GeoJsonCodec.geometryOfJson)
         .fold(_ => null, GeoStruct.packGeometry)
   }
 
   def toGeoJson(r: InternalRow): UTF8String =
-    UTF8String.fromString(GeoJsonCodec.render(GeoStruct.unpackTop(r)))
+    UTF8String.fromString(GeoRender.renderTop(r))
 
   def toGeoJsonGeom(r: InternalRow): UTF8String = {
     val b = new StringBuilder(128)
-    GeoJsonCodec.writeGeometry(b, GeoStruct.unpackGeometry(r))
+    GeoRender.writeGeometry(b, r, null)
     UTF8String.fromString(b.toString)
   }
 
@@ -142,31 +140,46 @@ object GeoRuntime {
 
   /** map_props kernel: `props` null = absent-member skip (document passes
     * through unchanged); returns null on an unparseable document (PERMISSIVE)
-    * or unparseable replacement. */
+    * or unparseable replacement. Plain documents go through
+    * [[GeoParse.parseTopFast]] — which only syntax-checks the properties
+    * being replaced — and render from the packed row; the rest take the
+    * JValue-tree codec. */
   def withFeatureProps(json: UTF8String, props: UTF8String): UTF8String = {
-    import graft.geo.model.GeoModel._
-    GeoJsonCodec.parse(json.toString).fold(_ => null, {
-      case GeoJson(GFeature(f), bbox) =>
-        if (props == null)
-          UTF8String.fromString(GeoJsonCodec.render(GeoJson(GFeature(f), bbox)))
-        else
+    val fast = GeoParse.parseTopFast(json, skipProperties = props != null)
+    if (fast ne GeoParse.Fallback) {
+      val top = fast.asInstanceOf[InternalRow]
+      try UTF8String.fromString(GeoRender.renderTop(top, props))
+      catch { case _: IllegalArgumentException => null } // unparseable replacement
+    } else {
+      import graft.geo.model.GeoModel._
+      GeoJsonCodec.parse(json.toString).fold(_ => null, {
+        case GeoJson(GFeature(f), bbox) if props != null =>
           JValue.parse(props.toString).fold(_ => null,
             pj => UTF8String.fromString(
               GeoJsonCodec.render(GeoJson(GFeature(f.copy(properties = Some(pj))), bbox))))
-      case other => UTF8String.fromString(GeoJsonCodec.render(other))
-    })
+        case other => UTF8String.fromString(GeoJsonCodec.render(other))
+      })
+    }
   }
 
-  /** map_geometry kernel: `geom` null = absent-member skip, as map_props. */
+  /** map_geometry kernel: `geom` null = absent-member skip, as map_props.
+    * The old geometry is still parsed (not skipped): its decode errors null
+    * the row, as in the codec. */
   def withFeatureGeometry(json: UTF8String, geom: InternalRow): UTF8String = {
-    import graft.geo.model.GeoModel._
-    GeoJsonCodec.parse(json.toString).fold(_ => null, {
-      case GeoJson(GFeature(f), bbox) =>
-        val nf = if (geom == null) f
-                 else f.copy(geometry = Some(GeoStruct.unpackGeometry(geom)))
-        UTF8String.fromString(GeoJsonCodec.render(GeoJson(GFeature(nf), bbox)))
-      case other => UTF8String.fromString(GeoJsonCodec.render(other))
-    })
+    val fast = GeoParse.parseTopFast(json)
+    if (fast ne GeoParse.Fallback) {
+      val top = fast.asInstanceOf[InternalRow]
+      if (geom != null && top.getByte(0) == 1) top.getStruct(3, 5).update(2, geom)
+      UTF8String.fromString(GeoRender.renderTop(top))
+    } else {
+      import graft.geo.model.GeoModel._
+      GeoJsonCodec.parse(json.toString).fold(_ => null, {
+        case GeoJson(GFeature(f), bbox) if geom != null =>
+          val nf = f.copy(geometry = Some(GeoStruct.unpackGeometry(geom)))
+          UTF8String.fromString(GeoJsonCodec.render(GeoJson(GFeature(nf), bbox)))
+        case other => UTF8String.fromString(GeoJsonCodec.render(other))
+      })
+    }
   }
 }
 

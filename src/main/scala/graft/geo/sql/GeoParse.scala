@@ -1,9 +1,9 @@
 package graft.geo.sql
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
-import org.apache.spark.sql.catalyst.InternalRow
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken, StreamReadFeature}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.geo.json.JValue
@@ -28,13 +28,52 @@ import graft.geo.model.GeoModel.GType
   * general [[graft.geo.json.GeoJsonCodec]] path. The fast paths therefore
   * cannot change semantics: they only accept documents both paths parse
   * identically (byte-equality asserted differentially in GeoParseSpec).
+  *
+  * Each number is converted once: Jackson reads the UTF-8 bytes of the
+  * `UTF8String` in place (no `toString`), doubles go through its correctly
+  * rounded fast parser (bit-equal to `Double.parseDouble`, spec-pinned),
+  * and `properties` stream token by token into their canonical text
+  * ([[JValue.writeCanonical]]) instead of a JValue tree that is then
+  * rendered.
   */
 object GeoParse {
 
   /** Sentinel: not recognized by the fast path — use the general codec. */
   val Fallback: AnyRef = new Object
 
-  private val factory = new JsonFactory()
+  private val factory: JsonFactory =
+    JsonFactory.builder().enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build()
+
+  /** A parser over the text's UTF-8 bytes, read in place when on-heap. A
+    * leading byte-order mark gets no parser (null): Jackson's byte
+    * bootstrapper would skip it where the String-based codec rejects it. */
+  private def parser(s: UTF8String): JsonParser =
+    if (s.numBytes > 0 && s.getByte(0) == 0xEF.toByte) null
+    else s.getBaseObject match {
+      case a: Array[Byte] =>
+        factory.createParser(a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ =>
+        val b = s.getBytes
+        factory.createParser(b, 0, b.length)
+    }
+
+  /** Canonical minified text of a JSON document: `JValue.parseUnsafe(text)
+    * .render` without the tree. Invalid JSON or trailing content throws
+    * IllegalArgumentException, like `parseUnsafe`. */
+  def canonicalJson(s: UTF8String): String = {
+    val p = parser(s)
+    if (p == null) return JValue.parseUnsafe(s.toString).render
+    try {
+      val sb = new java.lang.StringBuilder(s.numBytes + 16)
+      p.nextToken()
+      JValue.writeCanonical(p, sb)
+      if (p.nextToken() != null) throw new IllegalArgumentException("Trailing content after JSON value")
+      sb.toString
+    } catch {
+      case e: com.fasterxml.jackson.core.JacksonException =>
+        throw new IllegalArgumentException(Option(e.getOriginalMessage).getOrElse("parse error"), e)
+    } finally p.close()
+  }
 
   /** Array nesting depth of "coordinates" per geometry type. */
   private def depthOf(typ: String): Int = typ match {
@@ -48,9 +87,12 @@ object GeoParse {
   }
 
   /** Parse a bare geometry document to a packed geometry row (or Fallback). */
-  def parseGeometryFast(text: String): AnyRef = {
+  def parseGeometryFast(text: String): AnyRef = parseGeometryFast(UTF8String.fromString(text))
+
+  def parseGeometryFast(text: UTF8String): AnyRef = {
     try {
-      val p = factory.createParser(text)
+      val p = parser(text)
+      if (p == null) return Fallback
       try {
         if (p.nextToken() != JsonToken.START_OBJECT) return Fallback
         val row = parseGeometryObject(p)
@@ -145,9 +187,16 @@ object GeoParse {
   /** Parse a top-level document (bare geometry or plain Feature) to a packed
     * top row (or Fallback). FeatureCollections, foreign members, duplicate
     * known keys, bbox-anywhere and every error path fall back. */
-  def parseTopFast(text: String): AnyRef = {
+  def parseTopFast(text: String): AnyRef = parseTopFast(UTF8String.fromString(text))
+
+  /** `skipProperties`: the caller replaces a Feature's properties, so the
+    * member is only checked for JSON syntax (`skipChildren` still reads
+    * every token) and left null in the row; any syntactically valid value
+    * is accepted by the codec, so this drops no error. */
+  def parseTopFast(text: UTF8String, skipProperties: Boolean = false): AnyRef = {
     try {
-      val p = factory.createParser(text)
+      val p = parser(text)
+      if (p == null) return Fallback
       try {
         if (p.nextToken() != JsonToken.START_OBJECT) return Fallback
         if (p.nextToken() != JsonToken.FIELD_NAME || p.currentName() != "type") return Fallback
@@ -187,10 +236,15 @@ object GeoParse {
                   if (sawProps) return Fallback
                   sawProps = true
                   p.nextToken()
-                  // any JSON value, present-null included; packed as the
-                  // JValue MINIFIED render (Jackson's own re-serialization
-                  // formats numbers differently, so go through JValue)
-                  f.update(3, UTF8String.fromString(JValue.readValueAt(p).render))
+                  // any JSON value, present-null included; packed as its
+                  // canonical minified text (Jackson's own re-serialization
+                  // formats numbers differently)
+                  if (skipProperties) p.skipChildren()
+                  else {
+                    val sb = new java.lang.StringBuilder(64)
+                    JValue.writeCanonical(p, sb)
+                    f.update(3, UTF8String.fromString(sb.toString))
+                  }
                 case "id" =>
                   if (sawId) return Fallback
                   sawId = true

@@ -466,24 +466,33 @@ object Dedup {
     * out, and every future shard dedups against the catalog via
     * [[dedupAgainst]] without ever re-reading or re-shuffling the corpus
     * text. Layout under `path`:
-    *   - `params`  one row (num_hashes, bands, shingle) — [[dedupAgainst]]
-    *               recomputes shard signatures with the SAME parameters
+    *   - `params`  one row (num_hashes, bands, shingle, with_minhash) —
+    *               [[dedupAgainst]] recomputes shard signatures with the
+    *               SAME parameters
     *   - `exact`   (id, h, len)
     *   - `minhash` (id, band, bh)
-    * Grow it with [[appendToCatalog]] as shards are accepted. */
-  /** `withMinhash = false` writes an EXACT-ONLY catalog (params + exact
+    * Grow it with [[appendToCatalog]] as shards are accepted.
+    *
+    * `withMinhash = false` writes an EXACT-ONLY catalog (params + exact
     * signatures, no minhash band table): a flow that dedups with
     * `mode = "exact"` skips the minhash_sig pass and its table write
     * entirely — at corpus scale that is a full O(tokens) signature pass
-    * plus a table of bands × rows it would never read. `dedupAgainst`
-    * mode = "near" on such a catalog fails on the missing table (by
-    * design); [[appendToCatalog]] still works (params are always
-    * written) and adds both tables, upgrading the catalog in place. */
+    * plus a table of bands × rows it would never read. The choice is
+    * recorded in `params` and is permanent: [[appendToCatalog]] keeps such
+    * a catalog exact-only (band signatures of appended shards alone would
+    * miss every near-dup of the base corpus), and `mode = "near"` rejects
+    * it with an error. Rebuild with `withMinhash = true` to dedup near.
+    *
+    * `params` is the commit marker: it is deleted before the signature
+    * tables are (re)written and written last, so a build that dies midway
+    * — a rebuild over an existing catalog included — leaves no marker. */
   def writeCatalog(df: DataFrame, idCol: String, textCol: String, path: String,
                    numHashes: Int = 128, bands: Int = 16, shingle: Int = 5,
                    withMinhash: Boolean = true): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
+    val marker = new org.apache.hadoop.fs.Path(s"$path/params")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(marker, true)
     // signature tables are independent actions over disjoint paths —
     // submit them concurrently (guide §2.6) so one write's task tail
     // back-fills the other's; params goes LAST as the catalog's commit
@@ -496,16 +505,20 @@ object Dedup {
         Seq(() => bandSignatures(df, idCol, textCol, numHashes, bands, shingle)
           .write.mode("overwrite").parquet(s"$path/minhash"))
       else Seq.empty): _*)
-    Seq((numHashes, bands, shingle)).toDF("num_hashes", "bands", "shingle")
+    Seq((numHashes, bands, shingle, withMinhash))
+      .toDF("num_hashes", "bands", "shingle", "with_minhash")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
   }
 
   /** Append a (deduplicated) shard's signatures to an existing catalog,
-    * using the catalog's own stored parameters. */
+    * using the catalog's own stored parameters (an exact-only catalog gets
+    * exact signatures only). */
   def appendToCatalog(df: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    val (nh, nb, sh) = catalogParams(df.sparkSession, path)
+    val p = catalogParams(df.sparkSession, path)
     exactSignatures(df, idCol, textCol).write.mode("append").parquet(s"$path/exact")
-    bandSignatures(df, idCol, textCol, nh, nb, sh).write.mode("append").parquet(s"$path/minhash")
+    if (p.withMinhash)
+      bandSignatures(df, idCol, textCol, p.numHashes, p.bands, p.shingle)
+        .write.mode("append").parquet(s"$path/minhash")
   }
 
   /** Catalog MAINTENANCE: compaction + self-dedup. Repeated
@@ -574,9 +587,25 @@ object Dedup {
     rm(bak.toFile) // only after the new live dir is in place
   }
 
-  private def catalogParams(spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int) = {
+  private final case class CatalogParams(numHashes: Int, bands: Int, shingle: Int,
+                                          withMinhash: Boolean)
+
+  /** A catalog written before `with_minhash` was recorded always carried
+    * the minhash table. */
+  private def catalogParams(spark: org.apache.spark.sql.SparkSession, path: String): CatalogParams = {
     val p = spark.read.parquet(s"$path/params").head
-    (p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"), p.getAs[Int]("shingle"))
+    CatalogParams(p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"), p.getAs[Int]("shingle"),
+      !p.schema.fieldNames.contains("with_minhash") || p.getAs[Boolean]("with_minhash"))
+  }
+
+  /** Parameters of a catalog about to be probed by minhash bands. */
+  private def nearParams(spark: org.apache.spark.sql.SparkSession, path: String): CatalogParams = {
+    val p = catalogParams(spark, path)
+    if (!p.withMinhash) throw new IllegalArgumentException(
+      s"catalog $path was written with withMinhash = false: its minhash table holds at most " +
+        "appended shards, so near-dup matching would miss the base corpus; use mode = \"exact\" " +
+        "or rebuild it with withMinhash = true")
+    p
   }
 
   /** Incremental dedup of a NEW shard against a persisted catalog: returns
@@ -596,7 +625,8 @@ object Dedup {
     * caveat); `mode = "near"` (default) additionally drops on ANY minhash
     * band collision — recall follows the [[minhashPairs]] banding curve
     * with no Jaccard verify, so near-threshold false drops are possible by
-    * design. Use "exact" when only byte-identical re-crawls must go. */
+    * design. Use "exact" when only byte-identical re-crawls must go;
+    * "near" rejects a catalog written with `withMinhash = false`. */
   def dedupAgainst(shard: DataFrame, idCol: String, textCol: String,
                    catalogPath: String, mode: String = "near"): DataFrame = {
     val spark = shard.sparkSession
@@ -607,10 +637,10 @@ object Dedup {
     val matched = (mode match {
       case "exact" => exactMatched
       case "near" =>
-        val (nh, nb, sh) = catalogParams(spark, catalogPath)
+        val p = nearParams(spark, catalogPath)
         exactMatched.unionByName(
           spark.read.parquet(s"$catalogPath/minhash")
-            .join(broadcast(bandSignatures(shard, idCol, textCol, nh, nb, sh)
+            .join(broadcast(bandSignatures(shard, idCol, textCol, p.numHashes, p.bands, p.shingle)
               .withColumnRenamed("id", "__sid")), Seq("band", "bh"))
             .select("__sid"))
       case other => throw new IllegalArgumentException(
@@ -627,14 +657,14 @@ object Dedup {
   def catalogPairs(shard: DataFrame, idCol: String, textCol: String,
                    catalogPath: String): DataFrame = {
     val spark = shard.sparkSession
-    val (nh, nb, sh) = catalogParams(spark, catalogPath)
+    val p = nearParams(spark, catalogPath)
     val e = spark.read.parquet(s"$catalogPath/exact")
       .join(broadcast(exactSignatures(shard, idCol, textCol)
         .withColumnRenamed("id", "__sid")), Seq("h", "len"))
       .select(col("__sid").as("shard_id"), col("id").as("catalog_id"),
         lit(true).as("exact"), lit(0L).as("n_bands"))
     val n = spark.read.parquet(s"$catalogPath/minhash")
-      .join(broadcast(bandSignatures(shard, idCol, textCol, nh, nb, sh)
+      .join(broadcast(bandSignatures(shard, idCol, textCol, p.numHashes, p.bands, p.shingle)
         .withColumnRenamed("id", "__sid")), Seq("band", "bh"))
       .groupBy(col("__sid").as("shard_id"), col("id").as("catalog_id"))
       .agg(count(lit(1)).as("n_bands"))
