@@ -144,21 +144,4 @@ object HexCell {
     }
     out.result()
   }
-
-  /** Lower bound (metres) on the true great-circle distance from a point at
-    * latitude `lat` to anything OUTSIDE its k-ring at `res` — the sound kNN
-    * termination test. Cells beyond ring k have centers at planar distance
-    * >= (k - 1) * inradius * sqrt(3)... we use the conservative planar
-    * separation (k * sqrt(3)/2 - 1) * size in degrees, then convert with the
-    * cos(lat) shrink for the longitude component.
-    */
-  def ringLowerBoundMetres(lat: Double, res: Int, k: Int): Double = {
-    val sz = sizeDeg(res)
-    val planarDeg = math.max(0.0, (k.toDouble * Sqrt3 / 2.0 - 1.0) * sz)
-    // a degree of separation is worth at least cos(maxLat)*111.19km (lng) /
-    // 111.19km (lat); use the smaller
-    val maxLat = math.min(89.9, math.abs(lat) + planarDeg + sz)
-    val metresPerDeg = 111194.9 * math.cos(math.toRadians(maxLat))
-    planarDeg * metresPerDeg
-  }
 }

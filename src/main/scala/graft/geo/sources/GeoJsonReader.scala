@@ -1,7 +1,9 @@
 package graft.geo.sources
 
+import java.nio.charset.{Charset, CodingErrorAction}
+import java.nio.charset.StandardCharsets.{UTF_16BE, UTF_16LE, UTF_8}
+
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The geojsone capability recast for Spark (SURVEY.md §2.6): split a
   * FeatureCollection document "too big for memory" into one row per feature
@@ -11,96 +13,51 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * the reference's lexeme-driven `decode_single_object`,
   * /root/reference/src/geojsone/geojsone.ml:68-116).
   *
-  * On UTF-8 input each text is the element's source bytes as they are: no
-  * number is converted and no string decoded before `from_geojson` reads
-  * it.
+  * Each text is the element's source text as UTF-8 bytes: no number is
+  * converted and no string decoded before `from_geojson` reads it.
   *
-  * Files are distributed across tasks (one task per file via binaryFiles);
-  * a single gigantic file is one task but still constant-memory, exactly
-  * like the single-fiber reference.
+  * The `geojson` DataSourceV2 ([[GeoJsonDataSource]]) reads one file per
+  * task; a single gigantic file is one task but still constant-memory,
+  * exactly like the single-fiber reference.
   */
 object GeoJsonReader {
 
-  /** One JSON text per feature of every FeatureCollection file under `path`.
-    * `malformedReplace = true` selects the reference's error-recovery mode:
-    * malformed bytes decode to U+FFFD and the scan continues (uutfe.ml:35,68
-    * `Malformed → add U+FFFD`) instead of failing the task. */
-  def featureTexts(spark: SparkSession, path: String,
-                   malformedReplace: Boolean = false,
-                   resync: Boolean = false): Dataset[String] = {
-    import spark.implicits._
-    spark.sparkContext
-      .binaryFiles(path)
-      .flatMap { case (_, pds) =>
-        if (resync) resyncFeatures(pds.open())
-        else splitFeatures(pds.open(), malformedReplace)
-          .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
-      }
-      .toDS()
+  /** The encoding of a GeoJSON byte stream, guessed from its first bytes as
+    * the reference's uutfe does: a byte-order mark (dropped), else the RFC
+    * 4627 null-byte pattern of UTF-16BE/LE, else UTF-8. Returns the stream
+    * positioned after the mark. */
+  private def sniff(in: java.io.InputStream): (java.io.InputStream, Charset) = {
+    val pb   = new java.io.PushbackInputStream(in, 3)
+    val head = new Array[Byte](3)
+    var n    = 0
+    var eof  = false
+    while (n < 3 && !eof) {
+      val b = pb.read()
+      if (b == -1) eof = true else { head(n) = b.toByte; n += 1 }
+    }
+    val (cs, bomLen) =
+      if (n >= 2 && head(0) == 0xFE.toByte && head(1) == 0xFF.toByte) (UTF_16BE, 2)
+      else if (n >= 2 && head(0) == 0xFF.toByte && head(1) == 0xFE.toByte) (UTF_16LE, 2)
+      else if (n >= 3 && head(0) == 0xEF.toByte && head(1) == 0xBB.toByte && head(2) == 0xBF.toByte)
+        (UTF_8, 3)
+      else if (n >= 2 && head(0) == 0 && head(1) != 0) (UTF_16BE, 0)
+      else if (n >= 2 && head(0) != 0 && head(1) == 0) (UTF_16LE, 0)
+      else (UTF_8, 0)
+    pb.unread(head, bomLen, n - bomLen)
+    (pb, cs)
   }
 
-  /** Features parsed to the packed feature struct (GeoStruct.featureType). */
-  def features(spark: SparkSession, path: String): DataFrame = {
-    graft.geo.sql.GeoFunctions.register(spark)
-    import org.apache.spark.sql.functions.col
-    featureTexts(spark, path).toDF("feature_json")
-      .select(col("feature_json"),
-        graft.geo.sql.GeoFunctions.from_geojson(col("feature_json"))
-          .getField("feature").as("feature"))
-  }
+  private def decoder(cs: Charset, onError: CodingErrorAction) =
+    cs.newDecoder().onMalformedInput(onError).onUnmappableCharacter(onError)
 
-  /** Lazy iterator over the feature texts of one stream, auto-detecting the
-    * container format in constant memory:
-    *
-    *  - RFC 8142 GeoJSON text sequences (RS 0x1E before each text, each text
-    *    any GeoJSON — FeatureCollections are split, features pass through);
-    *  - ND-JSON / concatenated JSON (a sequence of root-level objects, any
-    *    member order — Jackson reads consecutive root values natively);
-    *  - FeatureCollection documents (the original geojsone case): each
-    *    element of the top-level "features" array becomes a row. Nested
-    *    "features" keys inside properties are not confused (the scan only
-    *    honors the top level of each root object).
-    *
-    * Classification is PER ROOT VALUE: a root object is a collection iff its
-    * top-level `type` is "FeatureCollection" (authoritative) or — for
-    * type-less objects — it carries a top-level `features` array. Members
-    * seen before the decision are held in a bounded TokenBuffer (for a
-    * collection that is only the members preceding "features"; for a
-    * feature, the feature itself) and replayed, so memory stays constant in
-    * the document size. Non-object roots fail loudly (the reference requires
-    * an object).
-    */
   /** Charset-sniffing reader with malformed → U+FFFD replacement — the
     * engine twin of the reference's uutfe recovery (`Malformed → add
     * U+FFFD and continue`, uutfe.ml:35,68; the decoder replaces each
     * maximal ill-formed subsequence per the Unicode best practice the uutf
-    * family follows). Detects UTF-16BE/LE via BOM or the RFC 4627
-    * null-byte pattern (same routing as the strict path's Jackson
-    * bootstrapper), strips the BOM, defaults to UTF-8. */
+    * family follows), over [[sniff]]. */
   private[sources] def replacingReader(in: java.io.InputStream): java.io.Reader = {
-    val pb   = new java.io.PushbackInputStream(in, 4)
-    val head = new Array[Byte](4)
-    var n    = 0
-    var eof  = false
-    while (n < 4 && !eof) {
-      val b = pb.read()
-      if (b == -1) eof = true else { head(n) = b.toByte; n += 1 }
-    }
-    pb.unread(head, 0, n)
-    val (cs, bomLen) =
-      if (n >= 2 && head(0) == 0xFE.toByte && head(1) == 0xFF.toByte) ("UTF-16BE", 2)
-      else if (n >= 2 && head(0) == 0xFF.toByte && head(1) == 0xFE.toByte) ("UTF-16LE", 2)
-      else if (n >= 3 && head(0) == 0xEF.toByte && head(1) == 0xBB.toByte && head(2) == 0xBF.toByte)
-        ("UTF-8", 3)
-      else if (n >= 2 && head(0) == 0 && head(1) != 0) ("UTF-16BE", 0)
-      else if (n >= 2 && head(0) != 0 && head(1) == 0) ("UTF-16LE", 0)
-      else ("UTF-8", 0)
-    var skip = bomLen
-    while (skip > 0) { pb.read(); skip -= 1 }
-    val dec = java.nio.charset.Charset.forName(cs).newDecoder()
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-    new java.io.InputStreamReader(pb, dec)
+    val (body, cs) = sniff(in)
+    new java.io.InputStreamReader(body, decoder(cs, CodingErrorAction.REPLACE))
   }
 
   /** Error-RECOVERING splitter (`mode=resync`) — the engine twin of jsone's
@@ -253,26 +210,47 @@ object GeoJsonReader {
     }
   }
 
-  /** The strict splitter: the UTF-8 bytes of each feature text, in
-    * document order (see the container rules above).
+  /** The strict splitter: the UTF-8 bytes of each feature text of one
+    * stream, in document order, auto-detecting the container format in
+    * constant memory:
     *
-    * UTF-8 input (the common case) is emitted BYTE-FAITHFULLY: each feature
-    * is sliced out of the source bytes at Jackson's byte offsets taken
-    * around `skipChildren()`, which still tokenizes every value and checks
-    * every UTF-8 sequence, so malformed input fails the task as before. The
-    * slices come from a [[Recorder]] between the byte source and Jackson
-    * that never holds more than the largest feature plus one read chunk.
-    * UTF-16 input (Jackson decodes it through a Reader and reports no byte
-    * offsets) and `malformedReplace` re-serialize each feature through
-    * Jackson instead: value-faithful, not byte-faithful (numbers in
-    * shortest repr; an overflowing literal such as 1e400 becomes the
-    * string "Infinity"). */
+    *  - RFC 8142 GeoJSON text sequences (RS 0x1E before each text, each text
+    *    any GeoJSON — FeatureCollections are split, features pass through);
+    *  - ND-JSON / concatenated JSON (a sequence of root-level objects, any
+    *    member order — Jackson reads consecutive root values natively);
+    *  - FeatureCollection documents (the original geojsone case): each
+    *    element of the top-level "features" array becomes a row. Nested
+    *    "features" keys inside properties are not confused (the scan only
+    *    honors the top level of each root object).
+    *
+    * Classification is PER ROOT VALUE: a root object is a collection iff its
+    * top-level `type` is "FeatureCollection" (authoritative) or — for
+    * type-less objects — it carries a top-level `features` array. Non-object
+    * roots fail loudly (the reference requires an object).
+    *
+    * Every feature is emitted BYTE-FAITHFULLY: it is sliced out of a UTF-8
+    * byte stream at Jackson's byte offsets taken around `skipChildren()`,
+    * which still tokenizes every value and checks every UTF-8 sequence. The
+    * slices come from a [[Recorder]] between the byte stream and Jackson
+    * that never holds more than the largest feature (or root-object head)
+    * plus one read chunk. UTF-8 input reaches Jackson as it is; UTF-16
+    * input, and any input under `malformedReplace`, is decoded first
+    * (failing on a malformed sequence, or turning it into U+FFFD) and
+    * re-encoded to UTF-8. */
   private[sources] def splitFeatures(in0: java.io.InputStream,
                                      malformedReplace: Boolean = false): Iterator[Array[Byte]] = {
-    val factory = new JsonFactory()
+    val (body, cs) = sniff(in0)
+    val utf8 =
+      if (cs == UTF_8 && !malformedReplace) body
+      else {
+        val onError = if (malformedReplace) CodingErrorAction.REPLACE else CodingErrorAction.REPORT
+        org.apache.commons.io.input.ReaderInputStream.builder()
+          .setReader(new java.io.InputStreamReader(body, decoder(cs, onError)))
+          .setCharset(UTF_8).get()
+      }
     // sniff RS (RFC 8142): strip separators with a filter stream — each
     // text is then just another consecutive root value
-    val pb    = new java.io.PushbackInputStream(in0, 1)
+    val pb    = new java.io.PushbackInputStream(utf8, 1)
     val first = pb.read()
     if (first == -1) { pb.close(); return Iterator.empty }
     pb.unread(first)
@@ -291,16 +269,15 @@ object GeoJsonReader {
         }
       }
       else pb
-    // strict mode: Jackson's byte-level bootstrapper (loud on malformed
-    // input) over the recording tap; replace mode: decode through the
-    // U+FFFD-replacing reader
-    val rec0   = if (malformedReplace) null else new Recorder(in)
-    val parser =
-      if (malformedReplace) factory.createParser(replacingReader(in))
-      else factory.createParser(rec0)
-    val rec =
-      if (rec0 != null && parser.isInstanceOf[com.fasterxml.jackson.core.json.UTF8StreamJsonParser]) rec0
-      else { if (rec0 != null) rec0.stop(); null }
+    val rec    = new Recorder(in)
+    val parser = new JsonFactory().createParser(rec)
+    // Jackson guesses the encoding again from the first bytes it is given:
+    // only NUL bytes there (UTF-32 input; never valid JSON) can still move
+    // it off its byte-offset UTF-8 parser
+    if (!parser.isInstanceOf[com.fasterxml.jackson.core.json.UTF8StreamJsonParser]) {
+      parser.close()
+      throw new java.io.CharConversionException("GeoJSON input must be UTF-8 or UTF-16")
+    }
 
     // flatten every root value: FC roots stream their features, feature
     // roots emit themselves
@@ -311,12 +288,12 @@ object GeoJsonReader {
       private def refill(): Unit = {
         while (!pending.hasNext && !closed) {
           try {
-            if (rec != null) rec.release(parser.currentLocation().getByteOffset)
+            rec.release(parser.currentLocation().getByteOffset)
             val t = parser.nextToken()
             if (t == null) closeAll()
             else {
               require(t == JsonToken.START_OBJECT, "GeoJSON document must be an object")
-              pending = splitRootObject(factory, parser, rec)
+              pending = splitRootObject(parser, rec)
             }
           } catch { case e: Throwable => closeAll(); throw e }
         }
@@ -336,7 +313,6 @@ object GeoJsonReader {
     private var base = 0L // stream offset of buf(0)
     private var len  = 0
     private var keep = 0L
-    private var on   = true
 
     override def read(): Int = {
       val one = new Array[Byte](1)
@@ -344,7 +320,7 @@ object GeoJsonReader {
     }
     override def read(b: Array[Byte], off: Int, n: Int): Int = {
       val r = in.read(b, off, n)
-      if (on && r > 0) {
+      if (r > 0) {
         val drop = (keep - base).toInt
         if (drop > 0) {
           System.arraycopy(buf, drop, buf, 0, len - drop)
@@ -361,111 +337,58 @@ object GeoJsonReader {
     /** The bytes at stream offsets [from, to). */
     def slice(from: Long, to: Long): Array[Byte] =
       java.util.Arrays.copyOfRange(buf, (from - base).toInt, (to - base).toInt)
-    /** Record nothing more (the parser decodes through a Reader). */
-    def stop(): Unit = { on = false; buf = null; len = 0 }
     override def close(): Unit = in.close()
   }
 
   /** Current token is the START_OBJECT of one root value. Classify it and
-    * return its feature texts; consumes exactly this root object (the
-    * returned iterator must be drained before the parser is advanced —
-    * [[splitFeatures]] guarantees that). With a recorder, texts are
-    * source byte slices and subtrees are skipped; without one, the head is
-    * held in a TokenBuffer and texts re-serialize. */
-  private def splitRootObject(factory: JsonFactory,
-                              parser: com.fasterxml.jackson.core.JsonParser,
+    * return its feature texts as source byte slices; consumes exactly this
+    * root object (the returned iterator must be drained before the parser
+    * is advanced — [[splitFeatures]] guarantees that). Members seen before
+    * the classification are skipped, and the recorder keeps their bytes
+    * from the root's start in case the root is one feature. */
+  private def splitRootObject(parser: com.fasterxml.jackson.core.JsonParser,
                               rec: Recorder): Iterator[Array[Byte]] = {
-    val rootStart = if (rec != null) parser.currentTokenLocation().getByteOffset else -1L
-    // buffer the object head until the classification is decidable
-    val buf =
-      if (rec != null) null else new com.fasterxml.jackson.databind.util.TokenBuffer(parser)
-    def keep(): Unit = if (buf != null) buf.copyCurrentEvent(parser)
-    def subtree(): Unit = if (buf != null) copySubtreeRest(parser, buf) else parser.skipChildren()
-    keep() // START_OBJECT
+    val rootStart = parser.currentTokenLocation().getByteOffset
     var decided: Option[Boolean] = None // Some(true)=collection, Some(false)=single value
     while (decided.isEmpty) {
       val t = parser.nextToken()
       t match {
         case JsonToken.FIELD_NAME if parser.currentName() == "type" =>
-          keep()
           val vt = parser.nextToken()
-          keep()
           if (vt == JsonToken.VALUE_STRING)
             decided = Some(parser.getText == "FeatureCollection")
-          else if (vt == JsonToken.START_OBJECT || vt == JsonToken.START_ARRAY) {
-            // non-string type: buffer the subtree, keep scanning
-            subtree()
-          }
+          else parser.skipChildren() // non-string type: keep scanning
         case JsonToken.FIELD_NAME if parser.currentName() == "features" =>
           // type-less object carrying a features array: treat as collection
-          // (the live parser stays ON this FIELD_NAME; collection mode
-          // recognizes it via currentToken, the buffer is discarded)
+          // (the parser stays ON this FIELD_NAME; collection mode recognizes
+          // it via currentToken)
           decided = Some(true)
         case JsonToken.FIELD_NAME =>
-          keep()
-          val vt = parser.nextToken()
-          keep()
-          if (vt == JsonToken.START_OBJECT || vt == JsonToken.START_ARRAY) subtree()
+          parser.nextToken()
+          parser.skipChildren()
         case JsonToken.END_OBJECT =>
-          keep()
           decided = Some(false) // no type, no features: one opaque value
-        case _ =>
-          keep()
+        case _ => ()
       }
     }
     if (!decided.get) {
-      if (rec != null) {
-        // single value: skip the rest of the root object (the parser sits
-        // at its top level) and slice the whole object
-        var atEnd = parser.currentToken() == JsonToken.END_OBJECT
-        while (!atEnd) parser.nextToken() match {
-          case JsonToken.START_OBJECT | JsonToken.START_ARRAY => parser.skipChildren()
-          case JsonToken.END_OBJECT => atEnd = true
-          case _ => ()
-        }
-        return Iterator.single(rec.slice(rootStart, parser.currentLocation().getByteOffset))
+      // single value: skip the rest of the root object (the parser sits at
+      // its top level) and slice the whole object
+      var atEnd = parser.currentToken() == JsonToken.END_OBJECT
+      while (!atEnd) parser.nextToken() match {
+        case JsonToken.START_OBJECT | JsonToken.START_ARRAY => parser.skipChildren()
+        case JsonToken.END_OBJECT => atEnd = true
+        case _ => ()
       }
-      // single value: replay the buffered head + copy the unread remainder
-      val sw  = new java.io.StringWriter()
-      val gen = factory.createGenerator(sw)
-      val replay = buf.asParser()
-      var rt = replay.nextToken()
-      var depth = 0
-      var sawEnd = false
-      while (rt != null) {
-        gen.copyCurrentEvent(replay)
-        rt match {
-          case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depth += 1
-          case JsonToken.END_OBJECT | JsonToken.END_ARRAY     => depth -= 1; if (depth == 0) sawEnd = true
-          case _ => ()
-        }
-        rt = replay.nextToken()
-      }
-      if (!sawEnd) { // remainder still on the live parser
-        var depthLive = depth
-        while (depthLive > 0) {
-          val t = parser.nextToken()
-          t match {
-            case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depthLive += 1
-            case JsonToken.END_OBJECT | JsonToken.END_ARRAY     => depthLive -= 1
-            case _ => ()
-          }
-          gen.copyCurrentEvent(parser)
-        }
-      }
-      gen.close()
-      buf.close()
-      return Iterator.single(sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      return Iterator.single(rec.slice(rootStart, parser.currentLocation().getByteOffset))
     }
-    if (buf != null) buf.close()
     // collection mode: advance (within THIS object) to the top-level
-    // "features" array — the buffered head holds only scalar members (type,
-    // bbox, ...) or fully-buffered subtrees, so the live parser sits at the
-    // top level; if the features name was the deciding token we are already
-    // on it
+    // "features" array — the members before the decision were skipped
+    // whole, so the parser sits at the top level; if the features name was
+    // the deciding token we are already on it
     // from here on no byte before the parser's position is needed again
     // except a feature being sliced: drop them token by token
-    def dropRead(): Unit = if (rec != null) rec.release(parser.currentLocation().getByteOffset)
+    def dropRead(): Unit = rec.release(parser.currentLocation().getByteOffset)
     val onFeatures = parser.currentToken() == JsonToken.FIELD_NAME &&
       parser.currentName() == "features"
     var found = onFeatures && {
@@ -519,40 +442,14 @@ object GeoJsonReader {
         h
       }
       override def next(): Array[Byte] = {
-        val out =
-          if (rec != null) {
-            val from = parser.currentTokenLocation().getByteOffset
-            parser.skipChildren()
-            val to = parser.currentLocation().getByteOffset
-            val b  = rec.slice(from, to)
-            rec.release(to)
-            b
-          } else {
-            val sw  = new java.io.StringWriter()
-            val gen = factory.createGenerator(sw)
-            gen.copyCurrentStructure(parser)
-            gen.close()
-            sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
+        val from = parser.currentTokenLocation().getByteOffset
+        parser.skipChildren()
+        val to  = parser.currentLocation().getByteOffset
+        val out = rec.slice(from, to)
+        rec.release(to)
         nextTok = parser.nextToken()
         out
       }
-    }
-  }
-
-  /** The current token opened a subtree (START_OBJECT/ARRAY, already copied
-    * to buf); copy the remainder of that subtree. */
-  private def copySubtreeRest(parser: com.fasterxml.jackson.core.JsonParser,
-                              buf: com.fasterxml.jackson.databind.util.TokenBuffer): Unit = {
-    var depth = 1
-    while (depth > 0) {
-      val t = parser.nextToken()
-      t match {
-        case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depth += 1
-        case JsonToken.END_OBJECT | JsonToken.END_ARRAY     => depth -= 1
-        case _ => ()
-      }
-      buf.copyCurrentEvent(parser)
     }
   }
 }

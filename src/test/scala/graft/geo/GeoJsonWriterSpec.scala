@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 import graft.SparkTestBase
-import graft.geo.sources.{GeoJsonReader, GeoJsonWriter}
+import graft.geo.sources.GeoJsonWriter
 import graft.geo.sql.GeoFunctions._
 
 class GeoJsonWriterSpec extends AnyFunSuite {
@@ -39,8 +39,8 @@ class GeoJsonWriterSpec extends AnyFunSuite {
     val bytes = Files.readAllBytes(files.minBy(_.getName).toPath)
     assert(bytes.count(_ == 0x1E.toByte) > 0, "no RS separators written")
     // reader auto-detects the sequence and flattens FCs (21 + 22 included)
-    val feats = GeoJsonReader.featureTexts(spark, dir + "/part-*")
-      .collect()
+    val feats = spark.read.format("geojson").load(dir + "/part-*")
+      .select("feature_json").as[String].collect()
       .map(t => get_json_object_i(t))
       .sorted
     assert(feats.toSeq == (1 to 22))
@@ -60,7 +60,8 @@ class GeoJsonWriterSpec extends AnyFunSuite {
     val df  = (1 to 40).map(featureJson).toDF("json")
     GeoJsonWriter.writeFeatureCollections(df, "json", dir, partitions = 3)
     // every part file is one valid FeatureCollection; reader re-splits them
-    val feats = GeoJsonReader.features(spark, dir + "/part-*")
+    val feats = spark.read.format("geojson").load(dir + "/part-*")
+      .select(from_geojson(col("feature_json")).getField("feature").as("feature"))
       .select(get_json_object(col("feature.properties"), "$.i").cast("int").as("i"))
       .as[Int].collect().sorted
     assert(feats.toSeq == (1 to 40))

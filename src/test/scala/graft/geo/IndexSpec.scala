@@ -3,7 +3,6 @@ package graft.geo
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
-import graft.geo.algo.GeoAlgo
 import graft.geo.index.{HexCell, S2Cell}
 
 /** Internal-invariant tests for the from-scratch cell indexes (SURVEY.md §7.1
@@ -193,27 +192,6 @@ class IndexSpec extends AnyFunSuite {
         val px = w + rng.nextDouble() * (e - w)
         val py = s + rng.nextDouble() * (n - s)
         assert(cover.contains(HexCell.cellId(px, py, res)))
-      }
-    }
-  }
-
-  test("hex: kNN ring lower bound is sound") {
-    // everything OUTSIDE the k-ring of cell(p) is at least ringLowerBound away
-    for (_ <- 1 to 300) {
-      val res = 4 + rng.nextInt(4)
-      val lng = randLng(); val lat = randLat()
-      val id  = HexCell.cellId(lng, lat, res)
-      val k   = 1 + rng.nextInt(6)
-      val lb  = HexCell.ringLowerBoundMetres(lat, res, k)
-      // sample points whose cell is outside the k-ring; none may be closer than lb
-      for (_ <- 1 to 30) {
-        val qlng = lng + (rng.nextDouble() - 0.5) * 20 * HexCell.sizeDeg(res)
-        val qlat = math.max(-85, math.min(85, lat + (rng.nextDouble() - 0.5) * 20 * HexCell.sizeDeg(res)))
-        val qid  = HexCell.cellId(qlng, qlat, res)
-        if (HexCell.gridDistance(id, qid) > k) {
-          val d = GeoAlgo.haversine(lng, lat, qlng, qlat)
-          assert(d >= lb - 1e-6, s"point at $d m violates ring-$k lower bound $lb m (res=$res lat=$lat)")
-        }
       }
     }
   }

@@ -632,6 +632,34 @@ class OverlaySpec extends AnyFunSuite {
         .count()
       assert(bad == 0, s"res=$res: $bad membership mismatches vs member OR")
     }
+    // a ring with a hole in one shard and the member filling the hole in
+    // another (their centroids share a res-0 cell but not a res-9 one):
+    // phase 1 keeps the hole, phase 2 must still fill it as the holistic
+    // union does
+    val holed = Seq(
+      (9L, polyJson(boxPts(0, 0, 10, 10), Seq(boxPts(4, 4, 6, 6).reverse))),
+      (9L, polyJson(boxPts(4, 4, 30, 6))))
+      .toDF("g", "json").select($"g", from_geojson_geom($"json").as("geom"))
+    val cells = (res: Int) => holed.select(st_centroid($"geom").as("c"))
+      .select(hex_cell(element_at($"c", 1), element_at($"c", 2), lit(res)))
+      .as[Long].collect().distinct.length
+    assert(cells(0) == 1 && cells(9) == 2)
+    val holistic = holed.groupBy("g")
+      .agg(st_union_rings(flatten(collect_list(st_rings($"geom")))).as("whole"))
+    for (res <- Seq(0, 9)) {
+      val got = graft.geo.sql.GeoFunctions.dissolveSharded(holed, "geom", res, "g")
+        .join(holistic, Seq("g"))
+      val r = got.select(st_area($"geom"), st_area($"whole")).head()
+      approx(r.getDouble(0), r.getDouble(1), 1e-9, s"res=$res")
+      approx(r.getDouble(0), 100.0 + 52.0 - 12.0, 1e-9, s"res=$res")
+      val probes = (0 until 300).map(_ => (9L, rnd.nextDouble() * 40 - 5, rnd.nextDouble() * 20 - 5)) ++
+        Seq((9L, 5.0, 5.0), (9L, 4.5, 5.5))
+      val bad = probes.toDF("g", "px", "py").join(got, Seq("g"))
+        .where(st_contains($"geom", $"px", $"py") =!= st_contains($"whole", $"px", $"py"))
+        .count()
+      assert(bad == 0, s"res=$res: $bad membership mismatches vs the holistic union")
+      assert(got.where(st_contains($"geom", lit(5.0), lit(5.0))).count() == 1, s"res=$res: hole left open")
+    }
     // plan pin: phase 1 groups by (key, __dshard) — no group ever collects
     // the whole boundary's rings in one row
     val plan = graft.geo.sql.GeoFunctions.dissolve(boxes, "geom", "g")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
-import graft.geo.sources.GeoJsonReader
 import graft.geo.sql.GeoFunctions._
 import graft.streaming.GeoStreams
 
@@ -29,6 +28,14 @@ class ReaderStreamsSpec extends AnyFunSuite {
     p.toString
   }
 
+  // the feature texts the geojson source reads under `path`, in file order
+  private def featureTexts(path: String, options: (String, String)*): Array[String] =
+    spark.read.format("geojson").options(options.toMap).load(path)
+      .select("feature_json").as[String].collect()
+
+  private def featureJson(path: String) =
+    spark.read.format("geojson").load(path).select($"feature_json".as("json"))
+
   test("mapProps on a corpus with malformed docs: PERMISSIVE null rows, no replacement-side error") {
     // the round-4 codegen promotion evaluates the replacement for every row
     // (Spark Column semantics); doc-derived replacements stay null-safe
@@ -47,9 +54,10 @@ class ReaderStreamsSpec extends AnyFunSuite {
   }
 
   test("feature splitter: one row per feature, constant memory, texts parse") {
-    val feats = GeoJsonReader.featureTexts(spark, fixturePath).collect()
+    val feats = featureTexts(fixturePath)
     assert(feats.length == 1)
-    val top = GeoJsonReader.features(spark, fixturePath)
+    val top = featureJson(fixturePath)
+      .select(from_geojson(col("json")).getField("feature").as("feature"))
       .select(col("feature.geometry.gtype"), col("feature.properties"))
       .collect()(0)
     assert(top.getByte(0) == 5) // Polygon
@@ -71,7 +79,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("seq.json"),
       s"$rs$f1\n$rs$f2\n$rs$f3\n".getBytes("UTF-8"))
     Seq("fc.json", "nd.json", "seq.json").foreach { f =>
-      val texts = GeoJsonReader.featureTexts(spark, dir.resolve(f).toString).collect()
+      val texts = featureTexts(dir.resolve(f).toString)
       assert(texts.length == 3, s"$f: ${texts.length}")
       texts.foreach(t => assert(graft.geo.json.GeoJsonCodec.parse(t).isRight, s"$f: $t"))
       val noms = texts.flatMap(t =>
@@ -81,7 +89,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
     // an FC whose first member is "features" (type later) still splits
     java.nio.file.Files.write(dir.resolve("fc2.json"),
       s"""{"features":[$f1,$f2],"type":"FeatureCollection"}""".getBytes("UTF-8"))
-    assert(GeoJsonReader.featureTexts(spark, dir.resolve("fc2.json").toString).collect().length == 2)
+    assert(featureTexts(dir.resolve("fc2.json").toString).length == 2)
     // leading whitespace / BOM / UTF-16 before the FC must still SPLIT (the
     // container routing is token-level, not raw-first-byte): regression for
     // the first-byte sniff that emitted the whole doc as one row
@@ -92,7 +100,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("fc_u16.json"),
       Array[Byte](0xFE.toByte, 0xFF.toByte) ++ fcDoc.getBytes("UTF-16BE"))
     Seq("fc_ws.json", "fc_bom.json", "fc_u16.json").foreach { f =>
-      val n = GeoJsonReader.featureTexts(spark, dir.resolve(f).toString).collect().length
+      val n = featureTexts(dir.resolve(f).toString).length
       assert(n == 3, s"$f split into $n rows, expected 3 features")
     }
     // RFC 8142 allows each RS text to be ANY GeoJSON: a sequence of
@@ -101,29 +109,29 @@ class ReaderStreamsSpec extends AnyFunSuite {
       (s"$rs" + s"""{"type":"FeatureCollection","features":[$f1],"bbox":[0,0,2,2]}""" + "\n" +
        s"$rs" + s"""{"type":"FeatureCollection","features":[$f2,$f3]}""" + "\n" +
        s"$rs$f1\n").getBytes("UTF-8"))
-    assert(GeoJsonReader.featureTexts(spark, dir.resolve("seq_fc.json").toString)
-      .collect().length == 4, "RS sequence of FCs + a feature must flatten to 4")
+    assert(featureTexts(dir.resolve("seq_fc.json").toString).length == 4,
+      "RS sequence of FCs + a feature must flatten to 4")
     // ND-JSON features whose members are NOT type-first (external writers)
     val f4 = """{"geometry":{"type":"Point","coordinates":[5,6]},"type":"Feature","properties":{"nom":"D"}}"""
     java.nio.file.Files.write(dir.resolve("nd2.json"), s"$f4\n$f1\n".getBytes("UTF-8"))
-    val nd2 = GeoJsonReader.featureTexts(spark, dir.resolve("nd2.json").toString).collect()
+    val nd2 = featureTexts(dir.resolve("nd2.json").toString)
     assert(nd2.length == 2 && nd2.exists(_.contains(""""nom":"D"""")), nd2.mkString("|"))
     // features-member-first FC followed by another root (concatenated)
     java.nio.file.Files.write(dir.resolve("fc3.json"),
       (s"""{"features":[$f1],"type":"FeatureCollection"}""" + "\n" + f2).getBytes("UTF-8"))
-    assert(GeoJsonReader.featureTexts(spark, dir.resolve("fc3.json").toString).collect().length == 2)
+    assert(featureTexts(dir.resolve("fc3.json").toString).length == 2)
     // a non-object FEATURES ELEMENT stops emission but keeps the stream in
     // sync: the trailing FC members and the NEXT root value still arrive
     java.nio.file.Files.write(dir.resolve("fc_mixed.json"),
       (s"""{"type":"FeatureCollection","features":[$f1,42,$f2],"bbox":[0,0,9,9]}""" + "\n" + f3)
         .getBytes("UTF-8"))
-    val mixed = GeoJsonReader.featureTexts(spark, dir.resolve("fc_mixed.json").toString).collect()
+    val mixed = featureTexts(dir.resolve("fc_mixed.json").toString)
     assert(mixed.length == 2, s"expected f1 + the next root, got ${mixed.length}: ${mixed.mkString("|")}")
     assert(mixed.exists(_.contains(""""nom":"A"""")) && mixed.exists(_.contains(""""nom":"C"""")))
     // a non-object root still fails loudly (reference: document must be object)
     java.nio.file.Files.write(dir.resolve("arr.json"), s"[$f1,$f2]".getBytes("UTF-8"))
     val ex = intercept[org.apache.spark.SparkException] {
-      GeoJsonReader.featureTexts(spark, dir.resolve("arr.json").toString).collect()
+      featureTexts(dir.resolve("arr.json").toString)
     }
     assert(ex.getMessage.contains("GeoJSON document must be an object") ||
       Option(ex.getCause).exists(_.getMessage.contains("GeoJSON document must be an object")))
@@ -140,8 +148,8 @@ class ReaderStreamsSpec extends AnyFunSuite {
 
   test("UTF-16BE/LE input (BOM and BOM-less) reads through the file path") {
     // the reference guesses the encoding from the first bytes
-    // (uutfe.ml:415-430: BOM, or the RFC 4627 null-byte pattern); Jackson's
-    // byte-source bootstrapper applies the same detection on our file path
+    // (uutfe.ml:415-430: BOM, or the RFC 4627 null-byte pattern); the
+    // geojson source sniffs the same rules itself and reads UTF-8/16BE/16LE
     val doc =
       """{"type":"FeatureCollection","features":[
         |{"type":"Feature","properties":{"nom":"Foix"},
@@ -152,7 +160,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
     java.nio.file.Files.write(be, bom ++ doc.getBytes("UTF-16BE")) // BOM'd
     java.nio.file.Files.write(le, doc.getBytes("UTF-16LE"))        // null-pattern only
     Seq(be, le).foreach { p =>
-      val feats = GeoJsonReader.featureTexts(spark, p.toString).collect()
+      val feats = featureTexts(p.toString)
       assert(feats.length == 1, p.toString)
       assert(graft.geo.json.GeoJsonCodec.parse(feats(0)).isRight, feats(0))
       assert(feats(0).contains(""""nom":"Foix""""), feats(0))
@@ -160,7 +168,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
   }
 
   test("map_props: capitalise nom (expect golden: Foix→FOIX)") {
-    val df = GeoJsonReader.featureTexts(spark, fixturePath).toDF("json")
+    val df = featureJson(fixturePath)
     val out = GeoStreams.mapProps(df, "json", p =>
       concat(lit("""{"code":""""), get_json_object(p, "$.code"),
         lit("""","nom":""""), upper(get_json_object(p, "$.nom")), lit(""""}""")))
@@ -171,7 +179,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
   }
 
   test("map_geometry: strip Polygon coordinates to [] (expect golden)") {
-    val df = GeoJsonReader.featureTexts(spark, fixturePath).toDF("json")
+    val df = featureJson(fixturePath)
     val emptied = GeoStreams.mapGeometry(df, "json", g =>
       g.withField("coords", array().cast("array<double>"))
         .withField("pos_offsets", array(lit(0)).cast("array<int>"))
@@ -184,7 +192,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
   }
 
   test("fold_props: collect nom values (expect golden)") {
-    val df  = GeoJsonReader.featureTexts(spark, fixturePath).toDF("json")
+    val df  = featureJson(fixturePath)
     val out = GeoStreams.foldProps(df, "json", p =>
       Seq(collect_list(get_json_object(p, "$.nom")).as("noms")))
       .as[Seq[String]].collect()(0)
@@ -192,7 +200,7 @@ class ReaderStreamsSpec extends AnyFunSuite {
   }
 
   test("iter_geometry / iter_props visit in document order") {
-    val df = GeoJsonReader.featureTexts(spark, fixturePath).toDF("json")
+    val df = featureJson(fixturePath)
     val seenG = scala.collection.mutable.ArrayBuffer[String]()
     GeoStreams.iterGeometry(df, "json")(seenG += _)
     assert(seenG.length == 1 && seenG(0).startsWith("""{"type":"Polygon""""))
@@ -352,8 +360,8 @@ class ReaderStreamsSpec extends AnyFunSuite {
     // source text as it is
     (0 until 10).foreach { d =>
       val p = dir.resolve(s"fc$d.geojson").toString
-      val strict = GeoJsonReader.featureTexts(spark, p).collect().toSeq
-      val resync = GeoJsonReader.featureTexts(spark, p, resync = true).collect().toSeq
+      val strict = featureTexts(p).toSeq
+      val resync = featureTexts(p, "mode" -> "resync").toSeq
       assert(strict == resync, s"fc$d: strict ${strict.length} vs resync ${resync.length}")
       assert(strict.nonEmpty)
     }
@@ -387,7 +395,8 @@ class ReaderStreamsSpec extends AnyFunSuite {
         |{"type":"Feature","properties":{"i":3}}]}""".stripMargin
     val dir = Files.createTempDirectory("geojson_multi")
     Files.writeString(dir.resolve("fc.geojson"), fc)
-    val rows = GeoJsonReader.features(spark, dir.toString + "/fc.geojson")
+    val rows = featureJson(dir.toString + "/fc.geojson")
+      .select(from_geojson(col("json")).getField("feature").as("feature"))
       .select(get_json_object(col("feature.properties"), "$.i").as("i"),
         col("feature.geometry").isNull.as("nogeom"))
       .orderBy("i").collect()
