@@ -51,7 +51,7 @@ object SpatialJoins {
 
     val res0 = if (res >= 0) res else resForPolys(polys, geomCol)
     val polyCells0 = polys.withColumn("__cell", explode(hex_cover(col(geomCol), lit(res0))))
-    val ptCells0   = points.withColumn("__cell", hex_cell(col(lngCol), col(latCol), lit(res0)))
+    val ptCells0   = points.withColumn("__cell", hex_cell(coord(lngCol), coord(latCol), lit(res0)))
 
     val (ptCells, polyCells) =
       if (saltBuckets <= 1) (ptCells0.withColumn("__salt", lit(0)),
@@ -81,10 +81,20 @@ object SpatialJoins {
 
     val rhs    = if (broadcastPolys) broadcast(polyCells) else polyCells
     val joined = ptCells.join(rhs, Seq("__cell", "__salt"))
-      .where(st_contains(col(geomCol), col(lngCol), col(latCol)))
+      .where(st_contains(col(geomCol), coord(lngCol), coord(latCol)))
       .drop("__cell", "__salt")
     joined
   }
+
+  /** A point coordinate as every join hands it to a keying or refining
+    * engine function. Those functions are null-intolerant StaticInvokes:
+    * on a raw column, Catalyst infers isnotnull(lng/lat) from the join key
+    * or the refine and pushes it below the projection that derives the
+    * coordinates, which then runs twice per row (costly when they are
+    * parsed from a string, as ImageGen's are). Behind this coalesce nothing
+    * is inferred. A null coordinate reads as NaN, which st_contains and
+    * every haversine bound reject, so a null point still matches nothing. */
+  private[graft] def coord(c: String): Column = coalesce(col(c), lit(Double.NaN))
 
   /** Multi-level PIP join for MIXED-size polygon sets: polygon covers carry
     * interior cells at coarse levels and boundary cells refined to
@@ -110,7 +120,7 @@ object SpatialJoins {
       explode(s2_ancestors(col(lngCol), col(latCol), lit(minLevel), lit(maxLevel))))
     val rhs = if (broadcastPolys) broadcast(polyCells) else polyCells
     ptCells.join(rhs, Seq("__cell"))
-      .where(st_contains(col(geomCol), col(lngCol), col(latCol)))
+      .where(st_contains(col(geomCol), coord(lngCol), coord(latCol)))
       .drop("__cell")
   }
 
@@ -371,9 +381,9 @@ object SpatialJoins {
     val res = spark.read.parquet(s"$path/params").head.getAs[Int]("res")
     val idx0 = spark.read.parquet(s"$path/cells")
     val idx  = if (broadcastIndex) broadcast(idx0) else idx0
-    points.withColumn("__cell", hex_cell(col(lngCol), col(latCol), lit(res)))
+    points.withColumn("__cell", hex_cell(coord(lngCol), coord(latCol), lit(res)))
       .join(idx, Seq("__cell"))
-      .where(st_contains(col("__geom"), col(lngCol), col(latCol)))
+      .where(st_contains(col("__geom"), coord(lngCol), coord(latCol)))
       .drop("__cell", "__geom")
   }
 
@@ -429,7 +439,7 @@ object SpatialJoins {
       .withColumn("__cell", explode(s2_cover_box(w0, sBound, e0, nBound,
         lit(minLevel), lit(maxLevel))))
       .join(pts, col("__cell") === col("__pcell"))
-      .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
+      .withColumn("dist_m", haversine(coord(qLng), coord(qLat), coord(pLng), coord(pLat)))
       .where(col("dist_m") <= maxDistM)
       .drop("__cell", "__pcell")
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
 import graft.geo.index.S2Cell
-import graft.geo.sql.{GeomAccess, S2CellExpr, StContains}
+import graft.geo.sql.{GeomAccess, S2CellExpr, StaticCall}
 
 /** The one genuinely custom Catalyst rewrite (SURVEY.md §4): a
   * `Filter(st_contains(geom, lng, lat))` with a CONSTANT geometry gains a
@@ -21,6 +21,11 @@ import graft.geo.sql.{GeomAccess, S2CellExpr, StContains}
   * so the exact ray-cast runs on candidates only. Semantically a no-op:
   * covers are sound supersets (IndexSpec), so the conjunction never drops a
   * contained point.
+  *
+  * Optimizer rules run after `ReplaceExpressions`, so the rule matches the
+  * functions by their replacement calls: st_contains is
+  * `GeomAccess.contains(geom, lng, lat)` and the prefilter it adds is
+  * `S2CellExpr(...).replacement`, an `S2Cell.cellId` call.
   */
 object PipPrefilterRule extends Rule[LogicalPlan] {
 
@@ -30,7 +35,8 @@ object PipPrefilterRule extends Rule[LogicalPlan] {
     case f @ Filter(cond, child) if !hasCellPrefilter(cond) =>
       var changed = false
       val rewritten = cond.transformUp {
-        case sc @ StContains(geom, lng, lat) if geom.foldable =>
+        case sc if StaticCall.isCall(sc, GeomAccess, "contains") && sc.children.head.foldable =>
+          val Seq(geom, lng, lat) = sc.children
           prefilterFor(geom, lng, lat) match {
             case Some(pre) => changed = true; And(pre, sc)
             case None      => sc
@@ -42,9 +48,9 @@ object PipPrefilterRule extends Rule[LogicalPlan] {
   /** Idempotence guard: skip filters that already carry an s2_cell InSet. */
   private def hasCellPrefilter(cond: Expression): Boolean =
     cond.exists {
-      case InSet(_: S2CellExpr, _) => true
-      case In(_: S2CellExpr, _)    => true
-      case _                       => false
+      case InSet(c, _) => StaticCall.isCall(c, S2Cell, "cellId")
+      case In(c, _)    => StaticCall.isCall(c, S2Cell, "cellId")
+      case _           => false
     }
 
   private def prefilterFor(geom: Expression, lng: Expression, lat: Expression): Option[Expression] =
@@ -61,7 +67,7 @@ object PipPrefilterRule extends Rule[LogicalPlan] {
         cover = coverAll(boxes, level)
       }
       if (cover.isEmpty) None
-      else Some(InSet(S2CellExpr(lng, lat, Literal(level, IntegerType)),
+      else Some(InSet(S2CellExpr(lng, lat, Literal(level, IntegerType)).replacement,
         cover.map(java.lang.Long.valueOf(_): Any)))
     } catch { case _: Exception => None }
 

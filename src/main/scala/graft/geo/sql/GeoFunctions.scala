@@ -64,18 +64,12 @@ object GeoFunctions {
     "tile_cover"        -> (es => TileCoverExpr(es(0), es(1))),
     "tile_cover_box"    -> (es => TileCoverBoxExpr(es(0), es(1), es(2), es(3), es(4))))
 
-  @volatile private var registered: Set[Int] = Set.empty
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val key = System.identityHashCode(spark)
-    if (!registered.contains(key)) synchronized {
-      builders.foreach { case (name, b) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-      registered += key
+  /** Registers the functions in the session (idempotent: a re-register
+    * replaces them). */
+  def register(spark: SparkSession): Unit =
+    builders.foreach { case (name, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
-  }
 
   // ------------------------------------------------------- Column wrappers
 

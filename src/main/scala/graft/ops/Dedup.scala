@@ -302,10 +302,11 @@ object Dedup {
       lngCol: String, latCol: String,
       maxHamming: Int = 3, maxDistM: Double = 500.0, res: Int = 6): DataFrame = {
     import graft.geo.sql.GeoFunctions.{hex_cell, hex_kring, haversine}
+    import graft.geo.join.SpatialJoins.coord
     val bands = 4
     val a = df.select(col(idCol).as("id_a"), col(phashCol).as("pa"),
         col(lngCol).as("la_lng"), col(latCol).as("la_lat"))
-      .withColumn("__cell", hex_cell(col("la_lng"), col("la_lat"), lit(res)))
+      .withColumn("__cell", hex_cell(coord("la_lng"), coord("la_lat"), lit(res)))
       .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
       .withColumn("__bh", expr("shiftrightunsigned(pa, __band * 16) & 65535"))
     val reach = 2.0 * graft.geo.index.HexCell.sizeDeg(res)
@@ -320,7 +321,7 @@ object Dedup {
     a.join(b, Seq("__cell", "__band", "__bh"))
       .where(col("id_a") < col("id_b"))
       .withColumn("hamming", bit_count(col("pa").bitwiseXOR(col("pb"))))
-      .withColumn("dist_m", haversine(col("la_lng"), col("la_lat"), col("lb_lng"), col("lb_lat")))
+      .withColumn("dist_m", haversine(coord("la_lng"), coord("la_lat"), coord("lb_lng"), coord("lb_lat")))
       .where(col("hamming") <= maxHamming && col("dist_m") <= maxDistM)
       .select("id_a", "id_b", "hamming", "dist_m")
       .dropDuplicates("id_a", "id_b")

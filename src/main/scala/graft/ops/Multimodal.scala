@@ -686,16 +686,12 @@ object Multimodal {
     "video_motion"     -> (es => VideoMotion(es.head)),
     "video_cuts"       -> (es => VideoCuts(es(0), es(1))))
 
-  @volatile private var registered: Set[Int] = Set.empty
-  def register(spark: SparkSession): Unit = {
-    val key = System.identityHashCode(spark)
-    if (!registered.contains(key)) synchronized {
-      builders.foreach { case (name, b) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-      registered += key
+  /** Registers the functions in the session (idempotent: a re-register
+    * replaces them). */
+  def register(spark: SparkSession): Unit =
+    builders.foreach { case (name, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
-  }
 
   def image_meta(bytes: Column): Column      = call_function("image_meta", bytes)
   def image_psnr(a: Column, b: Column): Column = call_function("image_psnr", a, b)

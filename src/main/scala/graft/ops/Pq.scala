@@ -1,12 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, BinaryExpression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.codegen
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-import graft.geo.sql.GeoExpression
+import graft.geo.sql.StaticCall
 
 /** Product-quantization kernels for the persisted ANN index: an embedding
   * splits into `m` subspaces of `dsub` dims; each subspace quantizes to one
@@ -28,8 +28,9 @@ object PqKernels {
     * `base` (RESIDUAL encoding — `vec` is v − c_list), the norm is
     * ||base + recon(code)|| — the norm of the full reconstructed vector the
     * ADC scorer divides by. */
-  def encode(vec: ArrayData, books: Array[Float], m: Int, dsub: Int,
+  def encode(vec: ArrayData, codebook: PqBooks, m: Int, dsub: Int,
              base: ArrayData): InternalRow = {
+    val books = codebook.floats
     val code = new Array[Byte](m)
     var rn = 0.0
     var j = 0
@@ -63,8 +64,12 @@ object PqKernels {
     new GenericInternalRow(Array[Any](code, math.sqrt(rn)))
   }
 
+  def encode(vec: ArrayData, codebook: PqBooks, m: Int, dsub: Int): InternalRow =
+    encode(vec, codebook, m, dsub, null)
+
   /** Per-QUERY ADC lookup table: lut[j * 256 + c] = dot(q_j, book[j][c]). */
-  def lut(vec: ArrayData, books: Array[Float], m: Int, dsub: Int): ArrayData = {
+  def lut(vec: ArrayData, codebook: PqBooks, m: Int, dsub: Int): ArrayData = {
+    val books = codebook.floats
     val out = new Array[Double](m * 256)
     var j = 0
     while (j < m) {
@@ -91,45 +96,57 @@ object PqKernels {
   }
 }
 
-/** Mixin caching the flattened codebook from a FOLDABLE child — the
-  * codebook rides into the plan as one literal array<float>, converted to a
-  * primitive float[] once per expression instance, not per row. */
+/** A flattened codebook as a primitive float[]. Equal floats make equal
+  * codebooks, so the SELECT-list and GROUP BY copies of one call stay
+  * semantically equal. */
+final class PqBooks(val floats: Array[Float]) extends Serializable {
+  override def equals(o: Any): Boolean = o match {
+    case b: PqBooks => java.util.Arrays.equals(b.floats, floats)
+    case _          => false
+  }
+  override def hashCode: Int = java.util.Arrays.hashCode(floats)
+  override def toString: String = s"pq_books(${floats.length})"
+}
+
+/** Mixin for the codebook argument, which must be constant: the flattened
+  * codebook rides into the plan as one literal array<float>, converted to
+  * a [[PqBooks]] once per expression instance, when the function is
+  * planned — rows never re-convert it. */
 trait PqBooksArg { self: Expression =>
   def books: Expression
-  @transient protected lazy val booksArr: Array[Float] = {
-    require(books.foldable, "PQ codebook argument must be a literal")
-    books.eval(null).asInstanceOf[ArrayData].toFloatArray()
+  protected def booksLiteral: Literal = StaticCall.constant(books) match {
+    case Some(a: ArrayData) => Literal(new PqBooks(a.toFloatArray()), ObjectType(classOf[PqBooks]))
+    case _ => throw new IllegalArgumentException("PQ codebook argument must be a literal")
   }
 }
 
 /** `pq_encode(vec, books, m, dsub[, base])` → struct<code: binary,
   * rnorm: double>. With the optional 5th argument `vec` is a RESIDUAL and
   * `base` the coarse centroid it was taken against (rnorm = ||base +
-  * recon||). Build-time (one pass over the corpus at train); interpreted. */
-case class PqEncode(children: Seq[Expression]) extends GeoExpression with PqBooksArg {
+  * recon||). Build-time (one pass over the corpus at train). */
+case class PqEncode(children: Seq[Expression])
+    extends RuntimeReplaceable with ImplicitCastInputTypes with PqBooksArg {
   require(children.length == 4 || children.length == 5,
     s"pq_encode takes (vec, books, m, dsub[, base]), got ${children.length} args")
   override def books: Expression = children(1)
-  override def dataType: DataType = StructType(Seq(
+  override def inputTypes =
+    Seq(ArrayType(FloatType), ArrayType(FloatType), IntegerType, IntegerType, ArrayType(FloatType))
+      .take(children.length)
+  override lazy val replacement: Expression = StaticCall(PqKernels, StructType(Seq(
     StructField("code", BinaryType, nullable = false),
-    StructField("rnorm", DoubleType, nullable = false)))
-  override protected def evalNotNull(v: Array[Any]): Any =
-    PqKernels.encode(v(0).asInstanceOf[ArrayData], booksArr,
-      v(2).asInstanceOf[Int], v(3).asInstanceOf[Int],
-      if (v.length > 4) v(4).asInstanceOf[ArrayData] else null)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(c)
+    StructField("rnorm", DoubleType, nullable = false))),
+    "encode", children.updated(1, booksLiteral))
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c)
 }
 
 /** `pq_lut(qvec, books, m, dsub)` → array<double> of m*256 — once per
-  * query row; interpreted (query side is the small side by construction). */
+  * query row (query side is the small side by construction). */
 case class PqLut(vec: Expression, books: Expression, m: Expression, dsub: Expression)
-    extends GeoExpression with PqBooksArg {
+    extends RuntimeReplaceable with ImplicitCastInputTypes with PqBooksArg {
   override def children: Seq[Expression] = Seq(vec, books, m, dsub)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def evalNotNull(v: Array[Any]): Any =
-    PqKernels.lut(v(0).asInstanceOf[ArrayData], booksArr,
-      v(2).asInstanceOf[Int], v(3).asInstanceOf[Int])
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType), IntegerType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(PqKernels,
+    ArrayType(DoubleType, containsNull = false), "lut", Seq(vec, booksLiteral, m, dsub))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), c(1), c(2), c(3))
 }

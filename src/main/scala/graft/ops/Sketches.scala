@@ -642,18 +642,12 @@ object Sketches {
     "kll_rank"       -> (es => KllRank(es(0), es(1))),
     "kll_n"          -> (es => KllN(es.head)))
 
-  @volatile private var registered: Set[Int] = Set.empty
-
-  /** Idempotent per-session registration. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val key = System.identityHashCode(spark)
-    if (!registered.contains(key)) synchronized {
-      builders.foreach { case (name, b) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-      registered += key
+  /** Registers the functions in the session (idempotent: a re-register
+    * replaces them). */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    builders.foreach { case (name, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
-  }
 
   // --------------------------------------------------------- Column API
 

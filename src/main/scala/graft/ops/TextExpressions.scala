@@ -2,16 +2,17 @@ package graft.ops
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.geo.sql.GeoExpression
+import graft.geo.sql.StaticCall
 
 /** Text/vector kernels for the large-scale training-data operators
   * (dedup, similarity, language-ID, fingerprinting). Pure single-pass
   * functions implemented as Catalyst expressions (preference order of the
-  * build brief: native Expression > UDF), interpreted via CodegenFallback.
+  * build brief: native Expression > UDF), each called as a static method
+  * from generated code.
   */
 object TextKernels {
 
@@ -415,6 +416,10 @@ object TextKernels {
   def winnowArray(t: UTF8String, k: Int, w: Int): GenericArrayData =
     new GenericArrayData(winnow(t.toString, k, w))
   def langIdU(t: UTF8String): UTF8String = UTF8String.fromString(langId(t.toString))
+  def ngramJaccard(a: UTF8String, b: UTF8String, n: Int): Double =
+    ngramJaccard(a.toString, b.toString, n)
+  def commonSubstring(a: UTF8String, b: UTF8String, len: Int): Boolean =
+    hasCommonSubstring(a.toString, b.toString, len)
   def hyperplaneSigAd(v: org.apache.spark.sql.catalyst.util.ArrayData,
                       bits: Int, seed: Long): Long =
     hyperplaneSig(v.toFloatArray(), bits, seed)
@@ -479,12 +484,12 @@ case class SimHash64(text: Expression, shingle: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
-case class NgramJaccard(a: Expression, b: Expression, n: Expression) extends GeoExpression {
+case class NgramJaccard(a: Expression, b: Expression, n: Expression)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(a, b, n)
-  override def dataType: DataType        = DoubleType
-  override protected def evalNotNull(v: Array[Any]): Any =
-    TextKernels.ngramJaccard(v(0).asInstanceOf[UTF8String].toString,
-      v(1).asInstanceOf[UTF8String].toString, v(2).asInstanceOf[Int])
+  override def inputTypes = Seq(StringType, StringType, IntegerType)
+  override lazy val replacement: Expression =
+    StaticCall(TextKernels, DoubleType, "ngramJaccard", children)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
 }
 
@@ -511,12 +516,11 @@ case class WinnowFingerprint(text: Expression, k: Expression, w: Expression)
 /** `common_substring(a, b, len)` — true iff the two texts share a verified
   * (char-exact) common substring of at least `len` characters. */
 case class CommonSubstring(a: Expression, b: Expression, len: Expression)
-    extends GeoExpression {
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(a, b, len)
-  override def dataType: DataType        = BooleanType
-  override protected def evalNotNull(v: Array[Any]): Any =
-    TextKernels.hasCommonSubstring(v(0).asInstanceOf[UTF8String].toString,
-      v(1).asInstanceOf[UTF8String].toString, v(2).asInstanceOf[Int])
+  override def inputTypes = Seq(StringType, StringType, IntegerType)
+  override lazy val replacement: Expression =
+    StaticCall(TextKernels, BooleanType, "commonSubstring", children)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
 }
 
@@ -751,16 +755,12 @@ object TextFunctions {
     "pq_adc"         -> (es => PqAdc(es(0), es(1))),
     "pq_code_at"     -> (es => PqCodeAt(es(0), es(1))))
 
-  @volatile private var registered: Set[Int] = Set.empty
-  def register(spark: SparkSession): Unit = {
-    val key = System.identityHashCode(spark)
-    if (!registered.contains(key)) synchronized {
-      builders.foreach { case (name, b) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-      registered += key
+  /** Registers the functions in the session (idempotent: a re-register
+    * replaces them). */
+  def register(spark: SparkSession): Unit =
+    builders.foreach { case (name, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
-  }
 
   def mix64_col(x: Column): Column = call_function("mix64", x)
   def minhash_sig(text: Column, numHashes: Column, shingle: Column): Column =

@@ -57,8 +57,8 @@ object TextOps {
   /** Whitespace token count only — pure built-ins, never touches the BPE
     * kernel. Callers that only need `n_tokens_ws` use this variant so they
     * never depend on column pruning to skip the ~10 µs/row custom kernel
-    * (GeoExpression kernels are CodegenFallback; a cached intermediate or any
-    * other non-prunable context would otherwise pay it for nothing). */
+    * (a cached intermediate or any other non-prunable context would
+    * otherwise pay it for nothing). */
   def withTokenCountWs(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("n_tokens_ws", tokenCountWs(col(textCol)))
 

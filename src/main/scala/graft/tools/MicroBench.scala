@@ -90,7 +90,8 @@ object MicroBench {
     }
     locally {
       val dim = 64; val m = 8; val dsub = 8
-      val books = Array.tabulate(m * 256 * dsub)(i => ((i * 131) % 255 - 127) / 64.0f)
+      val books = new graft.ops.PqBooks(
+        Array.tabulate(m * 256 * dsub)(i => ((i * 131) % 255 - 127) / 64.0f))
       val vec = new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.tabulate(dim)(i => ((i * 37) % 17 - 8).toFloat))
       time("pq_encode64", 20000)(id =>
