@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.expressions.Window
 
 import graft.geo.join.SpatialJoins
@@ -36,10 +38,17 @@ object SparkEntry {
     * cores AND the input is big enough for the shuffle to pay for itself —
     * a production table whose files already split into ≥ cores tasks
     * passes through untouched, so no shuffle is ever added at scale. */
-  private def spread(df: DataFrame, keys: Seq[Column] = Seq.empty,
-                     minBytes: Long = 1L << 20): DataFrame = {
+  private[graft] def spread(df: DataFrame, keys: Seq[Column] = Seq.empty,
+                            minBytes: Long = 1L << 20): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val parts = df.queryExecution.toRdd.getNumPartitions // planning only — no job
+    // the planned file scans' task counts — read off the physical plan
+    // (inside an adaptive plan too) without executing it: `toRdd` would run
+    // every shuffle stage of an aggregated input under AQE. No file scan:
+    // nothing to spread
+    val scans = scanPlans.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }
+    val parts = if (scans.isEmpty) cores else scans.max
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (parts * 2 <= cores && bytes > minBytes) {
       // hash-repartition on a caller-supplied high-cardinality key when one
@@ -49,6 +58,8 @@ object SparkEntry {
       if (keys.nonEmpty) df.repartition(cores, keys: _*) else df.repartition(cores)
     } else df
   }
+
+  private object scanPlans extends AdaptiveSparkPlanHelper
 
   /** Deterministic world-wide point per customer (same formula in SQL). */
   private def customerPoints(s: SparkSession, dir: String): DataFrame =

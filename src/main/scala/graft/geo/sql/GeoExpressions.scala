@@ -1,5 +1,6 @@
 package graft.geo.sql
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -56,6 +57,13 @@ object StaticCall {
     val r = e.transformDown { case rr: RuntimeReplaceable => rr.replacement }
     if (r.foldable) Some(r.eval(null)) else None
   }
+
+  /** Registers each (SQL name, builder) of a function registry in the
+    * session (idempotent: a re-register replaces them). */
+  def register(spark: SparkSession, builders: Seq[(String, Seq[Expression] => Expression)]): Unit =
+    builders.foreach { case (name, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
+    }
 }
 
 /** Accessors and shared helpers over a packed geometry InternalRow

@@ -64,12 +64,7 @@ object GeoFunctions {
     "tile_cover"        -> (es => TileCoverExpr(es(0), es(1))),
     "tile_cover_box"    -> (es => TileCoverBoxExpr(es(0), es(1), es(2), es(3), es(4))))
 
-  /** Registers the functions in the session (idempotent: a re-register
-    * replaces them). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-    }
+  def register(spark: SparkSession): Unit = StaticCall.register(spark, builders)
 
   // ------------------------------------------------------- Column wrappers
 

@@ -1,18 +1,18 @@
 package graft.ops
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{call_function, col, lit}
 
+import graft.geo.sql.StaticCall
 import graft.pipeline.{AudioGen, ImageGen, VideoGen}
 
-/** Static kernel entry points for the multimodal expressions' generated
-  * code (the [[graft.geo.sql.GeoRuntime]] pattern: a Scala object's static
-  * forwarders are directly callable from Janino). All decode through the
+/** Static kernels of the multimodal SQL functions (the
+  * [[graft.geo.sql.GeoRuntime]] pattern: each function's [[StaticCall]]
+  * replacement calls one, interpreted or generated). All decode through the
   * per-thread content-keyed [[graft.pipeline.DecodeCache]], so a projection
   * computing several features over one payload column decodes each row ONCE
   * — subexpression elimination only shares identical trees, not the decode
@@ -287,12 +287,12 @@ object MmRuntime {
   * Spark-side plumbing — schema, partitioning, expression signatures, batch
   * shape — is real and tested either way.
   *
-  * Every expression generates REAL code (a static [[MmRuntime]] call): one
-  * CodegenFallback in a projection ejects the whole Project from whole-stage
-  * codegen and kills subexpression elimination (CLAUDE.md — the measured
-  * re-parse pathology the codec kernels were promoted out of in r2); decode
-  * work dominates per-row here, so staying inside codegen AND sharing the
-  * decode through the per-thread cache matters doubly.
+  * Every function is a RuntimeReplaceable over one static kernel
+  * ([[MmRuntime]], or the generators' own `encode`/`phashOf`), so each
+  * compiles inside whole-stage codegen and keeps subexpression
+  * elimination; decode work dominates per-row here, so staying inside
+  * codegen AND sharing the decode through the per-thread cache matters
+  * doubly.
   */
 object Multimodal {
 
@@ -302,99 +302,57 @@ object Multimodal {
     StructField("lossy", BooleanType, nullable = false)))
 
   /** `image_meta(bytes)` → (w, h, lossy). */
-  case class ImageMeta(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = metaType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.imageMeta(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.imageMeta($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class ImageMeta(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, metaType, "imageMeta", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `image_psnr(a, b)` → dB between two decoded payloads (the per-row
     * "decoded-pixel allclose / PSNR >= 40dB" invariant, BASELINE.json:15).
     * Infinity is clamped to 99 dB so the column stays orderable. */
   case class ImagePsnr(a: Expression, b: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def left: Expression  = a
-    override def right: Expression = b
-    override def inputTypes        = Seq(BinaryType, BinaryType)
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(x: Any, y: Any): Any =
-      MmRuntime.imagePsnr(x.asInstanceOf[Array[Byte]], y.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (x, y) => s"graft.ops.MmRuntime.imagePsnr($x, $y)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(a, b)
+    override def inputTypes = Seq(BinaryType, BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, DoubleType, "imagePsnr", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   /** `image_gray_mean(bytes)` → mean luminance (a feature-extraction
     * stand-in with a closed-form expectation for tests). */
-  case class ImageGrayMean(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.imageGrayMean(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.imageGrayMean($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class ImageGrayMean(bytes: Expression)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, DoubleType, "imageGrayMean", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `image_resize(bytes, w, h)` → re-encoded GRB1 payload downsampled with
     * nearest-neighbor (deterministic). */
   case class ImageResize(bytes: Expression, w: Expression, h: Expression)
-      extends TernaryExpression with ImplicitCastInputTypes {
-    override def first: Expression  = bytes
-    override def second: Expression = w
-    override def third: Expression  = h
-    override def inputTypes         = Seq(BinaryType, IntegerType, IntegerType)
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(b: Any, x: Any, y: Any): Any =
-      MmRuntime.imageResize(b.asInstanceOf[Array[Byte]], x.asInstanceOf[Int], y.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (b, x, y) => s"graft.ops.MmRuntime.imageResize($b, $x, $y)")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-      copy(f, s, t)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes, w, h)
+    override def inputTypes = Seq(BinaryType, IntegerType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, BinaryType, "imageResize", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
   }
 
   /** `image_crop(bytes, x, y, w, h)` → cropped GRB1 payload (null when the
-    * clamped window is empty). 5-ary, so codegen is hand-written in the
-    * WithFeatureProps style — still a single static [[MmRuntime]] call. */
+    * clamped window is empty: the kernel's null is the result). */
   case class ImageCrop(bytes: Expression, x: Expression, y: Expression,
                        w: Expression, h: Expression)
-      extends Expression with ImplicitCastInputTypes {
-    override def nullable: Boolean         = true
-    override def foldable: Boolean         = children.forall(_.foldable)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
     override def children: Seq[Expression] = Seq(bytes, x, y, w, h)
-    override def inputTypes =
-      Seq(BinaryType, IntegerType, IntegerType, IntegerType, IntegerType)
-    override def dataType: DataType        = BinaryType
-    override def eval(input: InternalRow): Any = {
-      val b = bytes.eval(input)
-      val xv = x.eval(input); val yv = y.eval(input)
-      val wv = w.eval(input); val hv = h.eval(input)
-      if (b == null || xv == null || yv == null || wv == null || hv == null) null
-      else MmRuntime.imageCrop(b.asInstanceOf[Array[Byte]],
-        xv.asInstanceOf[Int], yv.asInstanceOf[Int],
-        wv.asInstanceOf[Int], hv.asInstanceOf[Int])
-    }
-    override protected def doGenCode(ctx: codegen.CodegenContext,
-                                     ev: codegen.ExprCode): codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val cs = children.map(_.genCode(ctx))
-      ev.copy(code = code"""
-        ${cs.map(_.code).reduce(_ + _)}
-        boolean ${ev.isNull} = true;
-        byte[] ${ev.value} = null;
-        if (!${cs(0).isNull} && !${cs(1).isNull} && !${cs(2).isNull} &&
-            !${cs(3).isNull} && !${cs(4).isNull}) {
-          ${ev.value} = graft.ops.MmRuntime.imageCrop(${cs(0).value},
-            ${cs(1).value}, ${cs(2).value}, ${cs(3).value}, ${cs(4).value});
-          ${ev.isNull} = (${ev.value} == null);
-        }""")
-    }
+    override def inputTypes = Seq(BinaryType, IntegerType, IntegerType, IntegerType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, BinaryType, "imageCrop", children)
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
       copy(c(0), c(1), c(2), c(3), c(4))
   }
@@ -404,31 +362,24 @@ object Multimodal {
     * [[MmRuntime.imageAhash]]). Banding this hash like the catalog `phash`
     * column makes perceptual dedup end-to-end real: the signature is
     * computed from the payload, not trusted from the table. */
-  case class ImageAhash(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.imageAhash(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.imageAhash($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class ImageAhash(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, LongType, "imageAhash", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `image_histogram(bytes, nbins)` → exact integer luma histogram
     * (ARRAY<BIGINT> of pixel counts, bin = luma·nbins/255001) — the
     * exposure/quality-audit feature for image-corpus curation. */
   case class ImageHistogram(bytes: Expression, nbins: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def left: Expression  = bytes
-    override def right: Expression = nbins
-    override def inputTypes        = Seq(BinaryType, IntegerType)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(b: Any, n: Any): Any =
-      MmRuntime.imageHistogram(b.asInstanceOf[Array[Byte]], n.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (b, n) => s"graft.ops.MmRuntime.imageHistogram($b, $n)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes, nbins)
+    override def inputTypes = Seq(BinaryType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, ArrayType(LongType, containsNull = false), "imageHistogram", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   // ---- audio (PCA1 payloads, graft.pipeline.AudioGen) -------------------
@@ -438,80 +389,62 @@ object Multimodal {
     StructField("n_samples", IntegerType, nullable = false)))
 
   /** `audio_meta(bytes)` → (rate, n_samples). */
-  case class AudioMeta(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = audioMetaType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.audioMeta(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.audioMeta($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class AudioMeta(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, audioMetaType, "audioMeta", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `audio_energy(bytes)` → Σ sample² as a LONG — exact integer, so the
     * driver oracle reproduces it with pure SQL arithmetic. */
-  case class AudioEnergy(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.audioEnergy(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.audioEnergy($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class AudioEnergy(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, LongType, "audioEnergy", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `audio_peaks(bytes)` → count of strict-rise local maxima (exact int). */
-  case class AudioPeaks(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = IntegerType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.audioPeaks(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.audioPeaks($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class AudioPeaks(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, IntegerType, "audioPeaks", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `audio_zero_crossings(bytes)` → count of consecutive-sample sign
     * changes (exact int; zero is non-negative). */
-  case class AudioZeroCrossings(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = IntegerType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.audioZeroCrossings(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.audioZeroCrossings($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class AudioZeroCrossings(bytes: Expression)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, IntegerType, "audioZeroCrossings", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `audio_rms(bytes)` → sqrt(energy / n) (feature-extraction stand-in). */
-  case class AudioRms(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.audioRms(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.audioRms($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class AudioRms(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, DoubleType, "audioRms", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `audio_downsample(bytes, k)` → every k-th sample re-encoded at rate/k
     * (deterministic decimation without filtering). */
   case class AudioDownsample(bytes: Expression, k: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def left: Expression  = bytes
-    override def right: Expression = k
-    override def inputTypes        = Seq(BinaryType, IntegerType)
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(b: Any, kk: Any): Any =
-      MmRuntime.audioDownsample(b.asInstanceOf[Array[Byte]], kk.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (b, kk) => s"graft.ops.MmRuntime.audioDownsample($b, $kk)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes, k)
+    override def inputTypes = Seq(BinaryType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, BinaryType, "audioDownsample", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   // ---- video (VID1 payloads, graft.pipeline.VideoGen) -------------------
@@ -522,144 +455,103 @@ object Multimodal {
     StructField("n_frames", IntegerType, nullable = false)))
 
   /** `video_meta(bytes)` → (w, h, n_frames). */
-  case class VideoMeta(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = videoMetaType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.videoMeta(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.videoMeta($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class VideoMeta(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, videoMetaType, "videoMeta", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `video_frame(bytes, i)` → frame i as a lossless GRB1 IMAGE payload, so
     * the image expression surface composes (null when i out of range —
-    * Optional semantics; hence the null-checking custom codegen). */
+    * Optional semantics: the kernel's null is the result). */
   case class VideoFrame(bytes: Expression, i: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def left: Expression  = bytes
-    override def right: Expression = i
-    override def inputTypes        = Seq(BinaryType, IntegerType)
-    override def nullable: Boolean = true
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(b: Any, ii: Any): Any =
-      MmRuntime.videoFrame(b.asInstanceOf[Array[Byte]], ii.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, (b, ii) => s"""
-        ${ev.value} = graft.ops.MmRuntime.videoFrame($b, $ii);
-        ${ev.isNull} = ${ev.value} == null;
-      """)
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes, i)
+    override def inputTypes = Seq(BinaryType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, BinaryType, "videoFrame", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   /** `video_frames(bytes, every)` → every `every`-th frame as an ARRAY of
     * GRB1 image payloads — explode it for per-frame pipelines (the
     * frame-sampling batch shape). */
   case class VideoFrames(bytes: Expression, every: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def left: Expression  = bytes
-    override def right: Expression = every
-    override def inputTypes        = Seq(BinaryType, IntegerType)
-    override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-    override protected def nullSafeEval(b: Any, e: Any): Any =
-      MmRuntime.videoFrames(b.asInstanceOf[Array[Byte]], e.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (b, e) => s"graft.ops.MmRuntime.videoFrames($b, $e)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes, every)
+    override def inputTypes = Seq(BinaryType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, ArrayType(BinaryType, containsNull = false), "videoFrames", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   /** `video_motion(bytes)` → mean absolute per-byte difference between
     * consecutive frames (a cheap motion-feature stand-in; 0.0 for
     * single-frame payloads). */
-  case class VideoMotion(bytes: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = bytes
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(v: Any): Any =
-      MmRuntime.videoMotion(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.MmRuntime.videoMotion($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class VideoMotion(bytes: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, DoubleType, "videoMotion", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `video_cuts(bytes, thresholdMilli)` → count of frame transitions whose
     * mean |Δ|/byte strictly exceeds thresholdMilli/1000 (exact integer
     * cross-multiplication — see [[MmRuntime.videoCuts]]). */
   case class VideoCuts(bytes: Expression, thresholdMilli: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def left: Expression  = bytes
-    override def right: Expression = thresholdMilli
-    override def inputTypes        = Seq(BinaryType, IntegerType)
-    override def dataType: DataType = IntegerType
-    override protected def nullSafeEval(b: Any, t: Any): Any =
-      MmRuntime.videoCuts(b.asInstanceOf[Array[Byte]], t.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (b, t) => s"graft.ops.MmRuntime.videoCuts($b, $t)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bytes, thresholdMilli)
+    override def inputTypes = Seq(BinaryType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(MmRuntime, IntegerType, "videoCuts", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   /** `grb1_bytes(id)` → the deterministic GRB1 payload of synthetic image
     * `id` — [[graft.pipeline.ImageGen.table]]'s payload kernel as a real
-    * codegen expression, so the generator fuses into whole-stage codegen
+    * kernel call, so the generator fuses into whole-stage codegen
     * (no Dataset-encoder boundary) and is PRUNABLE by Catalyst when a
     * query never reads the bytes. */
-  case class Grb1Bytes(id: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = id
-    override def inputTypes        = Seq(LongType)
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(v: Any): Any =
-      graft.pipeline.ImageGen.encode(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.pipeline.ImageGen.encode($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class Grb1Bytes(id: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(id)
+    override def inputTypes = Seq(LongType)
+    override lazy val replacement: Expression = StaticCall(ImageGen, BinaryType, "encode", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `grb1_phash(id)` → the phash of image id's DECODED raster — the
     * [[graft.pipeline.ImageGen.table]] phash column without materializing
     * the payload (a caller keeping phash but not bytes never allocates the
     * container). */
-  case class Grb1Phash(id: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = id
-    override def inputTypes        = Seq(LongType)
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      graft.pipeline.ImageGen.phashOf(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.pipeline.ImageGen.phashOf($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class Grb1Phash(id: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(id)
+    override def inputTypes = Seq(LongType)
+    override lazy val replacement: Expression = StaticCall(ImageGen, LongType, "phashOf", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `pca1_bytes(id, rate, n)` → the deterministic PCA1 audio payload —
-    * [[graft.pipeline.AudioGen.table]]'s payload kernel as a codegen
-    * expression (the Grb1Bytes discipline). */
+    * [[graft.pipeline.AudioGen.table]]'s payload kernel (the Grb1Bytes
+    * discipline). */
   case class Pca1Bytes(id: Expression, rate: Expression, n: Expression)
-      extends TernaryExpression with ImplicitCastInputTypes {
-    override def first: Expression  = id
-    override def second: Expression = rate
-    override def third: Expression  = n
-    override def inputTypes         = Seq(LongType, IntegerType, IntegerType)
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(i: Any, r: Any, nn: Any): Any =
-      AudioGen.encode(i.asInstanceOf[Long], r.asInstanceOf[Int], nn.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (i, r, nn) => s"graft.pipeline.AudioGen.encode($i, $r, $nn)")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-      copy(f, s, t)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(id, rate, n)
+    override def inputTypes = Seq(LongType, IntegerType, IntegerType)
+    override lazy val replacement: Expression = StaticCall(AudioGen, BinaryType, "encode", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
   }
 
   /** `vid1_bytes(id)` → the deterministic VID1 video payload —
-    * [[graft.pipeline.VideoGen.table]]'s payload kernel as a codegen
-    * expression (the Grb1Bytes discipline). */
-  case class Vid1Bytes(id: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = id
-    override def inputTypes        = Seq(LongType)
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(v: Any): Any =
-      VideoGen.encode(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.pipeline.VideoGen.encode($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+    * [[graft.pipeline.VideoGen.table]]'s payload kernel (the Grb1Bytes
+    * discipline). */
+  case class Vid1Bytes(id: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(id)
+    override def inputTypes = Seq(LongType)
+    override lazy val replacement: Expression = StaticCall(VideoGen, BinaryType, "encode", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -686,12 +578,7 @@ object Multimodal {
     "video_motion"     -> (es => VideoMotion(es.head)),
     "video_cuts"       -> (es => VideoCuts(es(0), es(1))))
 
-  /** Registers the functions in the session (idempotent: a re-register
-    * replaces them). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-    }
+  def register(spark: SparkSession): Unit = StaticCall.register(spark, builders)
 
   def image_meta(bytes: Column): Column      = call_function("image_meta", bytes)
   def image_psnr(a: Column, b: Column): Column = call_function("image_psnr", a, b)

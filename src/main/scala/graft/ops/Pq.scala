@@ -1,8 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
-import org.apache.spark.sql.catalyst.expressions.codegen
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -87,6 +86,9 @@ object PqKernels {
     new GenericArrayData(out)
   }
 
+  /** Unsigned byte j of a PQ code. */
+  def codeAt(code: Array[Byte], j: Int): Int = code(j) & 0xff
+
   /** ADC score of one candidate: m lookups — dot(q, recon(code)). */
   def adc(lut: ArrayData, code: Array[Byte]): Double = {
     var s = 0.0
@@ -152,32 +154,22 @@ case class PqLut(vec: Expression, books: Expression, m: Expression, dsub: Expres
 }
 
 /** `pq_code_at(code, j)` → unsigned byte j of a PQ code (diagnostics and
-  * the codebook-training assignment readback). Codegen. */
+  * the codebook-training assignment readback). */
 case class PqCodeAt(code: Expression, j: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression  = code
-  override def right: Expression = j
-  override def inputTypes        = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(c: Any, jj: Any): Any =
-    c.asInstanceOf[Array[Byte]](jj.asInstanceOf[Int]) & 0xff
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-    defineCodeGen(ctx, ev, (c, jj) => s"(($c)[$jj] & 0xff)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(code, j)
+  override def inputTypes = Seq(BinaryType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(PqKernels, IntegerType, "codeAt", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
 /** `pq_adc(lut, code)` → double. THE hot path — every (query, candidate)
-  * pair scores through this; real codegen so the probe-join projection
-  * stays inside whole-stage codegen. */
+  * pair scores through this, inside the probe-join projection's
+  * whole-stage codegen. */
 case class PqAdc(lut: Expression, code: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def left: Expression  = lut
-  override def right: Expression = code
-  override def inputTypes        = Seq(ArrayType(DoubleType), BinaryType)
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(l: Any, c: Any): Any =
-    PqKernels.adc(l.asInstanceOf[ArrayData], c.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-    defineCodeGen(ctx, ev, (l, c) => s"graft.ops.PqKernels.adc($l, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(lut, code)
+  override def inputTypes = Seq(ArrayType(DoubleType), BinaryType)
+  override lazy val replacement: Expression = StaticCall(PqKernels, DoubleType, "adc", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }

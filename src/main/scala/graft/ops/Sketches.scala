@@ -1,15 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen
+import org.apache.spark.sql.catalyst.expressions.{Expression, If, ImplicitCastInputTypes, LessThanOrEqual, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{call_function, udaf}
 import org.apache.spark.sql.types._
 
-/** Static kernels for the sketch expressions' generated code (the
-  * MmRuntime/GeoRuntime pattern). */
+import graft.geo.sql.StaticCall
+
+/** Static kernels of the sketch SQL functions (the MmRuntime/GeoRuntime
+  * pattern: each function's [[StaticCall]] replacement calls one). */
 object SketchRuntime {
 
   /** HyperLogLog estimate from a register blob (m = regs.length, a power
@@ -63,17 +64,16 @@ object SketchRuntime {
   /** KLL quantile query over a COMPACT sketch blob ([k, L, n, sizes…,
     * sorted levels…]; level ℓ items weigh 2^ℓ): the smallest stored value
     * whose cumulative weight reaches max(1, ceil(q·n)) — percentile_disc
-    * semantics, exact when the sketch never compacted. */
-  def kllQuantile(sk: ArrayData, q: Double): Any = {
-    if (sk.getLong(2) <= 0) return null
-    kllQuantileLong(sk, q)
-  }
+    * semantics, exact when the sketch never compacted; null when empty. */
+  def kllQuantile(sk: ArrayData, q: Double): Any =
+    if (kllN(sk) <= 0) null else kllQuantileLong(sk, q)
+
+  /** Total weighted count n of a compact sketch blob. */
+  def kllN(sk: ArrayData): Long = sk.getLong(2)
 
   /** [[kllQuantile]]'s non-empty kernel: requires n > 0 (callers guard).
-    * Long-returning so generated code can assign it into a primitive slot —
-    * the `Any`-returning wrapper above cannot compile under janino (an
-    * Object→long assignment), which silently ejected every kll_quantile
-    * stage from whole-stage codegen until round 7. */
+    * Long-returning, so a call site assigns it into a primitive slot; the
+    * SQL function composes the empty-sketch null guard around it. */
   def kllQuantileLong(sk: ArrayData, q: Double): Long = {
     val l = sk.getLong(1).toInt
     val n = sk.getLong(2)
@@ -268,65 +268,41 @@ object Sketches {
   /** `cms_estimate(counters, hash, d)` → min-over-rows point frequency
     * estimate (LONG; w = counters.length / d). */
   case class CmsEstimate(counters: Expression, hash: Expression, d: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-      with ImplicitCastInputTypes {
-    override def first: Expression  = counters
-    override def second: Expression = hash
-    override def third: Expression  = d
-    override def inputTypes         = Seq(ArrayType(LongType), LongType, IntegerType)
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(c: Any, h: Any, dd: Any): Any =
-      SketchRuntime.cmsEstimate(c.asInstanceOf[ArrayData],
-        h.asInstanceOf[Long], dd.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev,
-        (c, h, dd) => s"graft.ops.SketchRuntime.cmsEstimate($c, $h, $dd)")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-      copy(a, b, c)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(counters, hash, d)
+    override def inputTypes = Seq(ArrayType(LongType), LongType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(SketchRuntime, LongType, "cmsEstimate", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
   }
 
   /** `bloom_contains(bits, hash, k)` → membership (BOOLEAN; no false
     * negatives, deterministic false positives). */
   case class BloomContains(bits: Expression, hash: Expression, k: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-      with ImplicitCastInputTypes {
-    override def first: Expression  = bits
-    override def second: Expression = hash
-    override def third: Expression  = k
-    override def inputTypes         = Seq(BinaryType, LongType, IntegerType)
-    override def dataType: DataType = BooleanType
-    override protected def nullSafeEval(b: Any, h: Any, kk: Any): Any =
-      SketchRuntime.bloomContains(b.asInstanceOf[Array[Byte]],
-        h.asInstanceOf[Long], kk.asInstanceOf[Int])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev,
-        (b, h, kk) => s"graft.ops.SketchRuntime.bloomContains($b, $h, $kk)")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-      copy(a, b, c)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(bits, hash, k)
+    override def inputTypes = Seq(BinaryType, LongType, IntegerType)
+    override lazy val replacement: Expression =
+      StaticCall(SketchRuntime, BooleanType, "bloomContains", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
   }
 
   /** `hll_estimate(sketch)` → approximate distinct count (DOUBLE). */
-  case class HllEstimate(sketch: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = sketch
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(v: Any): Any =
-      SketchRuntime.hllEstimate(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.SketchRuntime.hllEstimate($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class HllEstimate(sketch: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(sketch)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression =
+      StaticCall(SketchRuntime, DoubleType, "hllEstimate", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   /** `hll_registers(sketch)` → ARRAY<INT> register values. */
-  case class HllRegisters(sketch: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = sketch
-    override def inputTypes        = Seq(BinaryType)
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      SketchRuntime.hllRegisters(v.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c => s"graft.ops.SketchRuntime.hllRegisters($c)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class HllRegisters(sketch: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(sketch)
+    override def inputTypes = Seq(BinaryType)
+    override lazy val replacement: Expression = StaticCall(SketchRuntime,
+      ArrayType(IntegerType, containsNull = false), "hllRegisters", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   // -------------------------------------------------- KLL quantile sketch
@@ -583,54 +559,33 @@ object Sketches {
 
   /** `kll_quantile(sk, q)` → LONG percentile_disc-style quantile. */
   case class KllQuantile(sk: Expression, q: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-      with ImplicitCastInputTypes {
-    override def left: Expression  = sk
-    override def right: Expression = q
-    override def inputTypes        = Seq(ArrayType(LongType), DoubleType)
-    override def dataType: DataType = LongType
-    override def nullable: Boolean  = true
-    override protected def nullSafeEval(s: Any, qq: Any): Any =
-      SketchRuntime.kllQuantile(s.asInstanceOf[ArrayData], qq.asInstanceOf[Double])
-    // NOT defineCodeGen: the runtime kernel returns Any (null for an empty
-    // sketch), which janino cannot assign into the primitive long slot — the
-    // whole stage would silently fall back to interpreted execution. Emit an
-    // explicit n<=0 null guard around the Long-returning kernel instead.
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      nullSafeCodeGen(ctx, ev, (s, qq) => s"""
-        if ($s.getLong(2) <= 0L) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = graft.ops.SketchRuntime.kllQuantileLong($s, $qq);
-        }""")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression) = copy(a, b)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(sk, q)
+    override def inputTypes = Seq(ArrayType(LongType), DoubleType)
+    // an empty sketch (n = 0) has no quantile: the guard is composed from
+    // two Long-returning kernels, so every call site stays primitive
+    override lazy val replacement: Expression = If(
+      LessThanOrEqual(StaticCall(SketchRuntime, LongType, "kllN", Seq(sk)), Literal(0L)),
+      Literal(null, LongType),
+      StaticCall(SketchRuntime, LongType, "kllQuantileLong", children))
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   /** `kll_rank(sk, v)` → LONG estimated #values < v. */
   case class KllRank(sk: Expression, value: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-      with ImplicitCastInputTypes {
-    override def left: Expression  = sk
-    override def right: Expression = value
-    override def inputTypes        = Seq(ArrayType(LongType), LongType)
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(s: Any, v: Any): Any =
-      SketchRuntime.kllRank(s.asInstanceOf[ArrayData], v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, (s, v) => s"graft.ops.SketchRuntime.kllRank($s, $v)")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression) = copy(a, b)
+      extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(sk, value)
+    override def inputTypes = Seq(ArrayType(LongType), LongType)
+    override lazy val replacement: Expression = StaticCall(SketchRuntime, LongType, "kllRank", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
   }
 
   /** `kll_n(sk)` → LONG total weighted count. */
-  case class KllN(sk: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-    override def child: Expression = sk
-    override def inputTypes        = Seq(ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(s: Any): Any =
-      s.asInstanceOf[ArrayData].getLong(2)
-    override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode) =
-      defineCodeGen(ctx, ev, s => s"$s.getLong(2)")
-    override protected def withNewChildInternal(c: Expression) = copy(c)
+  case class KllN(sk: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+    override def children: Seq[Expression] = Seq(sk)
+    override def inputTypes = Seq(ArrayType(LongType))
+    override lazy val replacement: Expression = StaticCall(SketchRuntime, LongType, "kllN", children)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -642,12 +597,7 @@ object Sketches {
     "kll_rank"       -> (es => KllRank(es(0), es(1))),
     "kll_n"          -> (es => KllN(es.head)))
 
-  /** Registers the functions in the session (idempotent: a re-register
-    * replaces them). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-    }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = StaticCall.register(spark, builders)
 
   // --------------------------------------------------------- Column API
 

@@ -10,9 +10,8 @@ import graft.geo.sql.StaticCall
 
 /** Text/vector kernels for the large-scale training-data operators
   * (dedup, similarity, language-ID, fingerprinting). Pure single-pass
-  * functions implemented as Catalyst expressions (preference order of the
-  * build brief: native Expression > UDF), each called as a static method
-  * from generated code.
+  * functions; each SQL function below is a RuntimeReplaceable whose
+  * [[StaticCall]] replacement calls one of them.
   */
 object TextKernels {
 
@@ -407,15 +406,22 @@ object TextKernels {
     if (na == 0L || nb == 0L) 0.0 else dot / math.sqrt(na.toDouble * nb.toDouble)
   }
 
-  // codegen adapters: one static call per row, UTF8String/ArrayData in,
-  // Catalyst types out — so the six hot text kernels stay inside
-  // whole-stage codegen (a single CodegenFallback ejects the WHOLE
-  // projection and disables subexpression elimination, CLAUDE.md)
+  // Catalyst-signature entry points (UTF8String/ArrayData in, Catalyst
+  // types out): each text function's StaticCall replacement calls one, so
+  // the interpreted and the generated path run the same code
   def minhashArray(t: UTF8String, n: Int, sh: Int): GenericArrayData =
     new GenericArrayData(minhash(t.toString, n, sh))
+  def simhash(t: UTF8String, sh: Int): Long = simhash(t.toString, sh)
   def winnowArray(t: UTF8String, k: Int, w: Int): GenericArrayData =
     new GenericArrayData(winnow(t.toString, k, w))
   def langIdU(t: UTF8String): UTF8String = UTF8String.fromString(langId(t.toString))
+  def tokenCountBpe(t: UTF8String): Int = tokenCountBpe(t.toString)
+  def dupNgramStats(t: UTF8String, n: Int): InternalRow = dupNgramStats(t.toString, n)
+  def dupLineStats(t: UTF8String): InternalRow = dupLineStats(t.toString)
+  /** Lower-cases with UTF8String.toLowerCase — identical to the built-in
+    * `lower`, so column-lambda and kernel tokenizations coincide. */
+  def wordNgramArray(t: UTF8String, n: Int): GenericArrayData =
+    wordNgramArray(t.toLowerCase.toString, n)
   def ngramJaccard(a: UTF8String, b: UTF8String, n: Int): Double =
     ngramJaccard(a.toString, b.toString, n)
   def commonSubstring(a: UTF8String, b: UTF8String, len: Int): Boolean =
@@ -448,40 +454,20 @@ object TextKernels {
 // --------------------------------------------------------------- exprs
 
 case class MinHashSig(text: Expression, numHashes: Expression, shingle: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def first: Expression  = text
-  override def second: Expression = numHashes
-  override def third: Expression  = shingle
-  override def inputTypes         = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(t: Any, n: Any, sh: Any): Any =
-    TextKernels.minhashArray(t.asInstanceOf[UTF8String],
-      n.asInstanceOf[Int], sh.asInstanceOf[Int])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      (t, n, sh) => s"graft.ops.TextKernels.minhashArray($t, $n, $sh)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(a, b, c)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text, numHashes, shingle)
+  override def inputTypes = Seq(StringType, IntegerType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(TextKernels,
+    ArrayType(LongType, containsNull = false), "minhashArray", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
 }
 
 case class SimHash64(text: Expression, shingle: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def left: Expression  = text
-  override def right: Expression = shingle
-  override def inputTypes        = Seq(StringType, IntegerType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(t: Any, sh: Any): Any =
-    TextKernels.simhash(t.asInstanceOf[UTF8String].toString, sh.asInstanceOf[Int])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      (t, sh) => s"graft.ops.TextKernels.simhash($t.toString(), $sh)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text, shingle)
+  override def inputTypes = Seq(StringType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(TextKernels, LongType, "simhash", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
 case class NgramJaccard(a: Expression, b: Expression, n: Expression)
@@ -494,23 +480,12 @@ case class NgramJaccard(a: Expression, b: Expression, n: Expression)
 }
 
 case class WinnowFingerprint(text: Expression, k: Expression, w: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def first: Expression  = text
-  override def second: Expression = k
-  override def third: Expression  = w
-  override def inputTypes         = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(t: Any, kk: Any, ww: Any): Any =
-    TextKernels.winnowArray(t.asInstanceOf[UTF8String],
-      kk.asInstanceOf[Int], ww.asInstanceOf[Int])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      (t, kk, ww) => s"graft.ops.TextKernels.winnowArray($t, $kk, $ww)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(a, b, c)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text, k, w)
+  override def inputTypes = Seq(StringType, IntegerType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(TextKernels,
+    ArrayType(LongType, containsNull = false), "winnowArray", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
 }
 
 /** `common_substring(a, b, len)` — true iff the two texts share a verified
@@ -524,208 +499,117 @@ case class CommonSubstring(a: Expression, b: Expression, len: Expression)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
 }
 
-case class LangIdExpr(text: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def child: Expression = text
-  override def inputTypes        = Seq(StringType)
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(t: Any): Any =
-    TextKernels.langIdU(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, t => s"graft.ops.TextKernels.langIdU($t)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class LangIdExpr(text: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text)
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = StaticCall(TextKernels, StringType, "langIdU", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-case class TokenCountBpe(text: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def child: Expression = text
-  override def inputTypes        = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(t: Any): Any =
-    TextKernels.tokenCountBpe(t.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, t => s"graft.ops.TextKernels.tokenCountBpe($t.toString())")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class TokenCountBpe(text: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text)
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression =
+    StaticCall(TextKernels, IntegerType, "tokenCountBpe", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-/** `dup_ngram_stats(text, n)` → struct<n_grams int, n_distinct int,
-  * top_count int> over whitespace word n-grams — the intra-document
-  * repetition signals of Gopher-style quality filters. Codegen-enabled: it
-  * runs as a narrow map over the whole corpus ([[TextOps.withRepetition]]).
-  */
 /** `mix64(x)` → SplitMix64 finalizer over a 64-bit value: the engine's
   * standard avalanche hash (winnowing, shingles) exposed as a scalar —
   * use it to derive hash inputs for [[Sketches]] or ANSI-safe seeds
   * (Column arithmetic with big literal multipliers overflows under ANSI;
   * this kernel wraps). Bit-reproducible in SQL (the q66 HUGEINT replay). */
-case class Mix64Expr(x: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def child: Expression = x
-  override def inputTypes        = Seq(LongType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernels.mix64(v.asInstanceOf[Long])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, v => s"graft.ops.TextKernels.mix64($v)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class Mix64Expr(x: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(x)
+  override def inputTypes = Seq(LongType)
+  override lazy val replacement: Expression = StaticCall(TextKernels, LongType, "mix64", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `word_ngrams(text, n)` → array<string> of lower-cased whitespace word
-  * n-grams, one codegen kernel pass ([[TextKernels.wordNgramArray]]);
-  * lower-casing uses UTF8String.toLowerCase — identical to the built-in
-  * `lower`, so column-lambda and kernel tokenizations coincide exactly. */
+  * n-grams, one kernel pass ([[TextKernels.wordNgramArray]]). */
 case class WordNgrams(text: Expression, n: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def left: Expression  = text
-  override def right: Expression = n
-  override def inputTypes        = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(t: Any, nn: Any): Any =
-    TextKernels.wordNgramArray(
-      t.asInstanceOf[UTF8String].toLowerCase.toString, nn.asInstanceOf[Int])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      (t, nn) => s"graft.ops.TextKernels.wordNgramArray($t.toLowerCase().toString(), $nn)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text, n)
+  override def inputTypes = Seq(StringType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(TextKernels,
+    ArrayType(StringType, containsNull = false), "wordNgramArray", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
+/** `dup_ngram_stats(text, n)` → struct<n_grams int, n_distinct int,
+  * top_count int> over whitespace word n-grams — the intra-document
+  * repetition signals of Gopher-style quality filters; a narrow map over
+  * the whole corpus ([[TextOps.withRepetition]]). */
 case class DupNgramStats(text: Expression, n: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def left: Expression  = text
-  override def right: Expression = n
-  override def inputTypes        = Seq(StringType, IntegerType)
-  override def dataType: DataType = StructType(Seq(
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text, n)
+  override def inputTypes = Seq(StringType, IntegerType)
+  override lazy val replacement: Expression = StaticCall(TextKernels, StructType(Seq(
     StructField("n_grams", IntegerType, nullable = false),
     StructField("n_distinct", IntegerType, nullable = false),
-    StructField("top_count", IntegerType, nullable = false)))
-  override protected def nullSafeEval(t: Any, nn: Any): Any =
-    TextKernels.dupNgramStats(t.asInstanceOf[UTF8String].toString, nn.asInstanceOf[Int])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      (t, nn) => s"graft.ops.TextKernels.dupNgramStats($t.toString(), $nn)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    StructField("top_count", IntegerType, nullable = false))), "dupNgramStats", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
 /** `dup_line_stats(text)` → struct<n_lines int, n_dup_lines int,
-  * dup_line_chars int> — the line half of the repetition signals; codegen
-  * for the same whole-stage reason as [[DupNgramStats]]. */
-case class DupLineStats(text: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def child: Expression = text
-  override def inputTypes        = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
+  * dup_line_chars int> — the line half of the repetition signals. */
+case class DupLineStats(text: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(text)
+  override def inputTypes = Seq(StringType)
+  override lazy val replacement: Expression = StaticCall(TextKernels, StructType(Seq(
     StructField("n_lines", IntegerType, nullable = false),
     StructField("n_dup_lines", IntegerType, nullable = false),
-    StructField("dup_line_chars", IntegerType, nullable = false)))
-  override protected def nullSafeEval(t: Any): Any =
-    TextKernels.dupLineStats(t.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      t => s"graft.ops.TextKernels.dupLineStats($t.toString())")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+    StructField("dup_line_chars", IntegerType, nullable = false))), "dupLineStats", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-/** Cosine over array<float> columns (embeddings). Codegen-enabled. */
+/** Cosine over array<float> columns (embeddings). */
 case class VecCosine(a: Expression, b: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression  = a
-  override def right: Expression = b
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    TextKernels.cosineAD(
-      x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      y.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.ops.TextKernels.cosineAD($x, $y)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(a, b)
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
+  override lazy val replacement: Expression = StaticCall(TextKernels, DoubleType, "cosineAD", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
 /** `vec_quantize(vec)` → QV1 int8 payload (4-byte scale header + dim
-  * bytes): the 4x embedding-storage cut of production vector stores.
-  * Codegen-enabled — it runs as a narrow map over the whole corpus. */
-case class VecQuantize(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernels.vecQuantize(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.ops.TextKernels.vecQuantize($c)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+  * bytes): the 4x embedding-storage cut of production vector stores. */
+case class VecQuantize(child: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(child)
+  override def inputTypes = Seq(ArrayType(FloatType))
+  override lazy val replacement: Expression = StaticCall(TextKernels, BinaryType, "vecQuantize", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `vec_dequantize(bytes)` → array<float> reconstruction. */
-case class VecDequantize(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernels.vecDequantize(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.ops.TextKernels.vecDequantize($c)")
-  override protected def withNewChildInternal(c: Expression) = copy(c)
+case class VecDequantize(child: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(child)
+  override def inputTypes = Seq(BinaryType)
+  override lazy val replacement: Expression = StaticCall(TextKernels,
+    ArrayType(FloatType, containsNull = false), "vecDequantize", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
 /** `vec_cosine_q(a, b)` → cosine directly on QV1 payloads (scales cancel:
   * pure integer dot/norms, no float materialization — the EXACT cosine of
   * the quantized values; a float32 dequantize-then-cosine agrees to ~1e-7,
-  * the reconstruction's own rounding). Codegen-enabled. */
+  * the reconstruction's own rounding). */
 case class VecCosineQ(a: Expression, b: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression  = a
-  override def right: Expression = b
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    TextKernels.vecCosineQ(x.asInstanceOf[Array[Byte]], y.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.ops.TextKernels.vecCosineQ($x, $y)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(a, b)
+  override def inputTypes = Seq(BinaryType, BinaryType)
+  override lazy val replacement: Expression = StaticCall(TextKernels, DoubleType, "vecCosineQ", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
 case class HyperplaneSig(vec: Expression, bits: Expression, seed: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def first: Expression  = vec
-  override def second: Expression = bits
-  override def third: Expression  = seed
-  override def inputTypes         =
-    Seq(ArrayType(FloatType), IntegerType, LongType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(v: Any, b: Any, s: Any): Any =
-    TextKernels.hyperplaneSigAd(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Int], s.asInstanceOf[Long])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev,
-      (v, b, s) => s"graft.ops.TextKernels.hyperplaneSigAd($v, $b, $s)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(a, b, c)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def children: Seq[Expression] = Seq(vec, bits, seed)
+  override def inputTypes = Seq(ArrayType(FloatType), IntegerType, LongType)
+  override lazy val replacement: Expression =
+    StaticCall(TextKernels, LongType, "hyperplaneSigAd", children)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
 }
 
 /** Registration + Column API. */
@@ -755,12 +639,7 @@ object TextFunctions {
     "pq_adc"         -> (es => PqAdc(es(0), es(1))),
     "pq_code_at"     -> (es => PqCodeAt(es(0), es(1))))
 
-  /** Registers the functions in the session (idempotent: a re-register
-    * replaces them). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-    }
+  def register(spark: SparkSession): Unit = StaticCall.register(spark, builders)
 
   def mix64_col(x: Column): Column = call_function("mix64", x)
   def minhash_sig(text: Column, numHashes: Column, shingle: Column): Column =

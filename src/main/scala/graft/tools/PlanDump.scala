@@ -1,7 +1,10 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 /** Dump formatted physical plans of the engine's key flows to PLANS.md —
   * the `.explain("formatted")` evidence the build brief asks to iterate on.
@@ -22,8 +25,8 @@ object PlanDump {
 
     def dump(title: String, notes: String)(df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $title\n\n$notes\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(arraysByContent(df, df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
 
@@ -369,5 +372,22 @@ object PlanDump {
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
     spark.stop()
+  }
+
+  /** The plan text with each array literal shown by its elements: an
+    * UnsafeArrayData prints as `UnsafeArrayData@<hash>`, which hides a
+    * planned literal such as a constant-folded `sequence(0, n)`. */
+  private def arraysByContent(df: org.apache.spark.sql.DataFrame, text: String): String = {
+    val shown = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    df.queryExecution.optimizedPlan.foreachWithSubqueries(_.expressions.foreach(_.foreach {
+      case Literal(a: UnsafeArrayData, t) => shown(a.toString) = render(a, t)
+      case _                              =>
+    }))
+    shown.foldLeft(text) { case (s, (hashed, elements)) => s.replace(hashed, elements) }
+  }
+
+  private def render(v: Any, t: DataType): String = (v, t) match {
+    case (a: ArrayData, ArrayType(et, _)) => a.toSeq[Any](et).map(render(_, et)).mkString("[", ", ", "]")
+    case _                                => String.valueOf(v)
   }
 }

@@ -4,14 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+
 import graft.SparkTestBase
 import graft.geo.sql.GeoFunctions
+import graft.ops.{Multimodal, Sketches, TextFunctions}
 
-/** Every engine SQL function is a RuntimeReplaceable over one static
-  * kernel: numeric arguments are cast to the kernel's types, every function
-  * compiles inside whole-stage codegen, and the generated and interpreted
-  * paths agree. Inputs derive from `id`, so constant folding cannot erase
-  * the function under test.
+/** Every engine SQL function, in every registry, is a RuntimeReplaceable
+  * over one static kernel: numeric arguments are cast to the kernel's
+  * types, every function compiles inside whole-stage codegen, and the
+  * generated and interpreted paths agree. Inputs derive from `id`, so
+  * constant folding cannot erase the function under test.
   */
 class FunctionDeclarationSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -44,15 +47,34 @@ class FunctionDeclarationSpec extends AnyFunSuite {
       '},"geometry":{"type":"Point","coordinates":[', id, ',1.5]}}') AS doc""",
     "array(CAST(id AS FLOAT), CAST(id * 0.5 AS FLOAT)) AS vec")
 
+  /** Sketches from the sketch aggregators, one group per `id`; checkpointed,
+    * so a probe call projects over a scan rather than merging into the
+    * (never codegen'd) object aggregate. */
+  private lazy val sketches: DataFrame = {
+    import graft.ops.Sketches._
+    spark.range(60).select((col("id") % 6).as("id"), col("id").as("v"))
+      .groupBy("id").agg(
+        hll_sketch(TextFunctions.mix64_col(col("v")), 6).as("hll"),
+        bloom_sketch(TextFunctions.mix64_col(col("v")), 256, 3).as("bloom"),
+        cms_sketch(TextFunctions.mix64_col(col("v")), 64, 2).as("cms"),
+        kll_sketch(col("v") * 7 % 23, 8).as("kll"))
+      .localCheckpoint()
+  }
+
+  // line breaks from a per-row char(10), so the plan string has no newline
+  private val text =
+    "concat('the cat sat on the mat ', id, ' the cat', char(id % 1 + 10), 'sat', char(id % 1 + 10), 'sat ', id % 2)"
+  private val text2 = "concat('a cat sat on a mat ', id % 3, ' and the dog')"
   private val books: Column = typedlit(Seq.tabulate(512)(i => (i % 17) / 4.0f))
 
   private val constClip =
     """from_geojson_geom('{"type":"Polygon","coordinates":[[[0.5,0.5],[2.5,0.5],[2.5,2.5],[0.5,2.5],[0.5,0.5]]]}')"""
 
-  /** One call per registered geo function plus the four text/PQ functions
-    * that share the declaration (keyed by SQL name; extra keys cover a
-    * second argument shape). */
-  private val calls: Seq[(String, Column)] = Seq(
+  private case class Call(name: String, call: Column, over: () => DataFrame)
+
+  /** One call per function of every registry, keyed by SQL name (extra
+    * keys after a `/` cover a second argument shape). */
+  private val calls: Seq[Call] = (Seq(
     "from_geojson" -> "from_geojson(doc)",
     "geojson_error" -> "geojson_error(concat(doc, if(id % 2 = 0, '', '}')))",
     "to_geojson" -> "to_geojson(from_geojson(doc))",
@@ -102,13 +124,66 @@ class FunctionDeclarationSpec extends AnyFunSuite {
     "tile_bounds" -> "tile_bounds(tile_key(x, y, 6))",
     "tile_cover" -> "tile_cover(g, 5)",
     "tile_cover_box" -> "tile_cover_box(x, y, x + 1.0, y + 1.0, 5)",
+    "mix64" -> "mix64(id)",
+    "minhash_sig" -> s"minhash_sig($text, 8, 4)",
+    "simhash64" -> s"simhash64($text, 4)",
     "ngram_jaccard" -> "ngram_jaccard(concat('abcdef', id), concat('abcxyz', id), 3)",
-    "common_substring" -> "common_substring(concat('hello world ', id), concat('say hello ', id), 5)"
-  ).map { case (k, sql) => k -> expr(sql) } ++ Seq(
+    "winnow_fp" -> s"winnow_fp($text, 4, 3)",
+    "common_substring" -> "common_substring(concat('hello world ', id), concat('say hello ', id), 5)",
+    "lang_id" -> s"lang_id(if(id % 2 = 0, $text, concat('der und die ', id)))",
+    "token_count_bpe" -> s"token_count_bpe($text)",
+    "dup_ngram_stats" -> s"dup_ngram_stats($text, 2)",
+    "word_ngrams" -> s"word_ngrams(upper($text), 2)",
+    "dup_line_stats" -> s"dup_line_stats($text)",
+    "vec_cosine" -> "vec_cosine(vec, array(CAST(1.0 AS FLOAT), CAST(y AS FLOAT)))",
+    "vec_quantize" -> "vec_quantize(vec)",
+    "vec_dequantize" -> "vec_dequantize(vec_quantize(vec))",
+    "vec_cosine_q" -> "vec_cosine_q(vec_quantize(vec), vec_quantize(array(CAST(y AS FLOAT), CAST(1.0 AS FLOAT))))",
+    "hyperplane_sig" -> "hyperplane_sig(vec, 16, 42L)",
+    "grb1_bytes" -> "grb1_bytes(id)",
+    "grb1_phash" -> "grb1_phash(id)",
+    "pca1_bytes" -> "pca1_bytes(id, 8000, 64)",
+    "vid1_bytes" -> "vid1_bytes(id)",
+    "image_meta" -> "image_meta(grb1_bytes(id))",
+    "image_psnr" -> "image_psnr(grb1_bytes(id), grb1_bytes(id % 2))",
+    "image_gray_mean" -> "image_gray_mean(grb1_bytes(id))",
+    "image_resize" -> "image_resize(grb1_bytes(id), 4, 3)",
+    "image_crop" -> "image_crop(grb1_bytes(id), id, 1, 5, 4)",
+    "image_crop/empty window" -> "image_crop(grb1_bytes(id), 1, 1, id - 3, 4)",
+    "image_ahash" -> "image_ahash(grb1_bytes(id))",
+    "image_histogram" -> "image_histogram(grb1_bytes(id), 4)",
+    "audio_meta" -> "audio_meta(pca1_bytes(id, 8000, 64))",
+    "audio_energy" -> "audio_energy(pca1_bytes(id, 8000, 64))",
+    "audio_peaks" -> "audio_peaks(pca1_bytes(id, 8000, 64))",
+    "audio_zero_crossings" -> "audio_zero_crossings(pca1_bytes(id, 8000, 64))",
+    "audio_rms" -> "audio_rms(pca1_bytes(id, 8000, 64))",
+    "audio_downsample" -> "audio_downsample(pca1_bytes(id, 8000, 64), 3)",
+    "video_meta" -> "video_meta(vid1_bytes(id))",
+    "video_frame" -> "video_frame(vid1_bytes(id), id - 2)",
+    "video_frames" -> "video_frames(vid1_bytes(id), 2)",
+    "video_motion" -> "video_motion(vid1_bytes(id))",
+    "video_cuts" -> "video_cuts(vid1_bytes(id), 20)",
+    "pq_adc" -> "pq_adc(array(CAST(id AS DOUBLE), 0.5D, 2.0D, 1.0D), unhex(concat('0', id % 4)))",
+    "pq_code_at" -> "pq_code_at(vec_quantize(vec), CAST(id % 4 AS INT))"
+  ).map { case (k, sql) => Call(k, expr(sql), () => base) } ++ Seq(
     "pq_encode" -> call_function("pq_encode", col("vec"), books, lit(1), lit(2)),
     "pq_encode/residual" -> call_function("pq_encode", col("vec"), books, lit(1), lit(2),
       array(lit(0.5f), col("y").cast("float"))),
-    "pq_lut" -> call_function("pq_lut", col("vec"), books, lit(1), lit(2)))
+    "pq_lut" -> call_function("pq_lut", col("vec"), books, lit(1), lit(2))
+  ).map { case (k, c) => Call(k, c, () => base) } ++ Seq(
+    "hll_estimate" -> "hll_estimate(hll)",
+    "hll_registers" -> "hll_registers(hll)",
+    "bloom_contains" -> "bloom_contains(bloom, mix64(id + 7 * (id % 2)), 3)",
+    "cms_estimate" -> "cms_estimate(cms.v, mix64(id), 2)",
+    "kll_quantile" -> "kll_quantile(kll.v, 0.5)",
+    "kll_rank" -> "kll_rank(kll.v, id * 3)",
+    "kll_n" -> "kll_n(kll.v)"
+  ).map { case (k, sql) => Call(k, expr(sql), () => sketches) })
+
+  /** Every registry the engine registers, by name. */
+  private val registries: Seq[(String, Seq[(String, Seq[Expression] => Expression)])] = Seq(
+    "GeoFunctions" -> GeoFunctions.builders, "TextFunctions" -> TextFunctions.builders,
+    "Multimodal" -> Multimodal.builders, "Sketches" -> Sketches.builders)
 
   /** Value rendering that compares arrays, binaries and NaN by content. */
   private def render(v: Any): String = v match {
@@ -146,15 +221,27 @@ class FunctionDeclarationSpec extends AnyFunSuite {
   }
 
   test("every engine SQL function compiles into whole-stage codegen and matches the interpreted path") {
-    val swept = calls.map(_._1.takeWhile(_ != '/')).toSet
-    val missing = GeoFunctions.builders.map(_._1).filterNot(swept)
+    val swept = calls.map(_.name.takeWhile(_ != '/')).toSet
+    val missing = registries.flatMap { case (r, bs) => bs.map(_._1).filterNot(swept).map(n => s"$r.$n") }
     assert(missing.isEmpty, s"functions without a sweep case: $missing")
+    val registered = registries.flatMap(_._2.map(_._1)).toSet
+    assert(swept.subsetOf(registered), s"sweep cases of unregistered functions: ${swept -- registered}")
 
-    calls.foreach { case (name, call) =>
+    calls.foreach { case Call(name, call, over) =>
       def run(): (String, Seq[String]) = {
-        val df = base.select(call.as("r"))
-        (df.queryExecution.executedPlan.toString, df.collect().toSeq.map(r => render(r.get(0))))
+        val df = over().select(col("id"), call.as("r"))
+        (df.queryExecution.executedPlan.toString, df.collect().toSeq
+          .sortBy(_.getLong(0)).map(r => render(r.get(1))))
       }
+      // the call is the registered declaration: a RuntimeReplaceable, as is
+      // every other engine function under it
+      val analyzed = over().select(call.as("r")).queryExecution.analyzed.expressions.head
+      val fn = analyzed.children.head
+      assert(fn.isInstanceOf[RuntimeReplaceable], s"$name is not RuntimeReplaceable: ${fn.getClass}")
+      val engine = analyzed.collect { case e if e.getClass.getName.startsWith("graft.") => e }
+      engine.foreach(e => assert(e.isInstanceOf[RuntimeReplaceable],
+        s"$name: ${e.getClass.getName} is not RuntimeReplaceable"))
+
       val (plan, generated) = withConf("spark.sql.codegen.fallback" -> "false")(run())
       val line = plan.linesIterator.find(_.contains(" AS r#")).getOrElse("")
       assert(line.dropWhile(c => " +-:".contains(c)).startsWith("*("),

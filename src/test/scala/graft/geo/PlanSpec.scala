@@ -57,9 +57,9 @@ class PlanSpec extends AnyFunSuite {
     // q34 shape: the deterministic generator's text is used three times;
     // CollapseProject inlines random_geojson into every use, so ejecting the
     // Project from whole-stage codegen (the old CodegenFallback) ran the
-    // generator 3x per row in an interpreted projection. With real doGenCode
-    // the Project keeps its *(n) whole-stage prefix and subexpression
-    // elimination shares ONE generator call.
+    // generator 3x per row in an interpreted projection. As a StaticCall
+    // into one kernel the Project keeps its *(n) whole-stage prefix and
+    // subexpression elimination shares ONE generator call.
     val q34 = spark.range(10)
       .withColumn("json", random_geojson($"id", lit(42L)))
       .withColumn("back", to_geojson(from_geojson($"json")))

@@ -252,14 +252,14 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs.count() == n.toLong * (n - 1) / 2)
     assert(pairs.select("id_a", "id_b").distinct().count() == n.toLong * (n - 1) / 2)
     // cosine verification sits ABOVE the id-level distinct (plans print
-    // top-down, so every veccosine occurrence — the projection and the
+    // top-down, so every cosine kernel call — the projection and the
     // filter Spark pushes into the re-attach join — must appear BEFORE the
     // distinct aggregate; per-band re-verification would put one below it)
     val plan = pairs.queryExecution.executedPlan.toString
     val agg  = plan.indexOf("HashAggregate(keys=[id_a")
     assert(agg >= 0, plan.take(3000))
-    assert("veccosine".r.findAllIn(plan).nonEmpty, plan.take(3000))
-    assert(plan.lastIndexOf("veccosine") < agg,
+    assert(plan.contains("TextKernels.cosineAD("), plan.take(3000))
+    assert(plan.lastIndexOf("TextKernels.cosineAD(") < agg,
       "vec_cosine must only be evaluated above the id-level distinct")
   }
 
@@ -706,7 +706,7 @@ class OpsSpec extends AnyFunSuite {
     val hpLine = hp.linesIterator.find(_.contains("Project")).getOrElse("")
     assert(hpLine.contains("*("),
       s"hyperplane projection fell out of whole-stage codegen:\n${hp.take(1500)}")
-    // codegen and interpreted paths agree (nullSafeEval vs doGenCode)
+    // the kernels' SQL results equal their direct Scala calls
     val texts = docs.limit(50).select($"doc_id", $"text")
       .as[(Long, String)].collect().toMap
     docs.limit(50).select($"doc_id",
