@@ -34,13 +34,16 @@ object StaticCall {
 
   /** The replacement call `obj.name(args)`. A null argument gives a null
     * result unless `propagateNull` is off (the kernel then sees the null);
-    * a primitive result is never null. A null-propagating call is
-    * null-intolerant: Catalyst infers `isnotnull` filters on the attributes
-    * under it and pushes them below the projections that derive them. */
+    * a primitive result is never null, nor is the result of a kernel
+    * declared `neverNull` (a payload generator that always returns an
+    * array), so such a call is nullable only when an argument is. A
+    * null-propagating call is null-intolerant: Catalyst infers `isnotnull`
+    * filters on the attributes under it and pushes them below the
+    * projections that derive them. */
   def apply(obj: AnyRef, dataType: DataType, name: String, args: Seq[Expression],
-            propagateNull: Boolean = true): Expression =
+            propagateNull: Boolean = true, neverNull: Boolean = false): Expression =
     StaticInvoke(obj.getClass, dataType, name, args, propagateNull = propagateNull,
-      returnNullable = !(dataType == BooleanType || dataType == IntegerType ||
+      returnNullable = !(neverNull || dataType == BooleanType || dataType == IntegerType ||
         dataType == LongType || dataType == DoubleType))
 
   /** Whether `e` is the replacement call `obj.name(...)` — how an optimizer
@@ -59,11 +62,14 @@ object StaticCall {
   }
 
   /** Registers each (SQL name, builder) of a function registry in the
-    * session (idempotent: a re-register replaces them). */
-  def register(spark: SparkSession, builders: Seq[(String, Seq[Expression] => Expression)]): Unit =
+    * session and installs [[graft.geo.plans.NumberRoundTripRule]]
+    * (idempotent: a re-register replaces them). */
+  def register(spark: SparkSession, builders: Seq[(String, Seq[Expression] => Expression)]): Unit = {
     builders.foreach { case (name, b) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
+    graft.geo.plans.NumberRoundTripRule.install(spark)
+  }
 }
 
 /** Accessors and shared helpers over a packed geometry InternalRow

@@ -189,7 +189,8 @@ object GeoFunctions {
   def tile_y(key: Column): Column = key.bitwiseAND(lit((1L << 29) - 1))
 }
 
-/** `SparkSessionExtensions` hook so spark-submit users get the functions via
+/** `SparkSessionExtensions` hook so spark-submit users get the functions and
+  * the optimizer rules (PipPrefilterRule, NumberRoundTripRule) via
   * `--conf spark.sql.extensions=graft.geo.sql.GeoExtensions`.
   */
 class GeoExtensions extends (SparkSessionExtensions => Unit) {
@@ -200,5 +201,6 @@ class GeoExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), b))
     }
     ext.injectOptimizerRule(_ => graft.geo.plans.PipPrefilterRule)
+    ext.injectOptimizerRule(_ => graft.geo.plans.NumberRoundTripRule)
   }
 }

@@ -518,7 +518,7 @@ object Multimodal {
   case class Grb1Bytes(id: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
     override def children: Seq[Expression] = Seq(id)
     override def inputTypes = Seq(LongType)
-    override lazy val replacement: Expression = StaticCall(ImageGen, BinaryType, "encode", children)
+    override lazy val replacement: Expression = StaticCall(ImageGen, BinaryType, "encode", children, neverNull = true)
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 
@@ -540,7 +540,7 @@ object Multimodal {
       extends RuntimeReplaceable with ImplicitCastInputTypes {
     override def children: Seq[Expression] = Seq(id, rate, n)
     override def inputTypes = Seq(LongType, IntegerType, IntegerType)
-    override lazy val replacement: Expression = StaticCall(AudioGen, BinaryType, "encode", children)
+    override lazy val replacement: Expression = StaticCall(AudioGen, BinaryType, "encode", children, neverNull = true)
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1), c(2))
   }
 
@@ -550,7 +550,7 @@ object Multimodal {
   case class Vid1Bytes(id: Expression) extends RuntimeReplaceable with ImplicitCastInputTypes {
     override def children: Seq[Expression] = Seq(id)
     override def inputTypes = Seq(LongType)
-    override lazy val replacement: Expression = StaticCall(VideoGen, BinaryType, "encode", children)
+    override lazy val replacement: Expression = StaticCall(VideoGen, BinaryType, "encode", children, neverNull = true)
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
   }
 

@@ -29,6 +29,11 @@ object GeoImagePipeline {
   /** Fixture polygons shifted around the globe so the join has matches
     * across many cells: the reference corpus polygons plus translated
     * copies (translation keeps shape; the suffix records the offset).
+    *
+    * The (fixture, copy) rows — fixture-major, `copies` per fixture — are
+    * built on the driver as a local Seq, so the DataFrame starts from a
+    * `LocalRelation`: a query over it needs no cross join and no `Range`
+    * broadcast job. Calling it runs no job.
     */
   def fixturePolygons(spark: SparkSession, copies: Int = 40): DataFrame = {
     GeoFunctions.register(spark)
@@ -39,13 +44,12 @@ object GeoImagePipeline {
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       (n.stripSuffix(".json"), s)
     }
+    val rows = for ((fixture, geojson) <- raw; copy <- 0L until copies) yield (fixture, geojson, copy)
     // deterministic translated copies: shift lng by 7.3°·i (wrapped), lat by 3.1°·i within ±70
-    val base = raw.toDF("fixture", "geojson")
-      .select($"fixture", from_geojson_geom($"geojson").as("geom0"))
-    base.crossJoin(spark.range(copies).select($"id".as("copy")))
+    rows.toDF("fixture", "geojson", "copy")
       .withColumn("dlng", (col("copy") * 7.3 + 13.0) % 340.0 - 170.0)
       .withColumn("dlat", (col("copy") * 3.1) % 140.0 - 70.0)
-      .withColumn("geom", translate_geom(col("geom0"), col("dlng"), col("dlat")))
+      .withColumn("geom", translate_geom(from_geojson_geom($"geojson"), col("dlng"), col("dlat")))
       .withColumn("poly_id", concat($"fixture", lit("#"), $"copy"))
       .select("poly_id", "geom")
   }

@@ -228,7 +228,12 @@ object ImageGen {
   }
 
   /** Attach the closed-form lng/lat (pure integer Column math — the same
-    * formula the DuckDB oracle uses). */
+    * formula the DuckDB oracle uses), reading the id back from `image_id`
+    * ("img_<id>"), so it works on any frame that carries that column.
+    * Over [[table]] itself, [[graft.geo.plans.NumberRoundTripRule]] (which
+    * [[table]] installs) folds the print-and-parse back to the numeric
+    * `id`: the coordinates cost no string work, and `image_id` is printed
+    * only for the rows a consumer reads. */
   def withLngLat(df: DataFrame): DataFrame = {
     val id = substring(col("image_id"), 5, 20).cast("long") // "img_<id>"
     df.withColumn("__h", (id * 48271L) % Mod)

@@ -82,6 +82,24 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("payload kernels are nullable only when an argument is; q80 infers no filter over the payload") {
+    for (df <- Seq(ImageGen.table(spark, 5), VideoGen.table(spark, 5)))
+      assert(!df.schema("bytes").nullable, df.schema)
+    // AudioGen.table's rate is an `id % 3` expression, which Spark declares nullable
+    val range = spark.range(5)
+    assert(!range.select(call_function("pca1_bytes", $"id", lit(8000), lit(800))).schema.head.nullable)
+    val ids = Seq[java.lang.Long](1L, null).toDF("id")
+    for (f <- Seq("grb1_bytes", "vid1_bytes"))
+      assert(ids.select(call_function(f, $"id")).schema.head.nullable, f)
+    assert(ids.select(call_function("pca1_bytes", $"id", lit(8000), lit(800))).schema.head.nullable)
+    // a non-null payload gives a non-null ahash, so the band join over it
+    // infers no isnotnull filter below the shard's projection
+    val opt = graft.SparkEntry.queries("q80_perceptual_catalog")(spark, "")
+      .queryExecution.optimizedPlan.toString
+    assert(!opt.contains("isnotnull(static_invoke(graft.ops.MmRuntime.imageAhash(") &&
+      !opt.contains("isnotnull((shiftrightunsigned("), opt)
+  }
+
   test("withLngLat matches the closed-form scala formula") {
     val rows = ImageGen.withLngLat(ImageGen.table(spark, 300))
       .select($"image_id", $"lng", $"lat").collect()
