@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Run INDEPENDENT Spark actions concurrently from the driver (guide §2.6:
   * actions are only sequential because driver code calls them sequentially
   * — submitting them from a small pool lets one job's tasks back-fill
@@ -28,5 +30,19 @@ object Par {
       }
       failures.headOption.foreach(e => throw e)
     } finally pool.shutdown()
+  }
+
+  /** Write a persisted artifact under `path` whose one-row `params` table
+    * is its commit marker: delete the marker, write each (subdirectory,
+    * frame) table — concurrently, via [[run]] — and write `params` LAST.
+    * A build that dies midway, a rebuild over an existing artifact
+    * included, leaves no marker, so no reader ever keys new tables with
+    * old parameters or old tables with new ones (a signature catalog
+    * banded another way, a cover index at another resolution). */
+  private[graft] def commit(path: String, params: DataFrame, tables: (String, DataFrame)*): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$path/params")
+    marker.getFileSystem(params.sparkSession.sparkContext.hadoopConfiguration).delete(marker, true)
+    run(tables.map { case (sub, t) => () => t.write.mode("overwrite").parquet(s"$path/$sub") }: _*)
+    params.coalesce(1).write.mode("overwrite").parquet(s"$path/params")
   }
 }

@@ -355,18 +355,17 @@ object SpatialJoins {
     * the third persisted prepare-once artifact next to the dedup signature
     * catalog and the IVF inverted file. Layout: `path/cells` = one row per
     * (cover cell, polygon) with the packed geometry struct inline;
-    * `path/params` = the hex resolution. */
+    * `path/params` = the hex resolution, the index's commit marker
+    * ([[graft.Par.commit]]): written after `cells`, so a failed rebuild at
+    * another resolution leaves no `res` over the old cells for
+    * [[pipJoinWithIndex]] to key points with. */
   def writeCoverIndex(polys: DataFrame, idCol: String, geomCol: String,
                       path: String, res: Int): Unit = {
     val spark = polys.sparkSession
     import spark.implicits._
-    // params and cells are independent writes — overlap them (guide §2.6)
-    graft.Par.run(
-      () => Seq(res).toDF("res").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/params"),
-      () => polys.select(col(idCol), col(geomCol).as("__geom"),
-          explode(hex_cover(col(geomCol), lit(res))).as("__cell"))
-        .write.mode("overwrite").parquet(s"$path/cells"))
+    graft.Par.commit(path, Seq(res).toDF("res"),
+      "cells" -> polys.select(col(idCol), col(geomCol).as("__geom"),
+        explode(hex_cover(col(geomCol), lit(res))).as("__cell")))
   }
 
   /** PIP join of a point batch against a persisted [[writeCoverIndex]]:

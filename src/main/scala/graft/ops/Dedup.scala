@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import TextFunctions._
@@ -20,11 +20,19 @@ import TextFunctions._
   *  - clusters         connected components over any pair set → canonical
   *                     ids; [[nearDedupCorpus]]/[[nearDedupEmbeddings]]
   *                     chain pairs → clusters → surviving rows
-  *  - catalog          [[writeCatalog]]/[[dedupAgainst]]/[[appendToCatalog]]:
+  *  - catalog          [[writeCatalog]]/[[dedupAgainst]]/[[appendToCatalog]]
+  *                     (text) and [[writePerceptualCatalog]]/
+  *                     [[dedupAgainstPerceptual]] (64-bit perceptual hash):
   *                     incremental dedup of NEW shards against the persisted
   *                     signature store of the accumulated corpus
-  *  - streaming        [[exactStreaming]] (hash-distinct) and
-  *                     [[nearDupStreaming]] (band-bucket first arrival)
+  *  - streaming        [[exactStreaming]] (hash-distinct),
+  *                     [[nearDupStreaming]] and [[perceptualStreaming]]
+  *                     (band-bucket first arrival)
+  *
+  * Each signature kind is banded in ONE place — [[minhashBands]] for
+  * minhash, [[bits64Bands]] for 64-bit simhash/perceptual hashes — so a
+  * kind's pairs, catalog and stream always agree on its buckets; the pair
+  * operators share [[bandedPairs]] and the streams [[ownsAllBands]].
   */
 object Dedup {
 
@@ -74,23 +82,103 @@ object Dedup {
     * HASH-distinct, not text-exact: streaming state cannot run the batch
     * verify + straggler re-group, so two DISTINCT texts that collide on
     * (64-bit hash, length) conflate with probability ~2^-64 per pair — use
-    * the batch [[exact]] when absolute exactness is the contract. With
-    * `eventTime = Some((col, delay))` a watermark is applied and state is
-    * GC'd once a group's window passes (`dropDuplicatesWithinWatermark`);
-    * without it state grows with the number of distinct documents. Works
+    * the batch [[exact]] when absolute exactness is the contract. State
+    * follows [[firstArrivals]] (watermark-GC'd with `eventTime`). Works
     * identically on batch frames (proven in SessionIvfSpec).
     */
   def exactStreaming(df: DataFrame, idCol: String, textCol: String,
-                     eventTime: Option[(String, String)] = None): DataFrame = {
-    val keyed = df.withColumn("__h", xxhash64(col(textCol)))
-      .withColumn("__l", length(col(textCol)))
-    val out = eventTime match {
-      case Some((c, delay)) =>
-        keyed.withWatermark(c, delay).dropDuplicatesWithinWatermark("__h", "__l")
-      case None => keyed.dropDuplicates("__h", "__l")
-    }
-    out.drop("__h", "__l")
+                     eventTime: Option[(String, String)] = None): DataFrame =
+    firstArrivals(df.withColumn("__h", xxhash64(col(textCol)))
+      .withColumn("__l", length(col(textCol))), Seq("__h", "__l"), eventTime)
+      .drop("__h", "__l")
+
+  /** The first-arrival state of every streaming dedup operator: one row
+    * per distinct `keys` value, the first to arrive across micro-batches.
+    * With `eventTime = Some((col, delay))` a watermark is applied and a
+    * key's state is GC'd once its window passes
+    * (`dropDuplicatesWithinWatermark`); without it state grows with the
+    * number of distinct keys. */
+  private def firstArrivals(df: DataFrame, keys: Seq[String],
+                            eventTime: Option[(String, String)]): DataFrame = eventTime match {
+    case Some((c, delay)) => df.withWatermark(c, delay).dropDuplicatesWithinWatermark(keys)
+    case None => df.dropDuplicates(keys)
   }
+
+  // ------------------------------------------------ banded signatures
+
+  /** The minhash band definition: adds `band` in [0, bands) and `bh` =
+    * xxhash64 over the band's r = numHashes/bands-row slice of
+    * `minhash_sig(text)`, and drops the signature; keeps every other
+    * column. Pairs, catalog and stream all band through here, so a catalog
+    * and an in-frame dedup agree bucket for bucket. */
+  private def minhashBands(df: DataFrame, text: Column,
+                           numHashes: Int, bands: Int, shingle: Int): DataFrame = {
+    val r = numHashes / bands
+    df.withColumn("__sig", minhash_sig(text, lit(numHashes), lit(shingle)))
+      .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
+      .withColumn("bh", xxhash64(col("band"), slice(col("__sig"), col("band") * r + 1, lit(r))))
+      .drop("__sig")
+  }
+
+  /** The 64-bit band definition (simhash and perceptual hashes): adds
+    * `band` in [0, bands) and `bh` = the band's contiguous (64/bands)-bit
+    * slice of `h` (all of `h` when bands == 1); keeps every column.
+    * Pigeonhole: two hashes within hamming < bands share an intact band.
+    * Callers check that `bands` divides 64. */
+  private def bits64Bands(df: DataFrame, h: Column, bands: Int): DataFrame = {
+    val width = 64 / bands
+    val mask  = if (bands == 1) -1L else (1L << width) - 1
+    df.withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
+      .withColumn("bh", call_function("shiftrightunsigned", h, col("band") * width)
+        .bitwiseAND(lit(mask)))
+  }
+
+  /** The pair skeleton of every banded near-dup operator: ids (`__id`)
+    * sharing any (band, bh) bucket of `banded` are candidates, verified on
+    * `payload` (an (id, value) frame). Output: id_a < id_b and `metric` =
+    * verify(value_a, value_b), kept where `keep` holds.
+    *
+    * The (__id, band, bh) stream is lazily checkpointed: both sides of the
+    * candidate self-join read it, and Spark shares identical EXCHANGES, not
+    * identical subtrees — without the checkpoint the signature kernel runs
+    * once per side (measured as the two dominant jobs of the minhash leg).
+    * Materializing costs rows × bands narrow rows — far less than a second
+    * signature pass at any scale. Callers alias their id to `__id`, not
+    * `id`: the optimizer drops a same-name alias (`id AS id`), which leaves
+    * the checkpoint partitioned on an attribute it does not output and
+    * costs the candidate `distinct` an exchange on range-partitioned input.
+    * Candidates are deduped on (id_a, id_b) BEFORE the payload is
+    * re-attached, so the wide payload never rides the band shuffle and a
+    * pair colliding in k bands is verified once. */
+  private def bandedPairs(banded: DataFrame, payload: DataFrame, metric: String,
+                          verify: (Column, Column) => Column,
+                          keep: Column => Column): DataFrame = {
+    val b = banded.select("__id", "band", "bh").localCheckpoint(eager = false)
+    b.toDF("id_a", "ba", "ha")
+      .join(b.toDF("id_b", "bb", "hb"),
+        col("ba") === col("bb") && col("ha") === col("hb") && col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+      .join(payload.toDF("id_a", "va"), Seq("id_a"))
+      .join(payload.toDF("id_b", "vb"), Seq("id_b"))
+      .withColumn(metric, verify(col("va"), col("vb")))
+      .where(keep(col(metric)))
+      .select("id_a", "id_b", metric)
+  }
+
+  /** The first-arrival skeleton of every streaming near-dup operator: each
+    * row of `banded` claims its `bands` (band, bh) buckets, the first
+    * claimant keeps a bucket ([[firstArrivals]] state), and a row survives
+    * iff it owns ALL of its buckets — a later near-dup shares >= 1 bucket
+    * with an earlier row and fails the ownership count. Output: the `keep`
+    * columns of the survivors (emit in update mode: the ownership count is
+    * a streaming aggregation). */
+  private def ownsAllBands(banded: DataFrame, bands: Int, keep: Seq[String],
+                           eventTime: Option[(String, String)]): DataFrame =
+    firstArrivals(banded, Seq("band", "bh"), eventTime)
+      .groupBy(keep.map(col): _*)
+      .agg(count(lit(1)).as("__owned"))
+      .where(col("__owned") === bands)
+      .select(keep.map(col): _*)
 
   /** MinHash-LSH candidate pairs, Jaccard-verified.
     * Probability a pair with Jaccard j collides: 1-(1-j^r)^b with
@@ -105,40 +193,16 @@ object Dedup {
     * thousands of members and the candidate join goes quadratic — measured
     * as a multi-minute hang at just 10k docs.)
     *
-    * Candidates are deduped on (id_a, id_b) BEFORE texts are re-attached, so
-    * the wide text column never rides through the shuffle.
     * Output: id_a < id_b, jaccard (>= threshold).
     */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 128, bands: Int = 16, shingle: Int = 5,
-      threshold: Double = 0.6): DataFrame = {
-    val r = numHashes / bands
-    val sig = df.select(col(idCol).as("__id"),
-      minhash_sig(col(textCol), lit(numHashes), lit(shingle)).as("__sig"))
-    // band hash = xxhash64 over the band's slice of the signature.
-    // localCheckpoint (lazy): both sides of the candidate self-join read
-    // this frame, and Spark shares only identical EXCHANGES, not identical
-    // subtrees — without the checkpoint the O(tokens) minhash kernel runs
-    // once per side (measured as the two dominant jobs of the leg).
-    // Materializing costs rows × bands narrow (id, band, bh) rows — far
-    // less than a second full signature pass at any scale.
-    val banded = sig
-      .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("__bh", xxhash64(col("__band"), slice(col("__sig"), col("__band") * r + 1, lit(r))))
-      .select("__id", "__band", "__bh")
-      .localCheckpoint(eager = false)
-    val a = banded.select(col("__band").as("ba"), col("__bh").as("ha"), col("__id").as("id_a"))
-    val b = banded.select(col("__band").as("bb"), col("__bh").as("hb"), col("__id").as("id_b"))
-    val cand = a.join(b, col("ba") === col("bb") && col("ha") === col("hb") && col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val ta = df.select(col(idCol).as("id_a"), col(textCol).as("ta"))
-    val tb = df.select(col(idCol).as("id_b"), col(textCol).as("tb"))
-    cand.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
-      .withColumn("jaccard", ngram_jaccard(col("ta"), col("tb"), lit(shingle)))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+      threshold: Double = 0.6): DataFrame =
+    bandedPairs(minhashBands(df.select(col(idCol).as("__id"), col(textCol)), col(textCol),
+        numHashes, bands, shingle),
+      df.select(col(idCol), col(textCol)), "jaccard", ngram_jaccard(_, _, lit(shingle)),
+      _ >= threshold)
 
   /** SimHash near-dup pairs: 4×16-bit band buckets guarantee recall for
     * hamming distance <= 3 (pigeonhole: any 3 flipped bits leave one band
@@ -146,20 +210,12 @@ object Dedup {
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingle: Int = 5, maxHamming: Int = 3): DataFrame = {
-    val sig = df.select(col(idCol).as("__id"), simhash64(col(textCol), lit(shingle)).as("__sh"))
-    // lazy checkpoint: the simhash kernel runs once, not once per join side
-    // (the minhashPairs discipline)
-    val banded = sig.withColumn("__band", explode(sequence(lit(0), lit(3))))
-      .withColumn("__bh", expr("shiftrightunsigned(__sh, __band * 16) & 65535"))
+    // lazy checkpoint: the signature feeds both the bands and the verify
+    // re-attach, and the simhash kernel must run once per row, not per read
+    val sig = df.select(col(idCol).as("__id"), simhash64(col(textCol), lit(shingle)).as("sh"))
       .localCheckpoint(eager = false)
-    val a = banded.select(col("__band").as("ba"), col("__bh").as("ha"),
-      col("__id").as("id_a"), col("__sh").as("sha"))
-    val b = banded.select(col("__band").as("bb"), col("__bh").as("hb"),
-      col("__id").as("id_b"), col("__sh").as("shb"))
-    a.join(b, col("ba") === col("bb") && col("ha") === col("hb") && col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("sha").bitwiseXOR(col("shb"))))
-      .where(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming").distinct()
+    bandedPairs(bits64Bands(sig, col("sh"), 4), sig, "hamming",
+      (a, b) => bit_count(a.bitwiseXOR(b)), _ <= maxHamming)
   }
 
   /** Embedding cosine near-dups via BANDED sign-random-projection buckets —
@@ -172,10 +228,8 @@ object Dedup {
     * at cosine 0.99 the defaults give ≈0.995 vs 0.48 — while bucket
     * cardinality per band stays n/2^bits, so the candidate join is bounded
     * by bands × Σ bucket², never a single giant bucket of the whole
-    * near-dup mass. Candidates are deduped on (id_a, id_b) BEFORE the
-    * vectors are re-attached, so the wide embedding arrays never ride
-    * through the banded shuffle (only ids do) and a pair colliding in k
-    * bands is verified once, not k times.
+    * near-dup mass. The wide embedding arrays never ride the banded shuffle
+    * (only ids do; [[bandedPairs]]).
     *
     * True exact-duplicate pile-ups (m identical vectors) still cost m²/2
     * VERIFIED pairs — that is the correct output, not a candidate-set
@@ -187,29 +241,15 @@ object Dedup {
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, bits: Int = 16, bands: Int = 8,
       seed: Long = 42L): DataFrame = {
-    val src = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+    val src = df.select(col(idCol).as("__id"), col(vecCol).as("v"))
     // per-band signature: an independent hyperplane family per band — the
     // band seed is avalanched through xxhash64 (a linear band<<32 offset
     // would collide with the kernel's own per-bit k<<32 offsets and make
     // bands share hyperplanes; also ANSI-safe: no overflow-checked multiply)
     val banded = src
-      .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("__bh", hyperplane_sig(col("__v"),
-        lit(bits), xxhash64(lit(seed), col("__band"))))
-      .select("__id", "__band", "__bh")
-      // lazy checkpoint: bands × bits hyperplane dot products run once,
-      // not once per join side (the minhashPairs discipline)
-      .localCheckpoint(eager = false)
-    val a = banded.select(col("__band").as("ba"), col("__bh").as("ha"), col("__id").as("id_a"))
-    val b = banded.select(col("__band").as("bb"), col("__bh").as("hb"), col("__id").as("id_b"))
-    val cand = a.join(b, col("ba") === col("bb") && col("ha") === col("hb") && col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val va = src.select(col("__id").as("id_a"), col("__v").as("va"))
-    val vb = src.select(col("__id").as("id_b"), col("__v").as("vb"))
-    cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .withColumn("cosine", vec_cosine(col("va"), col("vb")))
-      .where(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+      .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
+      .withColumn("bh", hyperplane_sig(col("v"), lit(bits), xxhash64(lit(seed), col("band"))))
+    bandedPairs(banded, src, "cosine", vec_cosine(_, _), _ >= threshold)
   }
 
   /** Substring-level (shared-passage) dup pairs — the training-data op for
@@ -303,22 +343,18 @@ object Dedup {
       maxHamming: Int = 3, maxDistM: Double = 500.0, res: Int = 6): DataFrame = {
     import graft.geo.sql.GeoFunctions.{hex_cell, hex_kring, haversine}
     import graft.geo.join.SpatialJoins.coord
-    val bands = 4
-    val a = df.select(col(idCol).as("id_a"), col(phashCol).as("pa"),
+    val a = bits64Bands(df.select(col(idCol).as("id_a"), col(phashCol).as("pa"),
         col(lngCol).as("la_lng"), col(latCol).as("la_lat"))
-      .withColumn("__cell", hex_cell(coord("la_lng"), coord("la_lat"), lit(res)))
-      .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("__bh", expr("shiftrightunsigned(pa, __band * 16) & 65535"))
+      .withColumn("__cell", hex_cell(coord("la_lng"), coord("la_lat"), lit(res))), col("pa"), 4)
     val reach = 2.0 * graft.geo.index.HexCell.sizeDeg(res)
     val shifts = when(abs(col("lb_lng")) > 180.0 - reach,
       array(lit(0.0), lit(360.0), lit(-360.0))).otherwise(array(lit(0.0)))
-    val b = df.select(col(idCol).as("id_b"), col(phashCol).as("pb"),
+    val b = bits64Bands(df.select(col(idCol).as("id_b"), col(phashCol).as("pb"),
         col(lngCol).as("lb_lng"), col(latCol).as("lb_lat"))
       .withColumn("__cell", explode(array_distinct(flatten(transform(shifts,
-        sh => hex_kring(hex_cell(col("lb_lng") + sh, col("lb_lat"), lit(res)), lit(1)))))))
-      .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("__bh", expr("shiftrightunsigned(pb, __band * 16) & 65535"))
-    a.join(b, Seq("__cell", "__band", "__bh"))
+        sh => hex_kring(hex_cell(col("lb_lng") + sh, col("lb_lat"), lit(res)), lit(1))))))),
+      col("pb"), 4)
+    a.join(b, Seq("__cell", "band", "bh"))
       .where(col("id_a") < col("id_b"))
       .withColumn("hamming", bit_count(col("pa").bitwiseXOR(col("pb"))))
       .withColumn("dist_m", haversine(coord("la_lng"), coord("la_lat"), coord("lb_lng"), coord("lb_lat")))
@@ -393,12 +429,12 @@ object Dedup {
       .select("corpus_id", "bench_id", "shared_fps")
   }
 
-  /** STREAMING near-dup dedup — the streaming twin of [[minhashPairs]] (and
-    * of the catalog's "near" mode): band buckets are the state. Every doc
-    * claims its `bands` minhash band buckets; `dropDuplicates` keeps the
-    * FIRST claimant of each bucket, and a doc survives iff it owns ALL of
-    * its buckets — a later near-dup shares >= 1 bucket with an earlier doc
-    * (the banding recall curve) and fails the ownership count.
+  /** STREAMING near-dup dedup — the streaming counterpart of
+    * [[minhashPairs]] (and of the catalog's "near" mode): band buckets are
+    * the state. Every doc claims its `bands` minhash band buckets and
+    * survives iff it owns ALL of them ([[ownsAllBands]]) — a later near-dup
+    * shares >= 1 bucket with an earlier doc (the banding recall curve) and
+    * fails the ownership count.
     *
     * Decisions are SIGNATURE-level (state holds no text, so no Jaccard
     * verify — near-threshold false drops follow the banding curve, as
@@ -412,9 +448,8 @@ object Dedup {
     * near-dup co-arrival case is inherent to signature-level banding (both
     * drops are of genuine near-dups, so the result over-deletes by at most
     * one member of a co-arriving dup pair). With `eventTime` the bucket
-    * state is watermark-GC'd (`dropDuplicatesWithinWatermark`); without it
-    * state grows with distinct buckets. Emit the result in update mode (the
-    * final ownership count is a streaming aggregation). The same holds on
+    * state is watermark-GC'd; without it state grows with distinct
+    * buckets. Emit the result in update mode. The same holds on
     * batch frames: identical results to streaming when the frame has no
     * co-arriving band-sharing pair (e.g. exact-dup-free AND near-dup-free
     * within the single batch).
@@ -423,22 +458,34 @@ object Dedup {
   def nearDupStreaming(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 128, bands: Int = 16, shingle: Int = 5,
-      eventTime: Option[(String, String)] = None): DataFrame = {
-    val r = numHashes / bands
-    val banded = df
-      .withColumn("__sig", minhash_sig(col(textCol), lit(numHashes), lit(shingle)))
-      .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("__bh", xxhash64(col("__band"), slice(col("__sig"), col("__band") * r + 1, lit(r))))
-      .drop("__sig")
-    val winners = eventTime match {
-      case Some((c, delay)) =>
-        banded.withWatermark(c, delay).dropDuplicatesWithinWatermark("__band", "__bh")
-      case None => banded.dropDuplicates("__band", "__bh")
-    }
-    winners.groupBy(col(idCol), col(textCol))
-      .agg(count(lit(1)).as("__owned"))
-      .where(col("__owned") === bands)
-      .select(col(idCol), col(textCol))
+      eventTime: Option[(String, String)] = None): DataFrame =
+    ownsAllBands(minhashBands(df, col(textCol), numHashes, bands, shingle), bands,
+      Seq(idCol, textCol), eventTime)
+
+  /** Streaming PERCEPTUAL dedup — [[nearDupStreaming]] over a 64-bit
+    * perceptual-hash column: each image claims its `bands` hash slices
+    * (first arrival wins a (band, bh) bucket — [[ownsAllBands]]) and
+    * survives iff it won ALL of them, i.e. a row drops when ANY
+    * band collides with an earlier image (a byte-identical re-crawl
+    * collides on all of them; a near-dup within hamming < bands collides
+    * on at least one). Decisions are BAND-level with no hamming verify
+    * (the winner's hash isn't visible to later rows), so false drops
+    * follow the per-band collision rate: a band is 64/bands bits and a
+    * stream with n distinct images expects ~bands·n²/2^(64/bands+1)
+    * spurious collisions — fine for daily shards at bands=4 (16-bit
+    * slices: keep shards ≪ 65k distinct images), use bands=2 (32-bit
+    * slices, recall 1.0 at hamming ≤ 1) or bands=1 (exact-hash dedup) for
+    * large streams; for full hamming-verified decisions run the batch
+    * [[dedupAgainstPerceptual]] against the catalog instead. The
+    * co-arrival caveat of [[nearDupStreaming]] applies verbatim. With
+    * `eventTime` the bucket state is watermark-GC'd
+    * (dropDuplicatesWithinWatermark). Emit in update mode. */
+  def perceptualStreaming(df: DataFrame, idCol: String, hashCol: String,
+                          bands: Int = 4,
+                          eventTime: Option[(String, String)] = None): DataFrame = {
+    require(bands >= 1 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    ownsAllBands(bits64Bands(df, col(hashCol).cast("long"), bands), bands,
+      Seq(idCol, hashCol), eventTime)
   }
 
   // ------------------------------------------------ incremental catalog
@@ -449,17 +496,12 @@ object Dedup {
     df.select(col(idCol).as("id"),
       xxhash64(col(textCol)).as("h"), length(col(textCol)).as("len"))
 
-  /** LSH band signatures per doc: (id, band, bh) — the same band-hash
-    * formula as [[minhashPairs]], so catalog and in-frame dedup agree. */
+  /** LSH band signatures per doc: (id, band, bh) — [[minhashBands]], the
+    * banding [[minhashPairs]] and [[nearDupStreaming]] use too. */
   private def bandSignatures(df: DataFrame, idCol: String, textCol: String,
-                             numHashes: Int, bands: Int, shingle: Int): DataFrame = {
-    val r = numHashes / bands
-    df.select(col(idCol).as("id"),
-        minhash_sig(col(textCol), lit(numHashes), lit(shingle)).as("__sig"))
-      .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("bh", xxhash64(col("band"), slice(col("__sig"), col("band") * r + 1, lit(r))))
-      .select("id", "band", "bh")
-  }
+                             numHashes: Int, bands: Int, shingle: Int): DataFrame =
+    minhashBands(df, col(textCol), numHashes, bands, shingle)
+      .select(col(idCol).as("id"), col("band"), col("bh"))
 
   /** Write a persisted SIGNATURE CATALOG for incremental dedup — the
     * production shape: a corpus is deduplicated ONCE, its narrow signatures
@@ -484,55 +526,50 @@ object Dedup {
     * miss every near-dup of the base corpus), and `mode = "near"` rejects
     * it with an error. Rebuild with `withMinhash = true` to dedup near.
     *
-    * `params` is the commit marker: it is deleted before the signature
-    * tables are (re)written and written last, so a build that dies midway
-    * — a rebuild over an existing catalog included — leaves no marker. */
+    * `params` is the commit marker ([[graft.Par.commit]]): it is deleted
+    * before the signature tables are (re)written and written last, so a
+    * build that dies midway — a rebuild over an existing catalog included
+    * — leaves no marker. */
   def writeCatalog(df: DataFrame, idCol: String, textCol: String, path: String,
                    numHashes: Int = 128, bands: Int = 16, shingle: Int = 5,
                    withMinhash: Boolean = true): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    val marker = new org.apache.hadoop.fs.Path(s"$path/params")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(marker, true)
-    // signature tables are independent actions over disjoint paths —
-    // submit them concurrently (guide §2.6) so one write's task tail
-    // back-fills the other's; params goes LAST as the catalog's commit
-    // marker (guard resumes on params/_SUCCESS: a crash mid-build leaves
-    // no marker and the whole catalog rebuilds)
-    graft.Par.run(
-      (() => exactSignatures(df, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$path/exact")) +:
-      (if (withMinhash)
-        Seq(() => bandSignatures(df, idCol, textCol, numHashes, bands, shingle)
-          .write.mode("overwrite").parquet(s"$path/minhash"))
-      else Seq.empty): _*)
-    Seq((numHashes, bands, shingle, withMinhash))
-      .toDF("num_hashes", "bands", "shingle", "with_minhash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    graft.Par.commit(path,
+      Seq((numHashes, bands, shingle, withMinhash))
+        .toDF("num_hashes", "bands", "shingle", "with_minhash"),
+      ("exact" -> exactSignatures(df, idCol, textCol)) +:
+        (if (withMinhash)
+          Seq("minhash" -> bandSignatures(df, idCol, textCol, numHashes, bands, shingle))
+        else Seq.empty): _*)
   }
 
   /** Append a (deduplicated) shard's signatures to an existing catalog,
     * using the catalog's own stored parameters (an exact-only catalog gets
     * exact signatures only). */
   def appendToCatalog(df: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    val p = catalogParams(df.sparkSession, path)
+    val p = catalogParams(params(df.sparkSession, path))
     exactSignatures(df, idCol, textCol).write.mode("append").parquet(s"$path/exact")
     if (p.withMinhash)
       bandSignatures(df, idCol, textCol, p.numHashes, p.bands, p.shingle)
         .write.mode("append").parquet(s"$path/minhash")
   }
 
-  /** Catalog MAINTENANCE: compaction + self-dedup. Repeated
-    * [[appendToCatalog]] calls accumulate small parquet files (one batch of
-    * files per append — the classic small-files creep) AND duplicate
-    * signature rows: a re-crawled doc appended twice matches itself forever,
-    * and every duplicate row inflates every future [[dedupAgainst]] probe.
-    * This rewrites both signature tables with exact-duplicate rows dropped
-    * (`distinct()` — identical (id, h, len) / (id, band, bh) rows collapse;
-    * a same-id doc whose TEXT changed keeps both signatures, which is
-    * correct: either matches a future re-crawl) and file counts bounded by
-    * a range-repartition on the probe keys (h; band, bh), which also gives
-    * parquet min/max stats a sorted layout to prune against.
+  /** Catalog MAINTENANCE: compaction + self-dedup, for text and perceptual
+    * catalogs alike. Repeated appends ([[appendToCatalog]],
+    * [[appendToPerceptualCatalog]]) accumulate small parquet files (one
+    * batch of files per append — the classic small-files creep) AND
+    * duplicate signature rows: a re-crawled doc appended twice matches
+    * itself forever, and every duplicate row inflates every future probe.
+    * This rewrites each signature table the catalog's own `params` names —
+    * `exact` on its probe key h, `minhash` on (band, bh) only when the
+    * catalog carries it (`with_minhash`), a perceptual catalog's `phash`
+    * (no `num_hashes` column) on (band, bh) — with exact-duplicate rows
+    * dropped (`distinct()` — identical (id, h, len) / (id, band, bh[, ph])
+    * rows collapse; a same-id doc whose TEXT changed keeps both
+    * signatures, which is correct: either matches a future re-crawl) and
+    * file counts bounded by a range-repartition on the probe keys, which
+    * also gives parquet min/max stats a sorted layout to prune against.
     *
     * The rewrite is CRASH-SAFE in the [[graft.pipeline.Stages]] `_SUCCESS`
     * discipline: the compacted copy lands in a sibling tmp dir first and
@@ -543,17 +580,16 @@ object Dedup {
     * Readers concurrent with the swap itself can see a briefly missing
     * path and must retry — see [[swapSubdir]] for the exact contract.
     */
-  def compactCatalog(spark: org.apache.spark.sql.SparkSession, path: String,
-                     filesPerTable: Int = 4): Unit = {
+  def compactCatalog(spark: SparkSession, path: String, filesPerTable: Int = 4): Unit = {
     require(filesPerTable > 0, s"filesPerTable must be positive, got $filesPerTable")
-    swapSubdir(path, "exact") { out =>
-      spark.read.parquet(s"$path/exact").distinct()
-        .repartitionByRange(filesPerTable, col("h"))
-        .write.parquet(out)
-    }
-    swapSubdir(path, "minhash") { out =>
-      spark.read.parquet(s"$path/minhash").distinct()
-        .repartitionByRange(filesPerTable, col("band"), col("bh"))
+    val p = params(spark, path)
+    val tables =
+      if (!p.schema.fieldNames.contains("num_hashes")) Seq("phash" -> Seq("band", "bh"))
+      else ("exact" -> Seq("h")) +:
+        (if (catalogParams(p).withMinhash) Seq("minhash" -> Seq("band", "bh")) else Seq.empty)
+    for ((sub, keys) <- tables) swapSubdir(path, sub) { out =>
+      spark.read.parquet(s"$path/$sub").distinct()
+        .repartitionByRange(filesPerTable, keys.map(col): _*)
         .write.parquet(out)
     }
   }
@@ -591,17 +627,19 @@ object Dedup {
   private final case class CatalogParams(numHashes: Int, bands: Int, shingle: Int,
                                           withMinhash: Boolean)
 
-  /** A catalog written before `with_minhash` was recorded always carried
-    * the minhash table. */
-  private def catalogParams(spark: org.apache.spark.sql.SparkSession, path: String): CatalogParams = {
-    val p = spark.read.parquet(s"$path/params").head
+  /** The one-row `params` table of a committed catalog. */
+  private def params(spark: SparkSession, path: String): Row =
+    spark.read.parquet(s"$path/params").head
+
+  /** A text catalog's parameters. A catalog written before `with_minhash`
+    * was recorded always carried the minhash table. */
+  private def catalogParams(p: Row): CatalogParams =
     CatalogParams(p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"), p.getAs[Int]("shingle"),
       !p.schema.fieldNames.contains("with_minhash") || p.getAs[Boolean]("with_minhash"))
-  }
 
   /** Parameters of a catalog about to be probed by minhash bands. */
-  private def nearParams(spark: org.apache.spark.sql.SparkSession, path: String): CatalogParams = {
-    val p = catalogParams(spark, path)
+  private def nearParams(spark: SparkSession, path: String): CatalogParams = {
+    val p = catalogParams(params(spark, path))
     if (!p.withMinhash) throw new IllegalArgumentException(
       s"catalog $path was written with withMinhash = false: its minhash table holds at most " +
         "appended shards, so near-dup matching would miss the base corpus; use mode = \"exact\" " +
@@ -635,7 +673,7 @@ object Dedup {
       .join(broadcast(exactSignatures(shard, idCol, textCol)
         .withColumnRenamed("id", "__sid")), Seq("h", "len"))
       .select("__sid")
-    val matched = (mode match {
+    dropMatched(shard, idCol, mode match {
       case "exact" => exactMatched
       case "near" =>
         val p = nearParams(spark, catalogPath)
@@ -646,10 +684,15 @@ object Dedup {
             .select("__sid"))
       case other => throw new IllegalArgumentException(
         s"dedupAgainst mode must be 'exact' or 'near', got '$other'")
-    }).distinct()
-    shard.join(broadcast(matched.withColumnRenamed("__sid", "__matched_id")),
-      col(idCol) === col("__matched_id"), "left_anti")
+    })
   }
+
+  /** The shard rows whose id is not in `matched` (one column of shard
+    * ids), for both catalog kinds: only the narrow, deduplicated
+    * matched-id set rides the final broadcast anti-join. */
+  private def dropMatched(shard: DataFrame, idCol: String, matched: DataFrame): DataFrame =
+    shard.join(broadcast(matched.distinct().toDF("__matched_id")),
+      col(idCol) === col("__matched_id"), "left_anti")
 
   /** Pair-level view of [[dedupAgainst]]: (shard_id, catalog_id) signature
     * matches with provenance — `exact` (hash+length match) and `n_bands`
@@ -772,129 +815,62 @@ object Dedup {
   def nearDedupCorpus(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 128, bands: Int = 16, shingle: Int = 5,
-      threshold: Double = 0.6): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, numHashes, bands, shingle, threshold)
-    // anti-join on the DUP ids (pairs-only clustering): rows in no pair are
-    // singletons and survive untouched, without dragging the whole corpus id
-    // set through the label-propagation rounds as a universe would
-    val dups = clusters(pairs, idCol).where(col("is_dup")).select(col(idCol))
-    df.join(dups, Seq(idCol), "left_anti")
-  }
+      threshold: Double = 0.6): DataFrame =
+    dropClusterDups(df, idCol, minhashPairs(df, idCol, textCol, numHashes, bands, shingle, threshold))
 
-  /** Embedding-side twin of [[nearDedupCorpus]]: [[embeddingPairs]] →
+  /** [[nearDedupCorpus]] over embeddings: [[embeddingPairs]] →
     * [[clusters]] → keep one canonical row per cosine-near-dup cluster. */
   def nearDedupEmbeddings(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, bits: Int = 16, bands: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    val pairs = embeddingPairs(df, idCol, vecCol, threshold, bits, bands, seed)
-    val dups = clusters(pairs, idCol).where(col("is_dup")).select(col(idCol))
-    df.join(dups, Seq(idCol), "left_anti")
-  }
+      seed: Long = 42L): DataFrame =
+    dropClusterDups(df, idCol, embeddingPairs(df, idCol, vecCol, threshold, bits, bands, seed))
+
+  /** The rows of `df` that are no cluster's duplicate. Anti-joins on the
+    * DUP ids (pairs-only clustering): rows in no pair are singletons and
+    * survive untouched, without dragging the whole corpus id set through
+    * the label-propagation rounds as a universe would. */
+  private def dropClusterDups(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    df.join(clusters(pairs, idCol).where(col("is_dup")).select(col(idCol)), Seq(idCol), "left_anti")
 
   // --------------------------------- perceptual (image) catalog dedup
 
   /** Banded signatures of a 64-bit PERCEPTUAL hash: (id, band, bh, ph) —
-    * `bands` contiguous (64/bands)-bit slices, the [[geoPhashPairs]]
-    * banding. Pigeonhole: any pair within hamming < bands shares at least
-    * one intact band, so with the default 4×16-bit bands recall is 1.0 at
-    * the hamming ≤ 3 verify threshold. The full hash rides along for the
-    * verify — 20 bytes/row total, never the payload. */
+    * [[bits64Bands]], the [[geoPhashPairs]] banding. Pigeonhole: any pair
+    * within hamming < bands shares at least one intact band, so with the
+    * default 4×16-bit bands recall is 1.0 at the hamming ≤ 3 verify
+    * threshold. The full hash rides along for the verify — 20 bytes/row
+    * total, never the payload. */
   private def phashBands(df: DataFrame, idCol: String, hashCol: String,
                          bands: Int): DataFrame = {
     require(bands >= 2 && 64 % bands == 0, s"bands must divide 64 (>=2), got $bands")
-    val width = 64 / bands
-    val mask  = (1L << width) - 1
-    df.select(col(idCol).as("id"), col(hashCol).cast("long").as("ph"))
-      .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("bh", expr(s"shiftrightunsigned(ph, band * $width) & ${mask}L"))
+    bits64Bands(df.select(col(idCol).as("id"), col(hashCol).cast("long").as("ph")), col("ph"), bands)
       .select("id", "band", "bh", "ph")
   }
 
-  /** [[writeCatalog]]'s PERCEPTUAL twin for image corpora: persist the
-    * banded 64-bit perceptual-hash signatures (e.g. the pixel-computed
+  /** The perceptual-hash catalog for image corpora: persist the banded
+    * 64-bit perceptual-hash signatures (e.g. the pixel-computed
     * `image_ahash`, or any phash) of the accepted corpus, so every future
     * image shard dedups against the accumulated store WITHOUT re-reading a
     * byte of historical payload — at 10^12 images the payloads are ~100 TB
     * while this catalog is ~80 GB of (id, band, bh, ph) rows. Layout:
-    * `params` one row (bands); `phash` (id, band, bh, ph). Grow with
-    * [[appendToPerceptualCatalog]]. */
+    * `params` one row (bands); `phash` (id, band, bh, ph). `params` is the
+    * commit marker, written last as in [[writeCatalog]]: a failed rebuild
+    * leaves no `bands` value over a table banded another way. Grow with
+    * [[appendToPerceptualCatalog]], compact with [[compactCatalog]]. */
   def writePerceptualCatalog(df: DataFrame, idCol: String, hashCol: String,
                              path: String, bands: Int = 4): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    Seq(bands).toDF("bands").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/params")
-    phashBands(df, idCol, hashCol, bands)
-      .write.mode("overwrite").parquet(s"$path/phash")
+    graft.Par.commit(path, Seq(bands).toDF("bands"), "phash" -> phashBands(df, idCol, hashCol, bands))
   }
 
   /** Append an accepted shard's perceptual signatures, using the catalog's
-    * stored band count (compact with [[compactCatalog]]-style rewrites if
-    * appends accumulate small files). */
+    * stored band count. */
   def appendToPerceptualCatalog(df: DataFrame, idCol: String, hashCol: String,
-                                path: String): Unit = {
-    val bands = df.sparkSession.read.parquet(s"$path/params").head.getAs[Int]("bands")
-    phashBands(df, idCol, hashCol, bands).write.mode("append").parquet(s"$path/phash")
-  }
-
-  /** Streaming PERCEPTUAL dedup — [[nearDupStreaming]]'s image twin over a
-    * 64-bit perceptual-hash column: each image claims its `bands` hash
-    * slices (first arrival wins a (band, bh) bucket — dropDuplicates
-    * state) and survives iff it won ALL of them, i.e. a row drops when ANY
-    * band collides with an earlier image (a byte-identical re-crawl
-    * collides on all of them; a near-dup within hamming < bands collides
-    * on at least one). Decisions are BAND-level with no hamming verify
-    * (the winner's hash isn't visible to later rows), so false drops
-    * follow the per-band collision rate: a band is 64/bands bits and a
-    * stream with n distinct images expects ~bands·n²/2^(64/bands+1)
-    * spurious collisions — fine for daily shards at bands=4 (16-bit
-    * slices: keep shards ≪ 65k distinct images), use bands=2 (32-bit
-    * slices, recall 1.0 at hamming ≤ 1) or bands=1 (exact-hash dedup) for
-    * large streams; for full hamming-verified decisions run the batch
-    * [[dedupAgainstPerceptual]] against the catalog instead. The
-    * co-arrival caveat of [[nearDupStreaming]] applies verbatim. With
-    * `eventTime` the bucket state is watermark-GC'd
-    * (dropDuplicatesWithinWatermark). Emit in update mode. */
-  def perceptualStreaming(df: DataFrame, idCol: String, hashCol: String,
-                          bands: Int = 4,
-                          eventTime: Option[(String, String)] = None): DataFrame = {
-    require(bands >= 1 && 64 % bands == 0, s"bands must divide 64, got $bands")
-    val width = 64 / bands
-    val mask  = if (bands == 1) -1L else (1L << width) - 1
-    val banded = df
-      .withColumn("__ph", col(hashCol).cast("long"))
-      .withColumn("__band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("__bh", expr(s"shiftrightunsigned(__ph, __band * $width) & ${mask}L"))
-      .drop("__ph")
-    val winners = eventTime match {
-      case Some((c, delay)) =>
-        banded.withWatermark(c, delay).dropDuplicatesWithinWatermark("__band", "__bh")
-      case None => banded.dropDuplicates("__band", "__bh")
-    }
-    winners.groupBy(col(idCol), col(hashCol))
-      .agg(count(lit(1)).as("__owned"))
-      .where(col("__owned") === bands)
-      .select(col(idCol), col(hashCol))
-  }
-
-  /** Perceptual-catalog MAINTENANCE — [[compactCatalog]]'s twin for the
-    * `phash` table: repeated [[appendToPerceptualCatalog]] calls accumulate
-    * small parquet files and duplicate (id, band, bh, ph) rows (a re-crawled
-    * image appended twice matches itself forever). Rewrites the table with
-    * exact-duplicate rows dropped and file count bounded by a range
-    * repartition on the probe keys (band, bh) — which also gives parquet
-    * min/max stats a sorted layout to prune against — atomically via the
-    * same tmp-dir + two-rename swap. */
-  def compactPerceptualCatalog(spark: org.apache.spark.sql.SparkSession,
-                               path: String, filesPerTable: Int = 4): Unit = {
-    require(filesPerTable > 0, s"filesPerTable must be positive, got $filesPerTable")
-    swapSubdir(path, "phash") { out =>
-      spark.read.parquet(s"$path/phash").distinct()
-        .repartitionByRange(filesPerTable, col("band"), col("bh"))
-        .write.parquet(out)
-    }
-  }
+                                path: String): Unit =
+    phashBands(df, idCol, hashCol, params(df.sparkSession, path).getAs[Int]("bands"))
+      .write.mode("append").parquet(s"$path/phash")
 
   /** Incremental PERCEPTUAL dedup of a new image shard against a persisted
     * catalog: returns the shard rows whose hash is NOT within `maxHamming`
@@ -909,14 +885,11 @@ object Dedup {
   def dedupAgainstPerceptual(shard: DataFrame, idCol: String, hashCol: String,
                              catalogPath: String, maxHamming: Int = 3): DataFrame = {
     val spark = shard.sparkSession
-    val bands = spark.read.parquet(s"$catalogPath/params").head.getAs[Int]("bands")
-    val sig = phashBands(shard, idCol, hashCol, bands)
+    val sig = phashBands(shard, idCol, hashCol, params(spark, catalogPath).getAs[Int]("bands"))
       .withColumnRenamed("id", "__sid").withColumnRenamed("ph", "__sph")
-    val matched = spark.read.parquet(s"$catalogPath/phash")
+    dropMatched(shard, idCol, spark.read.parquet(s"$catalogPath/phash")
       .join(broadcast(sig), Seq("band", "bh"))
       .where(bit_count(col("ph").bitwiseXOR(col("__sph"))) <= maxHamming)
-      .select("__sid").distinct()
-    shard.join(broadcast(matched.withColumnRenamed("__sid", "__matched_id")),
-      col(idCol) === col("__matched_id"), "left_anti")
+      .select("__sid"))
   }
 }

@@ -58,7 +58,9 @@ object AudioGen {
     * Dataset-encoder boundary, and the payload prunes when unread. */
   def table(spark: SparkSession, n: Long, nSamples: Int = 800): DataFrame = {
     graft.ops.Multimodal.register(spark)
-    val rate = (lit(8000L) + (col("id") % 3) * 4000L).cast("int")
+    // a `when` chain over literals, not `8000 + (id % 3) * 4000`: Spark
+    // declares `%` nullable, which would make the payload column nullable
+    val rate = when(col("id") % 3 === 0, 8000).when(col("id") % 3 === 1, 12000).otherwise(16000)
     spark.range(n).select(
       concat(lit("aud_"), col("id").cast("string")).as("audio_id"),
       call_function("pca1_bytes", col("id"), rate, lit(nSamples)).as("bytes"),

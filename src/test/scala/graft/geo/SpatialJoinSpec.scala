@@ -254,6 +254,24 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), "index side must broadcast")
   }
 
+  test("a failed cover-index rebuild at another resolution leaves no params marker") {
+    val polys = (0 until 4).map { i =>
+      val w = i * 40.0 - 165.0
+      (i.toLong, s"""{"type":"Polygon","coordinates":[[[$w,0.0],[${w + 30},0.0],[${w + 30},25.0],[$w,25.0],[$w,0.0]]]}""")
+    }.toDF("poly_id", "json")
+      .select($"poly_id", from_geojson_geom($"json").as("geom"))
+    val idx = java.nio.file.Files.createTempDirectory("graft_spidx_rebuild").toString + "/spidx"
+    graft.geo.join.SpatialJoins.writeCoverIndex(polys, "poly_id", "geom", idx, res = 3)
+    assert(new java.io.File(s"$idx/params/_SUCCESS").exists())
+    // a res-4 marker over the res-3 cells would key points at the wrong resolution
+    val failing = polys.withColumn("geom",
+      when($"poly_id" === 2L, raise_error(lit("geometry column failed"))).otherwise($"geom"))
+    intercept[Exception](
+      graft.geo.join.SpatialJoins.writeCoverIndex(failing, "poly_id", "geom", idx, res = 4))
+    assert(!new java.io.File(s"$idx/params").exists(),
+      "the previous index's params survived a failed rebuild")
+  }
+
   test("distanceJoin equals brute force: uniform, polar and seam queries; no dup pairs") {
     val pts = spark.range(3000).select(
       $"id".as("pid"),

@@ -44,4 +44,38 @@ class CatalogParamsSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/params").exists(),
       "the previous build's params survived a failed rebuild")
   }
+
+  test("a failed rebuild of a perceptual catalog leaves no params marker") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pcat_rebuild").toString + "/catalog"
+    Dedup.writePerceptualCatalog(spark.range(50).select($"id", xxhash64($"id").as("ph")),
+      "id", "ph", dir)
+    assert(new java.io.File(s"$dir/params/_SUCCESS").exists())
+    // the rebuild bands another way: a surviving marker would claim 2 bands
+    // over a table still banded 4 ways (or a half-written one)
+    val failing = spark.range(50).select($"id",
+      when($"id" === 7L, raise_error(lit("hash column failed"))).otherwise(xxhash64($"id")).as("ph"))
+    intercept[Exception](Dedup.writePerceptualCatalog(failing, "id", "ph", dir, bands = 2))
+    assert(!new java.io.File(s"$dir/params").exists(),
+      "the previous build's params survived a failed rebuild")
+  }
+
+  test("compactCatalog on an exact-only catalog compacts exact and writes no minhash") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cat_compact_exact").toString + "/catalog"
+    val base = corpus(30, "compact")
+    Dedup.writeCatalog(base, "id", "text", dir, withMinhash = false)
+    Dedup.appendToCatalog(base, "id", "text", dir)
+    Dedup.appendToCatalog(base, "id", "text", dir)
+    val shard = corpus(10, "compact").select(($"id" + 9000L).as("id"), $"text")
+      .unionByName(corpus(5, "fresh").select(($"id" + 9100L).as("id"), $"text"))
+    def survivors() = Dedup.dedupAgainst(shard, "id", "text", dir, mode = "exact")
+      .select("id").as[Long].collect().toSet
+    val before = survivors()
+    assert(before == (9100L until 9105L).toSet, before.toString)
+    val distinctRows = spark.read.parquet(s"$dir/exact").distinct().count()
+    assert(spark.read.parquet(s"$dir/exact").count() == 3 * distinctRows)
+    Dedup.compactCatalog(spark, dir, filesPerTable = 2)
+    assert(spark.read.parquet(s"$dir/exact").count() == distinctRows && distinctRows == 30L)
+    assert(survivors() == before)
+    assert(!new java.io.File(s"$dir/minhash").exists(), "compaction created a minhash table")
+  }
 }

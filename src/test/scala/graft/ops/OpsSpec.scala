@@ -669,7 +669,7 @@ class OpsSpec extends AnyFunSuite {
     // maintenance: a duplicate append self-dedups under compaction, file
     // count bounded, dedup results identical
     Dedup.appendToPerceptualCatalog(survivors, "id", "ph", dir)
-    Dedup.compactPerceptualCatalog(spark, dir, filesPerTable = 2)
+    Dedup.compactCatalog(spark, dir, filesPerTable = 2)
     assert(Dedup.dedupAgainstPerceptual(shard, "id", "ph", dir).isEmpty)
     val rows = spark.read.parquet(s"$dir/phash")
     assert(rows.count() == rows.distinct().count(), "compaction must drop duplicate signature rows")

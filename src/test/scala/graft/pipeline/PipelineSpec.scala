@@ -83,9 +83,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("payload kernels are nullable only when an argument is; q80 infers no filter over the payload") {
-    for (df <- Seq(ImageGen.table(spark, 5), VideoGen.table(spark, 5)))
+    for (df <- Seq(ImageGen.table(spark, 5), AudioGen.table(spark, 5), VideoGen.table(spark, 5)))
       assert(!df.schema("bytes").nullable, df.schema)
-    // AudioGen.table's rate is an `id % 3` expression, which Spark declares nullable
     val range = spark.range(5)
     assert(!range.select(call_function("pca1_bytes", $"id", lit(8000), lit(800))).schema.head.nullable)
     val ids = Seq[java.lang.Long](1L, null).toDF("id")
