@@ -728,58 +728,6 @@ object Overlay {
     GeoAlgo.Clipped(gt, coords.result(), pos.toArray, ring.toArray, Array(0, nPaths))
   }
 
-  /** Test/debug hook: cell-area sum and linked-ring signed areas of an
-    * areal×areal intersection, BEFORE classification — pinpoints whether a
-    * discrepancy is in decomposition or in stitching. */
-  def debugIntersection(gtA: Int, cA: Array[Double], pA: Array[Int], rA: Array[Int], fA: Array[Int],
-                        gtB: Int, cB: Array[Double], pB: Array[Int], rB: Array[Int], fB: Array[Int])
-      : (Double, Int, Seq[Double]) = {
-    val uA = GeoAlgo.unwrapParts(cA, pA, rA, fA)
-    val uB = GeoAlgo.unwrapParts(cB, pB, rB, fB)
-    val es = new Edges
-    addRingEdges(es, uA, pA, rA, 0, rA.length - 1, 0, 0.0)
-    addRingEdges(es, uB, pB, rB, 0, rB.length - 1, 1, 0.0)
-    val cs = cells(es, (a, b) => (a & 1) != 0 && (b & 1) != 0)
-    val sum = cs.map(c => 0.5 * (c.y1 - c.y0) * ((c.xr0 - c.xl0) + (c.xr1 - c.xl1))).sum
-    val levels = snapCorners(cs)
-    val (sx, sy, ex, ey) = boundaryEdges(cs, levels)
-    val ringAreas = linkRings(sx, sy, ex, ey).map { case (xs, ys) => 0.5 * signedArea2(xs, ys) }
-    (sum, cs.length, ringAreas)
-  }
-
-  /** Test/debug hook: ring vertex lists before and after simplification. */
-  def debugSimplify(gtA: Int, cA: Array[Double], pA: Array[Int], rA: Array[Int], fA: Array[Int],
-                    gtB: Int, cB: Array[Double], pB: Array[Int], rB: Array[Int], fB: Array[Int])
-      : Seq[(Seq[(Double, Double)], Seq[(Double, Double)])] = {
-    val uA = GeoAlgo.unwrapParts(cA, pA, rA, fA)
-    val uB = GeoAlgo.unwrapParts(cB, pB, rB, fB)
-    val es = new Edges
-    addRingEdges(es, uA, pA, rA, 0, rA.length - 1, 0, 0.0)
-    addRingEdges(es, uB, pB, rB, 0, rB.length - 1, 1, 0.0)
-    val cs = cells(es, (a, b) => (a & 1) != 0 && (b & 1) != 0)
-    val levels = snapCorners(cs)
-    val (sx, sy, ex, ey) = boundaryEdges(cs, levels)
-    linkRings(sx, sy, ex, ey).map { case (xs, ys) =>
-      val (x2, y2) = simplifyRing(xs, ys)
-      (xs.zip(ys).toSeq, x2.zip(y2).toSeq)
-    }
-  }
-
-  /** Test/debug hook: per-part (shell, holes) signed areas after the full
-    * planar pipeline (simplify + classify + assign). */
-  def debugParts(gtA: Int, cA: Array[Double], pA: Array[Int], rA: Array[Int], fA: Array[Int],
-                 gtB: Int, cB: Array[Double], pB: Array[Int], rB: Array[Int], fB: Array[Int])
-      : Seq[(Double, Seq[Double])] = {
-    val uA = GeoAlgo.unwrapParts(cA, pA, rA, fA)
-    val uB = GeoAlgo.unwrapParts(cB, pB, rB, fB)
-    val es = new Edges
-    addRingEdges(es, uA, pA, rA, 0, rA.length - 1, 0, 0.0)
-    addRingEdges(es, uB, pB, rB, 0, rB.length - 1, 1, 0.0)
-    planarParts(OpIntersection, es).map { case (xs, ys, hs) =>
-      (0.5 * signedArea2(xs, ys), hs.map(h => 0.5 * signedArea2(h._1, h._2)))
-    }
-  }
-
   // --------------------------------------------------------- validity audit
 
   /** Pragmatic OGC-style validity audit — the data-QA gate a geometry

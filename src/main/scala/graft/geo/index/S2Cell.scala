@@ -367,19 +367,6 @@ object S2Cell {
     out.result()
   }
 
-  /** Pick a covering level so the cover stays under ~maxCells for this box
-    * (cell edge ~ box size / 2), then cover.
-    */
-  def coverBoxAdaptive(w: Double, s: Double, e: Double, n: Double, maxCells: Int): Array[Long] = {
-    var lvl = levelForBox(w, s, e, n)
-    var cover = coverBox(w, s, e, n, lvl)
-    while (cover.length > maxCells && lvl > 0) {
-      lvl -= 1
-      cover = coverBox(w, s, e, n, lvl)
-    }
-    cover
-  }
-
   /** Level whose cell edge is roughly half the larger box dimension. */
   def levelForBox(w: Double, s: Double, e: Double, n: Double): Int = {
     val dLng = if (e >= w) e - w else e - w + 360

@@ -2,6 +2,7 @@ package graft.geo.join
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.geo.sql.GeoFunctions._
 import graft.geo.index.{HexCell, S2Cell}
@@ -102,8 +103,8 @@ object SpatialJoins {
     * geometries), points explode their ancestor cell per level
     * (maxLevel-minLevel+1 rows, a narrow map). Cover cells are disjoint and
     * a point has one ancestor per level, so each (point, polygon) pair
-    * matches at most once — no dedup needed. Same refine step as
-    * [[pipJoin]].
+    * matches at most once — no dedup needed. Both sides join on
+    * [[s2Key]]. Same refine step as [[pipJoin]].
     */
   def pipJoinMultiLevel(
       points: DataFrame,
@@ -116,8 +117,10 @@ object SpatialJoins {
       broadcastPolys: Boolean = true): DataFrame = {
     val polyCells = polys.withColumn("__cell",
       explode(s2_cover_multi(col(geomCol), lit(minLevel), lit(maxLevel))))
+      .withColumn("__cell", s2Key(col("__cell")))
     val ptCells = points.withColumn("__cell",
       explode(s2_ancestors(col(lngCol), col(latCol), lit(minLevel), lit(maxLevel))))
+      .withColumn("__cell", s2Key(col("__cell")))
     val rhs = if (broadcastPolys) broadcast(polyCells) else polyCells
     ptCells.join(rhs, Seq("__cell"))
       .where(st_contains(col(geomCol), coord(lngCol), coord(latCol)))
@@ -136,7 +139,8 @@ object SpatialJoins {
     * finer cell is lifted to its ancestors:
     * `(A.cells ⋈ B.cells∪ancestors) ∪ (A.cells∪ancestors ⋈ B.cells)`,
     * two plain equi-joins, deduped on (aId, bId). Covers are O(perimeter) at
-    * `maxLevel`; ancestor lifting adds × (levels). Refinement is the exact
+    * `maxLevel`; ancestor lifting adds × (levels). Both sides join on
+    * [[s2Key]]. Refinement is the exact
     * planar [[graft.geo.algo.GeoAlgo.intersectsGeoms]] kernel
     * (`st_intersects`).
     *
@@ -156,7 +160,8 @@ object SpatialJoins {
     def keys(df: DataFrame, id: String, geom: String, pos: String): DataFrame =
       df.select(col(id), col(geom))
         .withColumn("__c0", explode(s2_cover_multi(col(geom), lit(minLevel), lit(maxLevel))))
-        .select(col(id), posexplode(s2_cell_ancestors(col("__c0"), lit(minLevel))).as(Seq(pos, "__cell")))
+        .select(col(id), posexplode(s2_cell_ancestors(col("__c0"), lit(minLevel))).as(Seq(pos, "__c")))
+        .select(col(id), col(pos), s2Key(col("__c")).as("__cell"))
     val aK = keys(aDf, aId, aGeom, "__pa")
     val bK = keys(bDf, bId, bGeom, "__pb")
     val rhsK = if (broadcastB) broadcast(bK) else bK
@@ -205,10 +210,9 @@ object SpatialJoins {
   /** kNN join: for each query row the k nearest point rows by haversine —
     * a thin entry into [[knnJoinS2]]'s metric-cap loop, which certifies at
     * any latitude and across the antimeridian with no routing or seam
-    * probing. `res` only sizes that loop's finest cover level: the coarsest
+    * probing. `res` only sets that loop's finest probe level: the coarsest
     * S2 level whose cells are no wider than a hex cell at `res`, and never
-    * coarser than level 10 (so `res <= 6` keeps the 4..10 default; a
-    * res-matched level 8 is slower on the dense-query workloads).
+    * coarser than level 10 (so `res <= 6` keeps the 4..10 default).
     *
     * @param queries DataFrame with (qidCol, qLng, qLat)
     * @param points  DataFrame with (idCol, pLng, pLat); extra cols carried
@@ -239,8 +243,9 @@ object SpatialJoins {
     *        band — from haversine ≥ 2R·cos φmax·sin(|Δλ|/2) — so every point
     *        within r lies inside the box; full-longitude when the band
     *        touches a pole or Δλ ≥ 180°.
-    * The box is covered multi-level (`s2_cover_box`, normalized disjoint) and
-    * equi-joined against the points' level ancestors, so each (q, p) pair
+    * Each round probes ONE S2 level, chosen from r and clamped to
+    * [minLevel, maxLevel] ([[capCandidates]]): the box's few cells at that
+    * level against each point's single cell there, so each (q, p) pair
     * appears at most once. A query is DONE when it holds k hits with the
     * k-th distance ≤ r: nothing outside the cap can be nearer. Only the
     * undecided queries ride the next round. Stragglers (neighborhood
@@ -276,20 +281,20 @@ object SpatialJoins {
     // round, so a 16x row-count error costs exactly one extra round; the
     // clamp bounds the damage from a degenerate estimate. Pass an explicit
     // initialRadiusM when the true density is known.
-    val r0 =
-      if (initialRadiusM > 0) initialRadiusM
-      else {
-        val n = planTimeRowEstimate(points)
-        math.min(2.0e6, math.max(50.0, 2.0 * math.sqrt(k * 5.1e14 / (math.Pi * n))))
-      }
+    val r0 = if (initialRadiusM > 0) initialRadiusM else autoRadiusM(points, k)
 
-    val pts = points.withColumn("__pcell",
-      explode(s2_ancestors(col(pLng), col(pLat), lit(minLevel), lit(maxLevel))))
     def finite(c: String) = col(c).isNotNull && !isnan(col(c).cast("double"))
     val coordsOk = finite(qLng) && finite(qLat)
     val byDist = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
     val byQuery = Window.partitionBy(col(qidCol))
     val sc = queries.sparkSession.sparkContext
+    // a round's certified ids are a subset of the queries' ids: broadcast
+    // them when those fit under the broadcast threshold. Left to the plan,
+    // their size is the candidate join's cartesian estimate, which passes
+    // the threshold at a few dozen queries and costs the anti join a
+    // shuffle per side
+    val idsFit = queries.select(col(qidCol)).queryExecution.optimizedPlan.stats.sizeInBytes <=
+      SQLConf.get.autoBroadcastJoinThreshold
     val callerDescription = sc.getLocalProperty("spark.job.description")
 
     // `remaining` holds every undecided query, those with a null or NaN
@@ -308,15 +313,9 @@ object SpatialJoins {
       val counts = try {
         // capBox > r > rDone: the box is a hair wide and the done test a
         // hair strict, so float rounding can never exclude a true neighbor
-        // the done test would have trusted (box may wrap <-180:
-        // s2_cover_box normalizes)
-        val (w0, sBound, e0, nBound) = capBox(col(qLng), col(qLat), radiusM)
-        val cand = remaining.where(coordsOk)
-          .withColumn("__cell", explode(s2_cover_box(w0, sBound, e0, nBound,
-            lit(minLevel), lit(maxLevel))))
-          .join(pts, col("__cell") === col("__pcell"))
-          .drop("__cell", "__pcell")
-          .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
+        // the done test would have trusted
+        val cand = capCandidates(remaining.where(coordsOk), qLng, qLat,
+          points, pLng, pLat, radiusM, minLevel, maxLevel)
         // localCheckpoint: each round's plan would otherwise EMBED every
         // prior round's plan and Catalyst analysis time grows exponentially
         // with rounds. The done test is a window aggregate over the same
@@ -327,9 +326,9 @@ object SpatialJoins {
           .localCheckpoint(eager = false)
         val done = ranked.where(col("__done")).drop("__done")
         resultOpt = Some(resultOpt.map(_.unionByName(done)).getOrElse(done))
+        val certified = ranked.where(col("__done") && col("rank") === 1).select(col(qidCol))
         remaining = remaining
-          .join(ranked.where(col("__done") && col("rank") === 1).select(col(qidCol)),
-            Seq(qidCol), "left_anti")
+          .join(if (idsFit) broadcast(certified) else certified, Seq(qidCol), "left_anti")
           .localCheckpoint(eager = false)
         // one action: materializes ranked + remaining and sizes both the
         // next round and the tail
@@ -411,16 +410,15 @@ object SpatialJoins {
 
   /** WITHIN-DISTANCE join (distance join): every (query, point) pair within
     * `maxDistM` metres — the set-returning sibling of [[knnJoinS2]], using
-    * the same metric-cap S2 box covers (pole-safe: caps peaking above
-    * |lat| 89.99° take the full-longitude band; seam-safe: w > e boxes wrap
-    * through ±180), but with NO radius loop or window — the radius is given,
-    * so the plan is one cover explode, one cell equi-join and an exact
-    * haversine refine. Covers are normalized DISJOINT and the point side
-    * explodes its ancestor chain, so every true pair matches on exactly one
-    * cell — no post-join dedup, no pair ever verified twice. Scale shape:
-    * both sides shuffle once on the int64 cell key (or the smaller side
-    * broadcasts under AQE); candidate fan-in per query is the cap's point
-    * count.
+    * the same metric-cap candidates ([[capCandidates]]; pole-safe: caps
+    * peaking above |lat| 89.99° take the full-longitude band; seam-safe:
+    * w > e boxes wrap through ±180), but with NO radius loop or window — the
+    * radius is given, so the plan is one single-level cover explode, one
+    * cell equi-join and an exact haversine refine. Every true pair matches
+    * on exactly one cell — no post-join dedup, no pair ever verified twice.
+    * Scale shape: both sides shuffle once on the int64 cell key (or the
+    * smaller side broadcasts under AQE); candidate fan-in per query is the
+    * point count of the cap's few level cells.
     *
     * @return all query columns + all point columns + `dist_m` (<= maxDistM)
     */
@@ -431,16 +429,69 @@ object SpatialJoins {
       minLevel: Int = 4,
       maxLevel: Int = 10): DataFrame = {
     require(maxDistM > 0, s"maxDistM must be positive, got $maxDistM")
-    val pts = points.withColumn("__pcell",
-      explode(s2_ancestors(col(pLng), col(pLat), lit(minLevel), lit(maxLevel))))
-    val (w0, sBound, e0, nBound) = capBox(col(qLng), col(qLat), maxDistM)
-    queries
-      .withColumn("__cell", explode(s2_cover_box(w0, sBound, e0, nBound,
-        lit(minLevel), lit(maxLevel))))
-      .join(pts, col("__cell") === col("__pcell"))
-      .withColumn("dist_m", haversine(coord(qLng), coord(qLat), coord(pLng), coord(pLat)))
+    capCandidates(queries, qLng, qLat, points, pLng, pLat, maxDistM, minLevel, maxLevel)
       .where(col("dist_m") <= maxDistM)
-      .drop("__cell", "__pcell")
+  }
+
+  /** Every (query, point) pair whose point may lie within `radiusM` of the
+    * query, with its haversine `dist_m` — the cell phase shared by
+    * [[knnJoinS2]]'s rounds and [[distanceJoin]]. Both sides meet on ONE S2
+    * level, [[capLevel]]: a query explodes the few level cells that cover
+    * its [[capBox]] ([[capCover]]), a point takes its single cell at that
+    * level, and the two join on [[s2Key]]. The cover contains the box and a
+    * point has exactly one cell, so every true pair matches on exactly one
+    * cell. A point with a null or NaN coordinate has a null key and meets
+    * no query (keyed through [[coord]], all such points would share one
+    * cell). */
+  private def capCandidates(
+      queries: DataFrame, qLng: String, qLat: String,
+      points: DataFrame, pLng: String, pLat: String,
+      radiusM: Double, minLevel: Int, maxLevel: Int): DataFrame = {
+    val level = lit(capLevel(radiusM, minLevel, maxLevel))
+    val pKey = when(!isnan(coord(pLng)) && !isnan(coord(pLat)),
+      s2Key(s2_cell(coord(pLng), coord(pLat), level)))
+    queries
+      .withColumn("__cell", explode(capCover(col(qLng), col(qLat), radiusM, minLevel, maxLevel)))
+      .join(points, s2Key(col("__cell")) === pKey)
+      .drop("__cell")
+      .withColumn("dist_m", haversine(coord(qLng), coord(qLat), coord(pLng), coord(pLat)))
+  }
+
+  /** The [[capLevel]] cells covering a query's [[capBox]] of radius
+    * `radiusM` (the box may wrap below -180: `s2_cover_box` normalizes). */
+  private[graft] def capCover(qLng: Column, qLat: Column, radiusM: Double,
+                              minLevel: Int, maxLevel: Int): Column = {
+    val (w0, sBound, e0, nBound) = capBox(qLng, qLat, radiusM)
+    val level = lit(capLevel(radiusM, minLevel, maxLevel))
+    s2_cover_box(w0, sBound, e0, nBound, level, level)
+  }
+
+  /** The one S2 level a cap of radius `radiusM` is probed at: the finest
+    * whose cell edge (about 1e7 m / 2^L) is at least the cap box's width
+    * 2r, clamped to [minLevel, maxLevel]. The box then meets a handful of
+    * cells where a multi-level cover of it needs hundreds. */
+  private def capLevel(radiusM: Double, minLevel: Int, maxLevel: Int): Int = {
+    val level = math.floor(math.log(1e7 / (2.0 * radiusM)) / math.log(2.0)).toInt
+    math.max(minLevel, math.min(maxLevel, level))
+  }
+
+  /** The equi-join key of an S2 cell id: `xxhash64(c)`, a bijection on
+    * longs (every step of XXH64 over one 8-byte word is invertible) that
+    * spreads every bit. A level-L id ends in 60 − 2L zero bits, and Spark's
+    * broadcast long-key hash map (`LongToUnsafeRowMap`) takes the slot
+    * `(h ^ (h >> 32)) & mask` with h = key · 0x9E3779B9, so raw ids at
+    * L ≤ 14 always leave the low 28 − 2L slot bits 0 and pile into a few
+    * slots. It names `c` once, so a key over a computed cell computes the
+    * cell once even inside a join condition, where Spark does not share
+    * subexpressions. Key non-null cells only: xxhash64 maps a null to its
+    * seed, not to null. Every S2-keyed join keys both sides with it. */
+  private[graft] def s2Key(cell: Column): Column = xxhash64(cell)
+
+  /** [[knnJoinS2]]'s automatic initial radius: a cap that holds about 4k
+    * points at the plan-time density, clamped to [50 m, 2000 km]. */
+  private[graft] def autoRadiusM(points: DataFrame, k: Int): Double = {
+    val n = planTimeRowEstimate(points)
+    math.min(2.0e6, math.max(50.0, 2.0 * math.sqrt(k * 5.1e14 / (math.Pi * n))))
   }
 
   /** Row-count estimate from Catalyst plan statistics — launches ZERO Spark

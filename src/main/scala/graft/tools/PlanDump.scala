@@ -171,11 +171,12 @@ object PlanDump {
       graft.ops.Dedup.contaminationPairs(corpus, "doc_id", "text", bench, "bench_id", "btext")
     }
 
-    dump("Within-distance join (metric-cap covers, single equi-join)",
-      "Query caps explode to disjoint multi-level S2 cover cells, points " +
-        "explode their ancestor chain: every true pair meets on exactly ONE " +
-        "int64 cell key, one hash join, exact haversine refine — no radius " +
-        "loop, no window, no dedup.") {
+    dump("Within-distance join (single-level metric-cap covers, single equi-join)",
+      "Query caps explode to their few S2 cells at one level chosen from the " +
+        "radius, each point keys its one cell at that level in the join " +
+        "condition: every true pair meets on exactly ONE hashed int64 cell " +
+        "key, one hash join, exact haversine refine — no radius loop, no " +
+        "window, no dedup.") {
       val qs = spark.range(64).select(col("id").as("qid"),
         (pmod(col("id") * 37, lit(360)) - 180.0).as("qlng"),
         (pmod(col("id") * 23, lit(160)) - 80.0).as("qlat"))

@@ -506,6 +506,40 @@ class SpatialJoinSpec extends AnyFunSuite {
       s"fast=${fast.count()} brute=${brute.count()}")
   }
 
+  test("S2 join key: distinct per cell, and its low bits and hash-table slots spread at every level") {
+    import graft.geo.index.S2Cell
+    // the slot of Spark's broadcast long-key hash map
+    // (LongToUnsafeRowMap.firstSlot) in a table of 1024 slots
+    def slot(key: Long): Long = { val h = key * 0x9E3779B9L; (h ^ (h >> 32)) & 1023 }
+    val rng = new java.util.SplittableRandom(7)
+    val (w, s) = (rng.nextDouble(-170.0, 160.0), rng.nextDouble(-60.0, 50.0))
+    for (level <- 4 to 12) {
+      val cells = S2Cell.coverBox(w, s, w + 3.0, s + 3.0, level)
+      val keys = cells.toSeq.toDF("c").select(SpatialJoins.s2Key($"c")).as[Long].collect()
+      assert(keys.distinct.length == cells.length, s"level $level: keys collide")
+      // n random keys take about 1024 (1 - e^(-n/1024)) of 1024 values:
+      // 0.79 n at n = 512
+      for ((name, bucket) <- Seq[(String, Long => Long)]("key & 1023" -> (_ & 1023), "slot" -> slot)) {
+        val used = keys.map(bucket).distinct.length
+        assert(used >= math.min(cells.length, 512) / 2,
+          s"level $level: ${cells.length} cells take $used values of $name")
+      }
+    }
+  }
+
+  test("a kNN round-1 cover is a few cells per query at the auto radius") {
+    // 250k points uniform on the sphere, queries likewise, k = 8 and the
+    // level range knnJoin uses at res 5
+    def uniform(n: Long, seed: Long) = spark.range(n).select($"id",
+      (rand(seed) * 360.0 - 180.0).as("lng"),
+      degrees(asin(rand(seed + 1) * 2.0 - 1.0)).as("lat"))
+    val r0 = SpatialJoins.autoRadiusM(uniform(250000, 3), k = 8)
+    val sizes = uniform(500, 11)
+      .select(size(SpatialJoins.capCover($"lng", $"lat", r0, 4, 10))).as[Int].collect()
+    assert(sizes.min >= 1)
+    assert(sizes.max <= 16, s"r0 = $r0 m: up to ${sizes.max} cells, mean ${sizes.sum / 500.0}")
+  }
+
   test("tile assignment buckets and accessors") {
     val pts = points(1000)
     val tiled = SpatialJoins.assignTiles(pts, "lng", "lat", z = 10)
