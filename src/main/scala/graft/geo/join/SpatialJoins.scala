@@ -251,7 +251,8 @@ object SpatialJoins {
     * undecided queries ride the next round. Stragglers (neighborhood
     * emptier than the last radius) and queries with a null or NaN
     * coordinate (they can never certify, so they skip the rounds) take the
-    * brute-force tail.
+    * brute-force tail, which ranks only the points with finite coordinates:
+    * the rounds never meet the others either.
     *
     * One Spark action per round: a count of the undecided queries that
     * also materializes the round's lazy localCheckpoints. The round's jobs
@@ -341,7 +342,7 @@ object SpatialJoins {
     }
     val tail =
       if (tailCount == 0) None
-      else Some(remaining.crossJoin(points)
+      else Some(remaining.crossJoin(points.where(finite(pLng) && finite(pLat)))
         .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
         .withColumn("rank", row_number().over(byDist)).where(col("rank") <= k))
     // never both empty: with no round run, tailCount is still 1

@@ -1,6 +1,7 @@
 package graft.geo.json
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
 import scala.collection.immutable.VectorBuilder
 
 /** Minimal ordered JSON value ADT.
@@ -31,6 +32,9 @@ final case class ParseError(msg: String, line: Int, col: Int)
 
 object JValue {
   private val factory = new JsonFactory()
+  // reads Jackson's spellings of non-finite numbers (NaN, Infinity)
+  private val nonFiniteFactory =
+    new JsonFactoryBuilder().enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
 
   /** Parse a JSON text. Numbers always become doubles (reference semantics:
     * jsone.ml:424-433 — `float_of_string` for every number).
@@ -42,10 +46,12 @@ object JValue {
     * endCol) is the position just after the JSON value — the location
     * attached to semantic errors raised by the layer above — or
     * Left(ParseError) with the lexer's failure point. */
-  def parseLoc(text: String): Either[ParseError, (JValue, Int, Int)] = {
+  def parseLoc(text: String): Either[ParseError, (JValue, Int, Int)] = parseLoc(text, factory)
+
+  private def parseLoc(text: String, f: JsonFactory): Either[ParseError, (JValue, Int, Int)] = {
     var p: JsonParser = null
     try {
-      p = factory.createParser(text)
+      p = f.createParser(text)
       try {
         p.nextToken()
         val v = readValue(p)
@@ -69,8 +75,24 @@ object JValue {
     }
   }
 
+  /** Parse text the codec itself wrote (stored properties, foreign members
+    * and collection members), or throw IllegalArgumentException. That text
+    * spells a non-finite number as [[appendG16]] prints it (`inf`, `-inf`,
+    * `nan`: an overflowing `1e400` is stored as `inf`), which is not JSON,
+    * so text that fails as JSON is read again with those spellings taken as
+    * numbers. */
   def parseUnsafe(text: String): JValue =
-    parse(text).fold(m => throw new IllegalArgumentException(m), identity)
+    parse(text).left.flatMap(m => parseLoc(jacksonNonFinite(text), nonFiniteFactory).map(_._1)
+      .left.map(_ => m)).fold(m => throw new IllegalArgumentException(m), identity)
+
+  // a JSON string (kept as it is) or a C printf non-finite number
+  private val stringOrNonFinite = """"(?:[^"\\]++|\\.)*+"|inf|nan""".r
+
+  /** `text` with `inf` and `nan` outside strings respelled as Jackson's
+    * non-numeric numbers `Infinity` and `NaN` (`-inf` → `-Infinity`). */
+  private def jacksonNonFinite(text: String): String =
+    stringOrNonFinite.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+      m.matched match { case "inf" => "Infinity"; case "nan" => "NaN"; case str => str }))
 
   private def readValue(p: JsonParser): JValue = p.currentToken() match {
     case JsonToken.VALUE_NULL           => JNull

@@ -4,6 +4,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,6 +13,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 `geojson` format (SURVEY.md §2.6: "a DataSourceV2
   * PartitionReader that runs a Jackson streaming parser and emits feature
@@ -52,24 +54,29 @@ class GeoJsonTable(properties: Map[String, String]) extends Table with SupportsR
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GeoJsonScanBuilder(options)
-}
-
-class GeoJsonScanBuilder(options: CaseInsensitiveStringMap) extends ScanBuilder {
-  override def build(): Scan = new GeoJsonScan(options)
+    () => new GeoJsonScan(options)
 }
 
 case class GeoJsonInputPartition(path: String) extends InputPartition
 
+/** Files are listed and opened with the session's Hadoop configuration
+  * (`spark.hadoop.*`, SQL conf and the read's options included), built once
+  * per scan and broadcast to the readers. */
 class GeoJsonScan(options: CaseInsensitiveStringMap) extends Scan with Batch {
   override def readSchema(): StructType = GeoJsonDataSource.schema
   override def toBatch: Batch = this
+
+  private lazy val hadoopConf: Broadcast[SerializableConfiguration] = {
+    val spark = org.apache.spark.sql.classic.SparkSession.active
+    spark.sparkContext.broadcast(new SerializableConfiguration(
+      spark.sessionState.newHadoopConfWithOptions(options.asScala.toMap)))
+  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val paths = Option(options.get("path")).toSeq ++
       Option(options.get("paths")).toSeq.flatMap(_.split(","))
     require(paths.nonEmpty, "geojson source requires a path")
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = hadoopConf.value.value
     paths.flatMap { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
@@ -88,25 +95,24 @@ class GeoJsonScan(options: CaseInsensitiveStringMap) extends Scan with Batch {
     // continues (uutfe recovery); option("mode", "resync"): additionally
     // recover from malformed TOKENS via discard_to (jsone recovery).
     // Default: loud failure on both.
-    new GeoJsonReaderFactory(
+    new GeoJsonReaderFactory(hadoopConf,
       "replace".equalsIgnoreCase(options.get("malformed")),
       "resync".equalsIgnoreCase(options.get("mode")))
 }
 
-class GeoJsonReaderFactory(malformedReplace: Boolean, resync: Boolean)
-    extends PartitionReaderFactory {
+class GeoJsonReaderFactory(conf: Broadcast[SerializableConfiguration], malformedReplace: Boolean,
+                           resync: Boolean) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GeoJsonPartitionReader(partition.asInstanceOf[GeoJsonInputPartition].path,
-      malformedReplace, resync)
+      conf.value.value, malformedReplace, resync)
 }
 
 /** One file = one split; features stream through Jackson incrementally. The
   * strict splitter's UTF-8 byte slices become rows without a String. */
-class GeoJsonPartitionReader(path: String, malformedReplace: Boolean = false,
-                             resync: Boolean = false)
-    extends PartitionReader[InternalRow] {
+class GeoJsonPartitionReader(path: String, conf: org.apache.hadoop.conf.Configuration,
+    malformedReplace: Boolean = false, resync: Boolean = false) extends PartitionReader[InternalRow] {
   private val hp = new Path(path)
-  private val in = hp.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(hp)
+  private val in = hp.getFileSystem(conf).open(hp)
   private val it: Iterator[UTF8String] =
     if (resync) GeoJsonReader.resyncFeatures(in).map(UTF8String.fromString)
     else GeoJsonReader.splitFeatures(in, malformedReplace).map(UTF8String.fromBytes)

@@ -1,5 +1,6 @@
 package graft.geo.sources
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -30,24 +31,34 @@ object GeoJsonWriter {
     df.select(concat(lit("\u001e"), col(jsonCol).cast("string")).as("value"))
       .write.mode(SaveMode.Overwrite).text(path)
 
-  /** One `{"type":"FeatureCollection","features":[...]}` document per
-    * partition file. Input column: per-feature GeoJSON text. */
+  /** Exactly `partitions` files, each one `{"type":"FeatureCollection",
+    * "features":[...]}` document holding every input row once. Input
+    * column: per-feature GeoJSON text.
+    *
+    * An input with at least `partitions` splits is coalesced, with no
+    * shuffle: each file holds whole input splits, each in its input order,
+    * and when the splits carry no preferred locations (the `geojson`
+    * source, ranges, local rows) a file holds consecutive splits in input
+    * order. An input with fewer splits is spread round-robin (one
+    * shuffle), which keeps no order. The upstream plan runs once either
+    * way: the split count is read from its RDD, which the write then uses. */
   def writeFeatureCollections(df: DataFrame, jsonCol: String, path: String, partitions: Int): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(jsonCol).cast("string")).as[String]
-      .repartition(partitions)
+    import df.sparkSession.implicits._
+    df.sparkSession.createDataset(featureCollections(df, jsonCol, partitions))
+      .write.mode(SaveMode.Overwrite).text(path)
+  }
+
+  /** The documents [[writeFeatureCollections]] writes: one per split. */
+  private[graft] def featureCollections(df: DataFrame, jsonCol: String, partitions: Int): RDD[String] = {
+    import df.sparkSession.implicits._
+    val features = df.select(col(jsonCol).cast("string")).as[String].rdd
+    (if (features.getNumPartitions >= partitions) features.coalesce(partitions)
+     else features.repartition(partitions))
       .mapPartitions { it =>
         // lazily stitch the document around the feature stream
-        val head = Iterator.single("""{"type":"FeatureCollection","features":[""")
-        var first = true
-        val body = it.map { f =>
-          val sep = if (first) { first = false; "" } else ","
-          sep + f
-        }
-        val tail = Iterator.single("]}")
-        head ++ body ++ tail
+        var sep = ""
+        Iterator.single("""{"type":"FeatureCollection","features":[""") ++
+          it.map { f => val line = sep + f; sep = ","; line } ++ Iterator.single("]}")
       }
-      .write.mode(SaveMode.Overwrite).text(path)
   }
 }

@@ -223,51 +223,21 @@ object GeoRuntime {
   def randomGeoJson(id: Long, seed: Long): UTF8String =
     UTF8String.fromString(GeoJsonCodec.render(graft.geo.gen.GeoGen.docFor(id, seed)))
 
-  /** map_props kernel: null `json` → null; `props` null = absent-member
-    * skip (document passes through unchanged); returns null on an
-    * unparseable document (PERMISSIVE) or unparseable replacement. Plain
-    * documents go through [[GeoParse.parseTopFast]] — which only
-    * syntax-checks the properties being replaced — and render from the
-    * packed row; the rest take the JValue-tree codec. */
-  def withFeatureProps(json: UTF8String, props: UTF8String): UTF8String = {
-    if (json == null) return null
-    val fast = GeoParse.parseTopFast(json, skipProperties = props != null)
-    if (fast ne GeoParse.Fallback) {
-      val top = fast.asInstanceOf[InternalRow]
-      try UTF8String.fromString(GeoRender.renderTop(top, props))
-      catch { case _: IllegalArgumentException => null } // unparseable replacement
-    } else {
-      import graft.geo.model.GeoModel._
-      GeoJsonCodec.parse(json.toString).fold(_ => null, {
-        case GeoJson(GFeature(f), bbox) if props != null =>
-          JValue.parse(props.toString).fold(_ => null,
-            pj => UTF8String.fromString(
-              GeoJsonCodec.render(GeoJson(GFeature(f.copy(properties = Some(pj))), bbox))))
-        case other => UTF8String.fromString(GeoJsonCodec.render(other))
-      })
-    }
-  }
+  /** map_props kernel over the parsed document: `top` is
+    * `from_geojson(json)`, the same expression the replacement is usually
+    * derived from, so the document is parsed once. Null `top` (null or
+    * unparseable document, PERMISSIVE) → null; `props` null = absent-member
+    * skip (the document renders as `to_geojson(from_geojson(json))`); an
+    * unparseable replacement → null. */
+  def renderWithFeatureProps(top: InternalRow, props: UTF8String): UTF8String =
+    if (top == null) null
+    else try UTF8String.fromString(GeoRender.renderTop(top, props))
+    catch { case _: IllegalArgumentException => null }
 
-  /** map_geometry kernel: `geom` null = absent-member skip, as map_props.
-    * The old geometry is still parsed (not skipped): its decode errors null
-    * the row, as in the codec. */
-  def withFeatureGeometry(json: UTF8String, geom: InternalRow): UTF8String = {
-    if (json == null) return null
-    val fast = GeoParse.parseTopFast(json)
-    if (fast ne GeoParse.Fallback) {
-      val top = fast.asInstanceOf[InternalRow]
-      if (geom != null && top.getByte(0) == 1) top.getStruct(3, 5).update(2, geom)
-      UTF8String.fromString(GeoRender.renderTop(top))
-    } else {
-      import graft.geo.model.GeoModel._
-      GeoJsonCodec.parse(json.toString).fold(_ => null, {
-        case GeoJson(GFeature(f), bbox) if geom != null =>
-          val nf = f.copy(geometry = Some(GeoStruct.unpackGeometry(geom)))
-          UTF8String.fromString(GeoJsonCodec.render(GeoJson(GFeature(nf), bbox)))
-        case other => UTF8String.fromString(GeoJsonCodec.render(other))
-      })
-    }
-  }
+  /** map_geometry kernel over the parsed document, as
+    * [[renderWithFeatureProps]]: `geom` null = absent-member skip. */
+  def renderWithFeatureGeometry(top: InternalRow, geom: InternalRow): UTF8String =
+    if (top == null) null else UTF8String.fromString(GeoRender.renderTop(top, geom = geom))
 
   def jsonUpdate(json: UTF8String, path: UTF8String, value: UTF8String): UTF8String =
     (JValue.parse(json.toString), JValue.parse(value.toString)) match {
@@ -560,39 +530,46 @@ case class GeoJsonError(child: Expression) extends RuntimeReplaceable with Impli
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-/** `with_feature_props(json, new_props_json)` — single-pass rewrite of a
-  * Feature document's properties: parse → replace → serialize, never
-  * materializing the typed struct in a row (the moral twin of geojsone's
-  * streaming map_props, geojsone.ml:198-221, which rewrites the token
-  * stream in one pass). Non-Feature documents pass through unchanged;
-  * unparseable inputs → null (PERMISSIVE). A null REPLACEMENT (the feature
-  * had no properties and the rewrite produced null) passes the document
-  * through unchanged, like the reference's streaming rewrite skipping an
-  * absent member — so the kernel sees both arguments, nulls included. The
-  * replacement is evaluated for every row (plain Spark Column semantics):
-  * derive it null-safely (from_geojson is PERMISSIVE, so doc-derived
-  * expressions yield null, not errors); a raise_error-style replacement
-  * fires on malformed and null rows too. */
+/** `with_feature_props(json, new_props_json)` — rewrite of a Feature
+  * document's properties: `from_geojson(json)` rendered with the new
+  * properties, straight from the packed row (the moral twin of geojsone's
+  * streaming map_props, geojsone.ml:198-221). The parse is an ordinary
+  * `from_geojson(json)` argument, so when the replacement is derived from
+  * the same `from_geojson(json)` (as [[graft.streaming.GeoStreams.mapProps]]
+  * derives it) subexpression elimination parses the document once.
+  * Non-Feature documents pass through re-rendered; unparseable inputs →
+  * null (PERMISSIVE). A null REPLACEMENT (the feature had no properties
+  * and the rewrite produced null) passes the document through, like the
+  * reference's streaming rewrite skipping an absent member — so the kernel
+  * sees both arguments, nulls included. The replacement is evaluated for
+  * every row (plain Spark Column semantics): derive it null-safely
+  * (from_geojson is PERMISSIVE, so doc-derived expressions yield null, not
+  * errors); a raise_error-style replacement fires on malformed and null
+  * rows too. */
 case class WithFeatureProps(json: Expression, newProps: Expression)
     extends RuntimeReplaceable with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(json, newProps)
   override def inputTypes = Seq(StringType, StringType)
   override lazy val replacement: Expression =
-    StaticCall(GeoRuntime, StringType, "withFeatureProps", children, propagateNull = false)
+    StaticCall(GeoRuntime, StringType, "renderWithFeatureProps", Seq(FromGeoJson(json), newProps),
+      propagateNull = false)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
-/** `with_feature_geometry(json, geom_struct)` — single-pass rewrite of a
-  * Feature document's geometry from a packed geometry struct (streaming
-  * map_geometry twin, geojsone.ml:165-196). Non-Feature documents pass
-  * through unchanged; a null geometry (the feature had none) passes the
-  * document through, as in map_props. */
+/** `with_feature_geometry(json, geom_struct)` — rewrite of a Feature
+  * document's geometry from a packed geometry struct (streaming
+  * map_geometry twin, geojsone.ml:165-196), rendered from
+  * `from_geojson(json)` as [[WithFeatureProps]] is, so a geometry derived
+  * from the same parse shares it. Non-Feature documents pass through
+  * re-rendered; a null geometry (the feature had none) passes the document
+  * through, as in map_props. */
 case class WithFeatureGeometry(json: Expression, geom: Expression)
     extends RuntimeReplaceable with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(json, geom)
   override def inputTypes = Seq(StringType, StructType)
   override lazy val replacement: Expression =
-    StaticCall(GeoRuntime, StringType, "withFeatureGeometry", children, propagateNull = false)
+    StaticCall(GeoRuntime, StringType, "renderWithFeatureGeometry", Seq(FromGeoJson(json), geom),
+      propagateNull = false)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 

@@ -1,6 +1,6 @@
 package graft.geo.sql
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken, StreamReadFeature}
+import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonParser, JsonToken, StreamReadFeature}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.Platform
@@ -42,7 +42,7 @@ object GeoParse {
   val Fallback: AnyRef = new Object
 
   private val factory: JsonFactory =
-    JsonFactory.builder().enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build()
+    new JsonFactoryBuilder().enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build()
 
   /** A parser over the text's UTF-8 bytes, read in place when on-heap. A
     * leading byte-order mark gets no parser (null): Jackson's byte
@@ -57,12 +57,13 @@ object GeoParse {
         factory.createParser(b, 0, b.length)
     }
 
-  /** Canonical minified text of a JSON document: `JValue.parseUnsafe(text)
-    * .render` without the tree. Invalid JSON or trailing content throws
-    * IllegalArgumentException, like `parseUnsafe`. */
+  /** Canonical minified text of a JSON document: `JValue.parse(text)
+    * .render` without the tree. Invalid JSON (the codec's own `inf` and
+    * `nan` included) or trailing content throws IllegalArgumentException. */
   def canonicalJson(s: UTF8String): String = {
     val p = parser(s)
-    if (p == null) return JValue.parseUnsafe(s.toString).render
+    if (p == null)
+      return JValue.parse(s.toString).fold(m => throw new IllegalArgumentException(m), _.render)
     try {
       val sb = new java.lang.StringBuilder(s.numBytes + 16)
       p.nextToken()
@@ -189,11 +190,7 @@ object GeoParse {
     * known keys, bbox-anywhere and every error path fall back. */
   def parseTopFast(text: String): AnyRef = parseTopFast(UTF8String.fromString(text))
 
-  /** `skipProperties`: the caller replaces a Feature's properties, so the
-    * member is only checked for JSON syntax (`skipChildren` still reads
-    * every token) and left null in the row; any syntactically valid value
-    * is accepted by the codec, so this drops no error. */
-  def parseTopFast(text: UTF8String, skipProperties: Boolean = false): AnyRef = {
+  def parseTopFast(text: UTF8String): AnyRef = {
     try {
       val p = parser(text)
       if (p == null) return Fallback
@@ -239,12 +236,9 @@ object GeoParse {
                   // any JSON value, present-null included; packed as its
                   // canonical minified text (Jackson's own re-serialization
                   // formats numbers differently)
-                  if (skipProperties) p.skipChildren()
-                  else {
-                    val sb = new java.lang.StringBuilder(64)
-                    JValue.writeCanonical(p, sb)
-                    f.update(3, UTF8String.fromString(sb.toString))
-                  }
+                  val sb = new java.lang.StringBuilder(64)
+                  JValue.writeCanonical(p, sb)
+                  f.update(3, UTF8String.fromString(sb.toString))
                 case "id" =>
                   if (sawId) return Fallback
                   sawId = true

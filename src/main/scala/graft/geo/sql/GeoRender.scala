@@ -17,9 +17,11 @@ import graft.geo.model.GeoModel.GType
 object GeoRender {
 
   /** A packed top row (GeoStruct.topType), with a Feature's properties
-    * replaced by the JSON text `props` when it is not null (non-Feature
-    * documents ignore it). Invalid `props` throws IllegalArgumentException. */
-  def renderTop(top: InternalRow, props: UTF8String = null): String = {
+    * replaced by the JSON text `props` and its geometry by the packed
+    * geometry `geom`, each when it is not null (non-Feature documents
+    * ignore both). The row itself is never changed. `props` must be JSON:
+    * anything else throws IllegalArgumentException. */
+  def renderTop(top: InternalRow, props: UTF8String = null, geom: InternalRow = null): String = {
     val bbox = if (top.isNullAt(1)) null else top.getArray(1)
     top.getByte(0) match {
       case 0 =>
@@ -30,9 +32,11 @@ object GeoRender {
         val f  = top.getStruct(3, 5)
         val sb = new StringBuilder(256)
         sb.append("{\"type\":\"Feature\"")
-        if (!f.isNullAt(2)) { sb.append(",\"geometry\":"); writeGeometry(sb, f.getStruct(2, 7), null) }
-        val p = if (props != null) props else if (f.isNullAt(3)) null else f.getUTF8String(3)
-        if (p != null) sb.append(",\"properties\":").append(GeoParse.canonicalJson(p))
+        val g = if (geom != null) geom else if (f.isNullAt(2)) null else f.getStruct(2, 7)
+        if (g != null) { sb.append(",\"geometry\":"); writeGeometry(sb, g, null) }
+        val p = if (props != null) GeoParse.canonicalJson(props)
+                else if (f.isNullAt(3)) null else storedJson(f.getUTF8String(3))
+        if (p != null) sb.append(",\"properties\":").append(p)
         if (!f.isNullAt(0)) { sb.append(",\"id\":"); JValue.writeString(sb, f.getUTF8String(0).toString) }
         else if (!f.isNullAt(1)) { sb.append(",\"id\":"); JValue.appendG16(sb.underlying, f.getDouble(1)) }
         writeBboxFm(sb, bbox, if (f.isNullAt(4)) null else f.getArray(4))
@@ -41,6 +45,12 @@ object GeoRender {
       case _ => GeoJsonCodec.render(GeoStruct.unpackTop(top))
     }
   }
+
+  /** Canonical text of JSON the codec stored, which spells a non-finite
+    * number as C printf does (`inf`): only [[JValue.parseUnsafe]] reads it. */
+  private def storedJson(s: UTF8String): String =
+    try GeoParse.canonicalJson(s)
+    catch { case _: IllegalArgumentException => JValue.parseUnsafe(s.toString).render }
 
   /** A packed geometry row (GeoStruct.geometryType) with an optional bbox. */
   def writeGeometry(sb: StringBuilder, g: InternalRow, bbox: ArrayData): Unit = {
@@ -110,7 +120,7 @@ object GeoRender {
         val kv = fm.getStruct(i, 2)
         sb.append(',')
         JValue.writeString(sb, kv.getUTF8String(0).toString)
-        sb.append(':').append(GeoParse.canonicalJson(kv.getUTF8String(1)))
+        sb.append(':').append(storedJson(kv.getUTF8String(1)))
         i += 1
       }
     }

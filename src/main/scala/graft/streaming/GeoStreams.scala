@@ -20,26 +20,24 @@ object GeoStreams {
   /** map_geometry (geojsone.ml:165-196): rewrite the geometry of every
     * feature with a Column function over the packed geometry struct,
     * re-serializing to GeoJSON text. `f` maps geometry-struct → geometry-
-    * struct.
-    */
+    * struct. One parse per feature, as in [[mapProps]]. */
   def mapGeometry(df: DataFrame, jsonCol: String, f: Column => Column): DataFrame =
     df.withColumn(jsonCol, with_feature_geometry(col(jsonCol),
       f(from_geojson(col(jsonCol)).getField("feature").getField("geometry"))))
 
   /** map_props (geojsone.ml:198-221): rewrite the properties JSON text.
     *
-    * Implementation note: this deliberately does NOT go through
-    * `from_geojson → withField → to_geojson` over the full top struct — that
-    * formulation materializes the wide nested struct in a row (a one-time
-    * multi-second Janino row-writer compile) or, inlined, duplicates the
-    * parse inside a giant UpdateFields tree (measured 14.5 s of plan/codegen
-    * for a 25-row table). `with_feature_props` is a single string→string
-    * kernel, the moral twin of the reference's one-pass streaming rewrite:
-    * a plain Feature is read once by the fast parser, which only
-    * syntax-checks the properties being replaced, and rendered straight
-    * from the packed row with the new properties canonicalized token by
-    * token (foreign members, GeometryCollections and malformed documents
-    * take the JValue-tree codec). */
+    * One parse per feature: `with_feature_props` renders from
+    * `from_geojson(json)`, the same expression `f`'s argument reads the
+    * properties from, so whole-stage codegen's subexpression elimination
+    * parses each feature once and renders the new document straight from
+    * the packed row (the reference decodes, transforms and encodes each
+    * feature in one streaming pass). It deliberately does NOT go through
+    * `withField → to_geojson` over the full top struct: that formulation
+    * materializes the wide nested struct in a row (a one-time multi-second
+    * Janino row-writer compile) or, inlined, duplicates the parse inside a
+    * giant UpdateFields tree (measured 14.5 s of plan/codegen for a 25-row
+    * table). */
   def mapProps(df: DataFrame, jsonCol: String, f: Column => Column): DataFrame =
     df.withColumn(jsonCol, with_feature_props(col(jsonCol),
       f(from_geojson(col(jsonCol)).getField("feature").getField("properties"))))

@@ -99,6 +99,27 @@ object PlanDump {
           (col("back") === col("json")).as("ok"))
     }
 
+    // the geobench geojson_etl pass over 4 one-feature files
+    val etlIn = Files.createTempDirectory("plan_etl")
+    (1 to 4).foreach(i => Files.writeString(etlIn.resolve(s"f$i.geojson"), """{"type":"FeatureCollection",""" +
+      s""""features":[{"type":"Feature","properties":{"i":$i},"geometry":{"type":"Point","coordinates":[$i,2]}}]}"""))
+    val etl = graft.streaming.GeoStreams.mapProps(spark.read.format("geojson").load(etlIn.toString)
+        .select(col("feature_json"), st_geometry_type(from_geojson(col("feature_json")).getField("feature")
+          .getField("geometry")).as("gtype")), "feature_json",
+        p => concat(p.substr(lit(1), length(p) - 1), lit(",\"gtype\":\""), col("gtype"), lit("\"}")))
+      .select(to_geojson(from_geojson(col("feature_json"))).as("json"))
+    val parses = "GeoRuntime\\.fromGeoJson\\(".r.findAllIn(org.apache.spark.sql.execution.debug
+      .codegenStringSeq(etl.queryExecution.executedPlan).map(_._2).mkString).length
+    dump("GeoJSON ETL pass (one parse, no exchange)", "read → from_geojson + accessor → mapProps → " +
+      s"to_geojson: one codegen Project over the scan whose code calls fromGeoJson $parses times: once " +
+      "on the read text (shared by the accessor, the replacement and renderWithFeatureProps), once " +
+      "on the rewritten text for to_geojson.")(etl)
+    sb.append("\nThe FeatureCollection sink over this pass (`GeoJsonWriter.featureCollections`, 2 files " +
+      "from the 4 scan splits) coalesces them: its RDD lineage has no shuffle, so the pass and the " +
+      "write are one stage of 2 tasks.\n\n```\n")
+      .append(graft.geo.sources.GeoJsonWriter.featureCollections(etl, "json", 2).toDebugString)
+      .append("\n```\n")
+
     dump("Exact dedup (narrow hash shuffle key + min_by verify)",
       "The corpus-scale aggregation exchanges on (xxhash64(text), length) — " +
         "16 fixed bytes per row, not the document text; the verify joins " +

@@ -145,9 +145,10 @@ class CodecKernelSpec extends AnyFunSuite {
             f.copy(properties = Some(JValue.parseUnsafe(newProps.toString))))))
         case _ => GeoJsonCodec.render(g)
       }
-      assert(GeoRuntime.withFeatureProps(text, newProps).toString == tree, doc)
-      assert(GeoRuntime.withFeatureProps(text, null).toString == GeoJsonCodec.render(g), doc)
-      assert(GeoRuntime.withFeatureProps(text, UTF8String.fromString("{")) == null ||
+      val top = GeoRuntime.fromGeoJson(text)
+      assert(GeoRuntime.renderWithFeatureProps(top, newProps).toString == tree, doc)
+      assert(GeoRuntime.renderWithFeatureProps(top, null).toString == GeoJsonCodec.render(g), doc)
+      assert(GeoRuntime.renderWithFeatureProps(top, UTF8String.fromString("{")) == null ||
         !g.body.isInstanceOf[graft.geo.model.GeoModel.GFeature], doc)
     }
   }

@@ -126,4 +126,23 @@ class GeoSqlSpec extends AnyFunSuite {
       .where($"inside" && !$"in_cover")
     assert(covered.count() == 0, "a contained point's cell escaped the cover")
   }
+
+  test("an overflowing number in properties or a foreign member renders as parsed, never throws") {
+    // 1e400 parses to +infinity, stored and rendered as C printf prints it
+    // (`inf`, as the coordinate path does); re-rendering the stored text
+    // must not re-read it as JSON and throw
+    val feature = """{"type":"Feature","properties":{"a":1e400,"b":-1e400},""" +
+      """"geometry":{"type":"Point","coordinates":[1,2]}}"""
+    val docs = Seq(feature,
+      """{"type":"Feature","properties":null,"geometry":{"type":"Point","coordinates":[1,2]},"foo":[1e400]}""",
+      s"""{"type":"FeatureCollection","features":[$feature]}""")
+    val out = docs.toDF("d").select(to_geojson(from_geojson($"d")),
+        with_feature_props($"d", lit(null).cast("string")))
+      .as[(String, String)].collect()
+    docs.zip(out).foreach { case (d, (rendered, mapped)) =>
+      val tree = graft.geo.json.GeoJsonCodec.parse(d).map(graft.geo.json.GeoJsonCodec.render)
+      assert(rendered != null && rendered.contains("inf") && tree == Right(rendered), s"$d -> $rendered")
+      assert(mapped == rendered, d)
+    }
+  }
 }

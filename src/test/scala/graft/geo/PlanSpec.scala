@@ -91,6 +91,32 @@ class PlanSpec extends AnyFunSuite {
       s"with_feature_geometry Project fell out of whole-stage codegen: $mgLine")
   }
 
+  test("map_props and map_geometry parse each feature once in the generated code") {
+    // the rewrite renders from from_geojson(json), the same expression its
+    // replacement is derived from: subexpression elimination leaves one
+    // parse call in the stage's code (the doc comes from a non-foldable
+    // column so no rule evaluates the projection at planning time)
+    val docDf = spark.range(3).select(concat(
+      lit("{\"type\":\"Feature\",\"properties\":{\"name\":\"x"),
+      ($"id" % 10).cast("string"),
+      lit("\"},\"geometry\":{\"type\":\"Point\",\"coordinates\":[1.0,2.0]}}")).as("json"))
+    val cases = Seq(
+      "renderWithFeatureProps" -> graft.streaming.GeoStreams.mapProps(docDf, "json", p => upper(p)),
+      "renderWithFeatureGeometry" -> graft.streaming.GeoStreams.mapGeometry(docDf, "json",
+        g => g.withField("coords", reverse(g.getField("coords")))))
+    for ((kernel, df) <- cases) {
+      val code = org.apache.spark.sql.execution.debug
+        .codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString("\n")
+      val parses = "GeoRuntime\\.fromGeoJson\\(".r.findAllIn(code).length
+      assert(parses == 1 && code.contains(s"GeoRuntime.$kernel("),
+        s"$kernel: $parses fromGeoJson calls in\n$code")
+    }
+    assert(cases(0)._2.as[String].collect().toSeq == (0 until 3).map(i =>
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[1,2]},"properties":{"NAME":"X$i"}}"""))
+    assert(cases(1)._2.as[String].collect().toSeq == (0 until 3).map(i =>
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[2,1]},"properties":{"name":"x$i"}}"""))
+  }
+
   test("map_geometry is a shuffle-free narrow plan") {
     val df = Seq("""{"type":"Feature","geometry":{"type":"Point","coordinates":[1.0,2.0]}}""")
       .toDF("json")

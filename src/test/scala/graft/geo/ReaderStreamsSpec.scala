@@ -230,6 +230,22 @@ class ReaderStreamsSpec extends AnyFunSuite {
     assert(multi.count() == 3)
   }
 
+  test("geojson source lists and opens files through the session's Hadoop configuration") {
+    // the `gjsession` scheme is known only to this session's SQL conf,
+    // which Spark copies into the Hadoop configuration it hands its sources
+    val dir = Files.createTempDirectory("gj_session_fs")
+    (1 to 2).foreach { i =>
+      Files.writeString(dir.resolve(s"f$i.geojson"),
+        s"""{"type":"FeatureCollection","features":[{"type":"Feature","properties":{"i":$i}}]}""")
+    }
+    spark.conf.set("fs.gjsession.impl", classOf[SessionOnlyFileSystem].getName)
+    try {
+      val files = spark.read.format("geojson").load(s"gjsession://${dir.toUri.getPath}*.geojson")
+        .select("file").as[String].collect().sorted
+      assert(files.toSeq == Seq(1, 2).map(i => s"gjsession:${dir.toUri.getPath}f$i.geojson"))
+    } finally spark.conf.unset("fs.gjsession.impl")
+  }
+
   test("malformed=replace mode: bad bytes become U+FFFD and the scan continues") {
     // the reference's uutfe recovery (Malformed -> add U+FFFD, uutfe.ml:35,68)
     // as a reader mode; default stays loud (Jackson strict)
@@ -463,4 +479,10 @@ class ReaderStreamsSpec extends AnyFunSuite {
         .getField("coords"), 1).as("lng")).as[Double].collect().sorted
     assert(lngs.toSeq == (1 to 20).map(_ + 100.0))
   }
+}
+
+/** The local filesystem under a scheme of its own, `gjsession`. */
+class SessionOnlyFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "gjsession"
+  override def getUri: java.net.URI = java.net.URI.create("gjsession:///")
 }

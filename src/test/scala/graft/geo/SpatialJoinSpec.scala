@@ -446,6 +446,19 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(out == Set(1L, 2L)) // the two nearest of the three
   }
 
+  test("kNN brute-force tail ranks only points with finite coordinates") {
+    // one round at 1 km certifies nothing, so the query takes the tail; a
+    // null point's distance is null, which would sort first there
+    val pts = Seq[(Long, Option[Double], Option[Double])](
+      (1L, Some(0.0), Some(0.0)), (2L, None, None), (3L, Some(50.0), Some(50.0)))
+      .toDF("pid", "lng", "lat")
+    val qs = Seq((1L, 10.0, 10.0)).toDF("qid", "qlng", "qlat")
+    val out = SpatialJoins.knnJoinS2(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k = 1,
+        initialRadiusM = 1000.0, maxRounds = 1)
+      .select($"pid", round($"dist_m").cast("long"), $"rank").as[(Long, Option[Long], Int)].collect()
+    assert(out.toSeq == Seq((1L, Some(1568523L), 1)), out.mkString(","))
+  }
+
   test("multi-level cover: sound, and interior emits coarse cells") {
     import graft.geo.index.S2Cell
     val rng = new scala.util.Random(5)
