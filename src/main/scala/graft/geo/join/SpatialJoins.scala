@@ -1,8 +1,8 @@
 package graft.geo.join
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 
 import graft.geo.sql.GeoFunctions._
 import graft.geo.index.{HexCell, S2Cell}
@@ -246,19 +246,24 @@ object SpatialJoins {
     * Each round probes ONE S2 level, chosen from r and clamped to
     * [minLevel, maxLevel] ([[capCandidates]]): the box's few cells at that
     * level against each point's single cell there, so each (q, p) pair
-    * appears at most once. A query is DONE when it holds k hits with the
-    * k-th distance ≤ r: nothing outside the cap can be nearer. Only the
+    * appears at most once. A round ranks only the candidates inside the
+    * cap ([[knnRound]]), and a query is DONE when it holds k of them:
+    * nothing outside the cap can be nearer, ties included. Only the
     * undecided queries ride the next round. Stragglers (neighborhood
     * emptier than the last radius) and queries with a null or NaN
     * coordinate (they can never certify, so they skip the rounds) take the
     * brute-force tail, which ranks only the points with finite coordinates:
     * the rounds never meet the others either.
     *
-    * One Spark action per round: a count of the undecided queries that
-    * also materializes the round's lazy localCheckpoints. The round's jobs
-    * are labelled `knnJoin round <i>` (the caller's job description is
-    * restored after). The answer is the union of each round's certified
-    * rows, read straight from those checkpoints.
+    * One Spark action per round: the eager localCheckpoint of the ranked
+    * round, which also observes the counts of undecided queries that size
+    * the next round and the tail. Every undecided query keeps one row in
+    * that checkpoint, so the next round's queries are read straight from
+    * it. The round's jobs are labelled `knnJoin round <i>` (the caller's
+    * job description is restored after). The answer is the union of each
+    * round's certified rows, read from the same checkpoints.
+    *
+    * The query and point sides must not share a column name.
     *
     * @return qid, point columns, `dist_m`, `rank` (1..k)
     */
@@ -272,7 +277,8 @@ object SpatialJoins {
       maxLevel: Int = 10,
       initialRadiusM: Double = -1.0,
       maxRounds: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val clash = queries.columns.filter(c => points.columns.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"knnJoinS2: query and point sides share column name(s) ${clash.mkString(", ")}")
 
     // auto initial radius (<= 0): size the first cap so most queries certify
     // in round 1 — r0 = 2 sqrt(k A / (pi N)) with N from the PLAN-TIME row
@@ -284,18 +290,7 @@ object SpatialJoins {
     // initialRadiusM when the true density is known.
     val r0 = if (initialRadiusM > 0) initialRadiusM else autoRadiusM(points, k)
 
-    def finite(c: String) = col(c).isNotNull && !isnan(col(c).cast("double"))
-    val coordsOk = finite(qLng) && finite(qLat)
-    val byDist = Window.partitionBy(col(qidCol)).orderBy(col("dist_m"), col(pLng), col(pLat))
-    val byQuery = Window.partitionBy(col(qidCol))
     val sc = queries.sparkSession.sparkContext
-    // a round's certified ids are a subset of the queries' ids: broadcast
-    // them when those fit under the broadcast threshold. Left to the plan,
-    // their size is the candidate join's cartesian estimate, which passes
-    // the threshold at a few dozen queries and costs the anti join a
-    // shuffle per side
-    val idsFit = queries.select(col(qidCol)).queryExecution.optimizedPlan.stats.sizeInBytes <=
-      SQLConf.get.autoBroadcastJoinThreshold
     val callerDescription = sc.getLocalProperty("spark.job.description")
 
     // `remaining` holds every undecided query, those with a null or NaN
@@ -309,34 +304,24 @@ object SpatialJoins {
     var tailCount  = 1L
     while (round < maxRounds && probeCount > 0) {
       // every job of the round carries its label, AQE's shuffle stages
-      // (which even a lazy localCheckpoint plans eagerly) included
+      // included. localCheckpoint: each round's plan would otherwise EMBED
+      // every prior round's plan and Catalyst analysis time grows
+      // exponentially with rounds
       sc.setJobDescription(s"knnJoin round ${round + 1}")
-      val counts = try {
-        // capBox > r > rDone: the box is a hair wide and the done test a
-        // hair strict, so float rounding can never exclude a true neighbor
-        // the done test would have trusted
-        val cand = capCandidates(remaining.where(coordsOk), qLng, qLat,
-          points, pLng, pLat, radiusM, minLevel, maxLevel)
-        // localCheckpoint: each round's plan would otherwise EMBED every
-        // prior round's plan and Catalyst analysis time grows exponentially
-        // with rounds. The done test is a window aggregate over the same
-        // qid partition as the ranking, so it costs no extra exchange.
-        val ranked = cand.withColumn("rank", row_number().over(byDist)).where(col("rank") <= k)
-          .withColumn("__done", count(lit(1)).over(byQuery) === k &&
-            max(col("dist_m")).over(byQuery) <= radiusM * (1.0 - 1e-9))
-          .localCheckpoint(eager = false)
-        val done = ranked.where(col("__done")).drop("__done")
-        resultOpt = Some(resultOpt.map(_.unionByName(done)).getOrElse(done))
-        val certified = ranked.where(col("__done") && col("rank") === 1).select(col(qidCol))
-        remaining = remaining
-          .join(if (idsFit) broadcast(certified) else certified, Seq(qidCol), "left_anti")
-          .localCheckpoint(eager = false)
-        // one action: materializes ranked + remaining and sizes both the
-        // next round and the tail
-        remaining.agg(count(when(coordsOk, 1)), count(lit(1))).head()
-      } finally sc.setJobDescription(callerDescription)
-      probeCount = counts.getLong(0)
-      tailCount  = counts.getLong(1)
+      val counts = Observation()
+      val ranked = try knnRound(remaining, qidCol, qLng, qLat, points, pLng, pLat,
+          k, radiusM, minLevel, maxLevel, counts).localCheckpoint(eager = true)
+        finally sc.setJobDescription(callerDescription)
+      val done = ranked.where(col("__done")).drop("__done")
+      resultOpt = Some(resultOpt.map(_.unionByName(done)).getOrElse(done))
+      remaining = ranked.where(!col("__done") && col("rank") === 1)
+        .select(queries.columns.map(col).toIndexedSeq: _*)
+      // the eager checkpoint's own job delivered the counts, so get waits
+      // on no other action (a lazy checkpoint would complete the
+      // Observation at once, with zeros)
+      val c = counts.get
+      probeCount = c("probe").asInstanceOf[Long]
+      tailCount  = c("tail").asInstanceOf[Long]
       radiusM *= 4
       round += 1
     }
@@ -344,10 +329,48 @@ object SpatialJoins {
       if (tailCount == 0) None
       else Some(remaining.crossJoin(points.where(finite(pLng) && finite(pLat)))
         .withColumn("dist_m", haversine(col(qLng), col(qLat), col(pLng), col(pLat)))
-        .withColumn("rank", row_number().over(byDist)).where(col("rank") <= k))
+        .withColumn("rank", row_number().over(nearestFirst(qidCol, pLng, pLat)))
+        .where(col("rank") <= k))
     // never both empty: with no round run, tailCount is still 1
     (resultOpt ++ tail).reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** One round of [[knnJoinS2]] at cap radius `radiusM`, lazy: each
+    * `remaining` query's nearest points among its candidates INSIDE the cap
+    * (`dist_m <= r·(1−1e−9)`, a hair under the box's `r·(1+1e−9)`, so float
+    * rounding can never drop a true neighbor the done test trusts), ranked
+    * 1..k, plus `__done`: the query holds k of them. Each `remaining` query
+    * also contributes one SENTINEL row (null point columns, null `dist_m`)
+    * that sorts after every candidate, so a query with fewer than k in-cap
+    * candidates, or one never probed for a null or NaN coordinate, keeps
+    * its row at rank 1 and is undecided (`!__done`). Observes into `counts`
+    * the undecided queries with finite coordinates and all undecided
+    * queries, as `probe` and `tail`; the metrics arrive with the first
+    * job run on the result itself. */
+  private[graft] def knnRound(
+      remaining: DataFrame, qidCol: String, qLng: String, qLat: String,
+      points: DataFrame, pLng: String, pLat: String,
+      k: Int, radiusM: Double, minLevel: Int, maxLevel: Int, counts: Observation): DataFrame = {
+    val coordsOk = finite(qLng) && finite(qLat)
+    val inCap = capCandidates(remaining.where(coordsOk), qLng, qLat,
+        points, pLng, pLat, radiusM, minLevel, maxLevel)
+      .where(col("dist_m") <= radiusM * (1.0 - 1e-9))
+    val undecided = !col("__done") && col("rank") === 1
+    // the done test is a window aggregate over the same qid partition as
+    // the ranking, so it costs no extra exchange
+    inCap.unionByName(remaining, allowMissingColumns = true)
+      .withColumn("rank", row_number().over(nearestFirst(qidCol, pLng, pLat)))
+      .where(col("rank") <= k)
+      .withColumn("__done", count(col("dist_m")).over(Window.partitionBy(col(qidCol))) === k)
+      .observe(counts, count(when(undecided && coordsOk, 1)).as("probe"), count(when(undecided, 1)).as("tail"))
+  }
+
+  /** The kNN ranking order: nearest first, ties broken by (lng, lat), and
+    * a round's null-distance sentinel after every point. */
+  private def nearestFirst(qidCol: String, pLng: String, pLat: String) =
+    Window.partitionBy(col(qidCol)).orderBy(col("dist_m").asc_nulls_last, col(pLng), col(pLat))
+
+  private def finite(c: String): Column = col(c).isNotNull && !isnan(col(c).cast("double"))
 
   /** Persist a polygon set's JOIN INDEX — cover cells + packed geometries —
     * so repeated point batches join against static boundaries (admin areas,

@@ -17,6 +17,11 @@ object MicroBench {
       graft.geo.algo.GeoAlgo.tileKeyPacked((id % 36000) / 100.0 - 180.0, (id % 16800) / 100.0 - 84.0, 12))
     time("minhash128", 20000)(id =>
       graft.ops.TextKernels.minhash("the quick brown fox " * 20 + id, 128, 5).length.toLong)
+    val doc = "the quick brown fox jumps over the lazy dog " * 10 // ~450 chars
+    time("simhash64", 50000)(id => graft.ops.TextKernels.simhash(doc + id, 5))
+    time("winnow", 50000)(id => graft.ops.TextKernels.winnow(doc + id, 8, 4).length.toLong)
+    time("bpe_count", 50000)(id => graft.ops.TextKernels.tokenCountBpe(doc + id).toLong)
+    time("langid", 50000)(id => graft.ops.TextKernels.langId(doc + id).length.toLong)
     val pointJson = """{"type":"Point","coordinates":[125.6,10.1]}"""
     time("parse_point", 500000)(id =>
       graft.geo.json.GeoJsonCodec.parse(pointJson).toOption.get.bbox.size.toLong + id)

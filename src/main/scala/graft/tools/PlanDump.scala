@@ -192,20 +192,30 @@ object PlanDump {
       graft.ops.Dedup.contaminationPairs(corpus, "doc_id", "text", bench, "bench_id", "btext")
     }
 
+    val capQs = spark.range(64).select(col("id").as("qid"),
+      (pmod(col("id") * 37, lit(360)) - 180.0).as("qlng"),
+      (pmod(col("id") * 23, lit(160)) - 80.0).as("qlat"))
+    val capPts = spark.range(4096).select(col("id").as("pid"),
+      (pmod(col("id") * 7919, lit(36000)) / 100.0 - 180.0).as("lng"),
+      (pmod(col("id") * 104729, lit(16800)) / 100.0 - 84.0).as("lat"))
+
     dump("Within-distance join (single-level metric-cap covers, single equi-join)",
       "Query caps explode to their few S2 cells at one level chosen from the " +
         "radius, each point keys its one cell at that level in the join " +
         "condition: every true pair meets on exactly ONE hashed int64 cell " +
         "key, one hash join, exact haversine refine — no radius loop, no " +
         "window, no dedup.") {
-      val qs = spark.range(64).select(col("id").as("qid"),
-        (pmod(col("id") * 37, lit(360)) - 180.0).as("qlng"),
-        (pmod(col("id") * 23, lit(160)) - 80.0).as("qlat"))
-      val pts = spark.range(4096).select(col("id").as("pid"),
-        (pmod(col("id") * 7919, lit(36000)) / 100.0 - 180.0).as("lng"),
-        (pmod(col("id") * 104729, lit(16800)) / 100.0 - 84.0).as("lat"))
-      graft.geo.join.SpatialJoins.distanceJoin(qs, "qlng", "qlat",
-        pts, "lng", "lat", maxDistM = 250000.0)
+      graft.geo.join.SpatialJoins.distanceJoin(capQs, "qlng", "qlat",
+        capPts, "lng", "lat", maxDistM = 250000.0)
+    }
+
+    dump("kNN round (in-cap filter below the window, sentinel rows, one checkpoint)",
+      "One knnJoinS2 round (SpatialJoins.knnRound): candidates are cut to the cap below the " +
+        "window, and each query unions in one sentinel row (null point columns and dist_m, " +
+        "sorted last), so an undecided query keeps a row with no anti join. CollectMetrics " +
+        "observes the undecided counts; the loop's eager localCheckpoint is the round's one action.") {
+      graft.geo.join.SpatialJoins.knnRound(capQs, "qid", "qlng", "qlat", capPts, "lng", "lat",
+        k = 8, radiusM = 500000.0, minLevel = 4, maxLevel = 10, org.apache.spark.sql.Observation("knn_round"))
     }
 
     dump("AS-OF join (union + running-last, one key-keyed window)",

@@ -174,7 +174,73 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(callerAfter == "knn spec caller")
     assert(n == 40L * 5)
     assert(roundLabels(jobs) == Set("knnJoin round 1"), s"jobs: $jobs")
-    assert(jobs.size <= 7, s"${jobs.size} jobs: $jobs")
+    assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
+  }
+
+  test("kNN: a query with no candidate in round 1 certifies in a later round through its sentinel") {
+    val pts = points(2000).withColumnRenamed("id", "pid").cache() // lng 99..103, lat -1..3
+    // query 2 is about 220 km east of every point: a 1 km cap holds nothing
+    // for it until round 5 (256 km)
+    val qs = Seq((1L, 100.5, 0.5), (2L, 105.0, 1.0)).toDF("qid", "qlng", "qlat")
+    val k = 3
+    val (fast, jobs) = withJobs(SpatialJoins.knnJoinS2(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k,
+        initialRadiusM = 1000.0, maxRounds = 8)
+      .select("qid", "pid", "rank").as[(Long, Long, Int)].collect().toSet)
+    val w = Window.partitionBy($"qid").orderBy($"dist_m", $"lng", $"lat")
+    val brute = qs.crossJoin(pts)
+      .withColumn("dist_m", haversine($"qlng", $"qlat", $"lng", $"lat"))
+      .withColumn("rank", row_number().over(w)).where($"rank" <= k)
+      .select("qid", "pid", "rank").as[(Long, Long, Int)].collect().toSet
+    assert(fast == brute && fast.size == 2 * k)
+    // the rounds certified both queries before maxRounds, so no tail ran
+    val rounds = roundLabels(jobs)
+    assert(rounds == (1 to rounds.size).map(i => s"knnJoin round $i").toSet, s"jobs: $jobs")
+    assert(rounds.size >= 5 && rounds.size < 8, s"jobs: $jobs")
+  }
+
+  test("kNN: points tied at the k-th distance inside and outside the cap edge equal brute force") {
+    // query 1's 4 points tie at about 1112 m, inside the 1115 m first cap,
+    // and k = 3 cuts the tie; query 2 holds 2 points there and 4 more tied
+    // at about 1123 m, just outside the first cap, and k = 3 cuts those
+    val ring = Seq((0.01, 0.0), (-0.01, 0.0), (0.0, 0.01), (0.0, -0.01))
+    val outer = ring.map { case (x, y) => (x * 1.01, y * 1.01) }
+    val pts = (ring ++ ring.take(2).map { case (x, y) => (10.0 + x, y) } ++
+        outer.map { case (x, y) => (10.0 + x, y) })
+      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+      .toDF("pid", "lng", "lat")
+    val qs = Seq((1L, 0.0, 0.0), (2L, 10.0, 0.0)).toDF("qid", "qlng", "qlat")
+    val k = 3
+    val (fast, jobs) = withJobs(SpatialJoins.knnJoinS2(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k,
+        initialRadiusM = 1115.0, maxRounds = 3)
+      .select("qid", "pid", "rank").as[(Long, Long, Int)].collect().toSet)
+    val w = Window.partitionBy($"qid").orderBy($"dist_m", $"lng", $"lat")
+    val brute = qs.crossJoin(pts)
+      .withColumn("dist_m", haversine($"qlng", $"qlat", $"lng", $"lat"))
+      .withColumn("rank", row_number().over(w)).where($"rank" <= k)
+      .select("qid", "pid", "rank").as[(Long, Long, Int)].collect().toSet
+    assert(fast == brute && fast.size == 2 * k)
+    assert(roundLabels(jobs) == Set("knnJoin round 1", "knnJoin round 2"), s"jobs: $jobs")
+  }
+
+  test("kNN: an error on the point side fails the call promptly, never waiting on the round's counts") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val pts = points(500).withColumnRenamed("id", "pid")
+      .withColumn("lng", when($"pid" === 7, raise_error(lit("knn spec: bad point"))).otherwise($"lng"))
+    val qs = Seq((1L, 100.5, 0.5), (2L, 101.5, 1.5)).toDF("qid", "qlng", "qlat")
+    val call = Future(SpatialJoins.knnJoinS2(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k = 3)
+      .count())(scala.concurrent.ExecutionContext.global)
+    val e = intercept[Exception](Await.result(call, 120.seconds))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(chain.exists(m => m != null && m.contains("knn spec: bad point")), chain.mkString("\n"))
+  }
+
+  test("kNN rejects query and point sides that share a column name, and names it") {
+    val pts = points(100).withColumnRenamed("id", "pid").withColumn("tag", lit("p"))
+    val qs = Seq((1L, 100.5, 0.5, "q")).toDF("qid", "qlng", "qlat", "TAG")
+    val e = intercept[IllegalArgumentException](
+      SpatialJoins.knnJoin(qs, "qid", "qlng", "qlat", pts, "lng", "lat", k = 2, res = 6))
+    assert(e.getMessage.contains("TAG"), e.getMessage)
   }
 
   test("hex kNN auto-routes polar queries through S2 and equals brute force") {
